@@ -1,8 +1,7 @@
 package graft.api
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
 
 import graft.operators.{Dedup, Merge, Ordinals}
 import graft.operators.Merge.{DuplicateMode, ImportMode, Key}
@@ -85,26 +84,6 @@ object Importer {
                           createdIndex: Option[String],
                           dataAmount: Long = 0L, durationMs: Long = 0L,
                           itemsPerSecond: Double = 0.0)
-
-  /** Map + transform the raw source through the mapping pipeline. */
-  def transformSource(source: DataFrame, targetSchema: StructType,
-                      cfg: ImportConfig): DataFrame = {
-    val trimmed = if (cfg.trimValues)
-      source.select(source.columns.map(c => trim(col(s"`$c`")).as(c)).toIndexedSeq: _*)
-    else source
-    val mappings = cfg.mapping match {
-      case Some(s) => Mapping.parseMappingString(s)
-      case None => Mapping.autoMap(targetSchema.fieldNames.toIndexedSeq,
-        trimmed.columns.toIndexedSeq)
-    }
-    val cols: Seq[Column] = mappings.flatMap { m =>
-      targetSchema.fields.find(_.name.equalsIgnoreCase(m.dbColumn))
-        .map(f => Mapping.compile(m, f, cfg.importTz, cfg.dbTz,
-          cfg.dateFormat, cfg.dateTimeFormat))
-    }
-    require(cols.nonEmpty, "mapping resolved no columns")
-    trimmed.select(cols: _*)
-  }
 
   /** Spark-evaluable additional insert/update values on the merge path:
     * insert expressions apply to rows the merge INSERTED (key absent
@@ -195,8 +174,8 @@ object Importer {
       val mappings = cfg.mapping.map(Mapping.parseMappingString).getOrElse(
         Mapping.autoMap(targetSchema.fieldNames.toIndexedSeq, trimmed.columns.toIndexedSeq))
       // ALL resolved mappings project (a `col=` mapping with no data
-      // column becomes an explicit null, exactly like transformSource
-      // — dropping it would silently change update semantics)
+      // column becomes an explicit null — dropping it would silently
+      // change update semantics)
       val resolved = mappings.flatMap(m =>
         targetSchema.fields.find(_.name.equalsIgnoreCase(m.dbColumn)).map(f => (m, f)))
       require(resolved.nonEmpty, "mapping resolved no columns")

@@ -56,75 +56,29 @@ object Boruvka {
         .filter(col("la") =!= col("lb"))
       // each touched component's cheapest outgoing edge; both
       // orientations compete, ties break on (w, a, b) inside the
-      // lexicographic struct-min. Kept PER COMPONENT (not collapsed to
-      // the distinct edge set): the pick column IS the merge structure
-      // the pointer-jump below walks.
-      val picks = el.select(col("la").as("comp"), col("w"), col("a"),
+      // lexicographic struct-min
+      val chosen = el.select(col("la").as("comp"), col("w"), col("a"),
           col("b"), col("la"), col("lb"))
         .unionAll(el.select(col("lb").as("comp"), col("w"), col("a"),
           col("b"), col("la"), col("lb")))
         .groupBy(col("comp"))
         .agg(min(struct(col("w"), col("a"), col("b"), col("la"),
           col("lb"))).as("pick"))
-        .select(col("comp"), col("pick.w").as("w"), col("pick.a").as("a"),
+        .select(col("pick.w").as("w"), col("pick.a").as("a"),
           col("pick.b").as("b"), col("pick.la").as("la"),
           col("pick.lb").as("lb"))
-        .localCheckpoint(true) // read 3×: stats, ptr, 2-cycle break
-      // both endpoints picking the same edge = one forest edge
-      val Seq((nAdded, wAdded)) = picks
-        .select(col("w"), col("a"), col("b")).distinct()
+        .distinct() // both endpoints picking the same edge = one edge
+        .localCheckpoint(true)
+      val Seq((nAdded, wAdded)) = chosen
         .agg(count(lit(1)), coalesce(sum(col("w")), lit(0L)))
         .as[(Long, Long)].collect().toSeq
       if (nAdded > 0) {
-        // merge the chosen-edge component graph by POINTER JUMPING on
-        // the pick digraph instead of a generic ConnectedComponents
-        // call (r14 verdict task: the inner large-star/small-star loop
-        // scheduled ~8 stage-jobs per iteration per round plus
-        // convergence collects — the dominant q262 cost at bench
-        // scale, §2.2 fewer scheduler rounds). Structure exploited:
-        // ptr(c) = the other endpoint of c's pick has out-degree
-        // exactly 1, and every cycle has length 2 — following picks,
-        // edge keys are non-increasing in the (w, a, b, la, lb) total
-        // order (c's pick is minimal over edges incident to c, and
-        // ptr(c)'s incident set contains that edge), so a cycle's keys
-        // are all equal = all the SAME edge = its two endpoints. The
-        // 2-cycle minimum is the tree root; pointer DOUBLING reaches
-        // it in ceil(log2(height)) compositions with height ≤ nAdded
-        // — a bound known from the collect above, so NO per-iteration
-        // convergence probe is scheduled (the win over the CC loop).
-        val ptr = picks.select(col("comp").as("x"),
-          when(col("la") === col("comp"), col("lb"))
-            .otherwise(col("la")).as("p"))
-        var par = ptr.as("f").join(ptr.as("g"), col("f.p") === col("g.x"))
-          .select(col("f.x").as("x"),
-            when(col("g.p") === col("f.x"),
-              least(col("f.x"), col("f.p")))
-              .otherwise(col("f.p")).as("p"))
-          .localCheckpoint(true)
-        val steps = (64 - java.lang.Long.numberOfLeadingZeros(nAdded))
-          .max(1) // ceil(log2(nAdded + 1))
-        var done = 0
-        while (done < steps) {
-          // batch 3 lazy squarings per checkpoint: the plan tree holds
-          // 2³ = 8 references to the checkpointed scan — cheap — while
-          // the scheduled-job count drops 3×
-          val batch = math.min(3, steps - done)
-          var q = par
-          for (_ <- 1 to batch)
-            q = q.as("f").join(q.as("g"), col("f.p") === col("g.x"))
-              .select(col("f.x").as("x"), col("g.p").as("p"))
-          par = q.localCheckpoint(true)
-          done += batch
-        }
-        // component label = min old label in each root group — exactly
-        // ConnectedComponents.labels(chosen) (the root group IS the
-        // chosen-edge connected component; domain = its endpoints)
-        val newLab = par.join(
-            par.groupBy(col("p")).agg(min(col("x")).as("cluster")),
-            Seq("p"))
-          .select(col("x").as("lab"), col("cluster"))
+        // merge: min reachable old label over the chosen-edge
+        // component graph (≤ 1 edge per component — shrinks fast)
+        val newLab = ConnectedComponents.labels(chosen, "la", "lb")
         lab = lab
-          .join(newLab, Seq("lab"), "left")
+          .join(newLab.select(col("id").as("lab"), col("cluster")),
+            Seq("lab"), "left")
           .select(col("node"), coalesce(col("cluster"), col("lab")).as("lab"))
           .localCheckpoint(true)
       }

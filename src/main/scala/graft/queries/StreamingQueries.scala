@@ -39,8 +39,8 @@ private[graft] trait StreamingQueries { this: SparkEntry.type =>
     * Null months are excluded, exactly like the old `=== lit(m)`
     * filter (null never equals).
     */
-  private def stageMonthly(df: DataFrame, monthExpr: Column,
-                           dir: java.nio.file.Path): Unit = {
+  private[graft] def stageMonthly(df: DataFrame, monthExpr: Column,
+                                  dir: java.nio.file.Path): Unit = {
     import scala.jdk.CollectionConverters._
     df.filter(monthExpr.isNotNull)
       .withColumn("__stage_m", monthExpr)
@@ -80,35 +80,21 @@ private[graft] trait StreamingQueries { this: SparkEntry.type =>
     * doubles (FP sum order differs between engines).
     */
   def q207StreamWindows(s: SparkSession, d: String): DataFrame =
-    // state partitions sized to the drain's keyed-state volume, not
-    // host cores (see withStatePartitions — §1-measured 80-90 s of
-    // per-batch state-store bookkeeping at the CPU-count default)
-    streaming.StreamingImport.withStatePartitions(s) {
-    streaming.StreamingImport.configureStateStore(s) // GRAFT_STREAM_STATE=rocksdb opt-in
-    val tmp = java.nio.file.Files.createTempDirectory("graft-q207-")
-    val src = tmp.resolve("src").toString
-    events(s, d)
-      .select(timestamp_micros(expr("ts DIV 1000")).as("ts_utc"),
-        col("event_type"),
-        col("value").cast("decimal(18,6)").as("value"))
-      .repartition(8).write.mode("overwrite").parquet(src)
-    val stream = s.readStream.schema(s.read.parquet(src).schema)
-      .option("maxFilesPerTrigger", "2").parquet(src)
-    val agg = streaming.StreamingImport.windowedEventStats(
-      stream, "ts_utc", "1 hour", "10 minutes", Seq("event_type"))
-    // unique sink/checkpoint per invocation: Bench's min-of-N protocol
-    // reruns every query in one session
-    val sink = s"q207_sink_${System.nanoTime()}"
-    val q = agg.writeStream.outputMode("complete")
-      .format("memory").queryName(sink)
-      .option("checkpointLocation", tmp.resolve("ckpt").toString)
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    s.table(sink)
-      .select(col("window_start"), col("event_type"), col("n"),
+    streaming.StreamingImport.drain(s, "q207") { tmp =>
+      val src = tmp.resolve("src").toString
+      events(s, d)
+        .select(timestamp_micros(expr("ts DIV 1000")).as("ts_utc"),
+          col("event_type"),
+          col("value").cast("decimal(18,6)").as("value"))
+        .repartition(8).write.mode("overwrite").parquet(src)
+      val stream = s.readStream.schema(s.read.parquet(src).schema)
+        .option("maxFilesPerTrigger", "2").parquet(src)
+      streaming.StreamingImport.windowedEventStats(
+          stream, "ts_utc", "1 hour", "10 minutes", Seq("event_type"))
+        .writeStream.outputMode("complete")
+    }.select(col("window_start"), col("event_type"), col("n"),
         col("sum_value").cast("double").as("sum_value"))
       .orderBy(col("window_start"), col("event_type"))
-  }
 
   // ---------------------------------------------------------------- q210
   /** Streaming cross-batch keyed dedup drained through the REAL
@@ -122,31 +108,20 @@ private[graft] trait StreamingQueries { this: SparkEntry.type =>
     * no key lost or invented across micro-batches.
     */
   def q210StreamDedup(s: SparkSession, d: String): DataFrame =
-    // state partitions sized to the drain's keyed-state volume, not
-    // host cores (see withStatePartitions — §1-measured 80-90 s of
-    // per-batch state-store bookkeeping at the CPU-count default)
-    streaming.StreamingImport.withStatePartitions(s) {
-    streaming.StreamingImport.configureStateStore(s) // GRAFT_STREAM_STATE=rocksdb opt-in
-    val tmp = java.nio.file.Files.createTempDirectory("graft-q210-")
-    val src = tmp.resolve("src").toString
-    events(s, d).select(col("user_id"), col("event_id"))
-      .repartition(8).write.mode("overwrite").parquet(src)
-    import s.implicits._
-    val stream = s.readStream.schema(s.read.parquet(src).schema)
-      .option("maxFilesPerTrigger", "2").parquet(src)
-      .select(col("user_id").as("_1"), col("event_id").as("_2"))
-      .as[(Long, Long)]
-    val dedup = streaming.StreamingImport
-      .dedupStream[Long, (Long, Long)](stream, _._1)
-      .toDF("user_id", "event_id")
-    val sink = s"q210_sink_${System.nanoTime()}"
-    val q = dedup.writeStream.outputMode("append")
-      .format("memory").queryName(sink)
-      .option("checkpointLocation", tmp.resolve("ckpt").toString)
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    s.table(sink).select(col("user_id")).orderBy(col("user_id"))
-  }
+    streaming.StreamingImport.drain(s, "q210") { tmp =>
+      val src = tmp.resolve("src").toString
+      events(s, d).select(col("user_id"), col("event_id"))
+        .repartition(8).write.mode("overwrite").parquet(src)
+      import s.implicits._
+      val stream = s.readStream.schema(s.read.parquet(src).schema)
+        .option("maxFilesPerTrigger", "2").parquet(src)
+        .select(col("user_id").as("_1"), col("event_id").as("_2"))
+        .as[(Long, Long)]
+      streaming.StreamingImport
+        .dedupStream[Long, (Long, Long)](stream, _._1)
+        .toDF("user_id", "event_id")
+        .writeStream.outputMode("append")
+    }.select(col("user_id")).orderBy(col("user_id"))
 
   // ---------------------------------------------------------------- q211
   /** Streaming SESSION windows drained through the real engine — the
@@ -158,39 +133,27 @@ private[graft] trait StreamingQueries { this: SparkEntry.type =>
     * for the same end-of-stream reason as q207.
     */
   def q211StreamSessions(s: SparkSession, d: String): DataFrame =
-    // state partitions sized to the drain's keyed-state volume, not
-    // host cores (see withStatePartitions — §1-measured 80-90 s of
-    // per-batch state-store bookkeeping at the CPU-count default)
-    streaming.StreamingImport.withStatePartitions(s) {
-    streaming.StreamingImport.configureStateStore(s) // GRAFT_STREAM_STATE=rocksdb opt-in
-    val tmp = java.nio.file.Files.createTempDirectory("graft-q211-")
-    val src = tmp.resolve("src").toString
-    events(s, d)
-      .select(timestamp_micros(expr("ts DIV 1000")).as("ts_utc"),
-        col("user_id"),
-        col("value").cast("decimal(18,6)").as("value"))
-      .repartition(8).write.mode("overwrite").parquet(src)
-    val stream = s.readStream.schema(s.read.parquet(src).schema)
-      .option("maxFilesPerTrigger", "2").parquet(src)
-    // session windows filter watermark-late input even in complete
-    // mode (unlike plain windowed aggs), and a parquet REPLAY arrives
-    // in file order, not time order — the watermark must exceed the
-    // replay's max disorder, which for a historical table is its full
-    // span. (That is the documented operator contract, not a dodge:
-    // q205 is the audit that SIZES this number for live streams.)
-    val agg = streaming.StreamingImport.sessionEventStats(
-      stream, "ts_utc", "30 minutes", "730 days", Seq("user_id"))
-    val sink = s"q211_sink_${System.nanoTime()}"
-    val q = agg.writeStream.outputMode("complete")
-      .format("memory").queryName(sink)
-      .option("checkpointLocation", tmp.resolve("ckpt").toString)
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    s.table(sink)
-      .select(col("session_start"), col("user_id"), col("n"),
+    streaming.StreamingImport.drain(s, "q211") { tmp =>
+      val src = tmp.resolve("src").toString
+      events(s, d)
+        .select(timestamp_micros(expr("ts DIV 1000")).as("ts_utc"),
+          col("user_id"),
+          col("value").cast("decimal(18,6)").as("value"))
+        .repartition(8).write.mode("overwrite").parquet(src)
+      val stream = s.readStream.schema(s.read.parquet(src).schema)
+        .option("maxFilesPerTrigger", "2").parquet(src)
+      // session windows filter watermark-late input even in complete
+      // mode (unlike plain windowed aggs), and a parquet REPLAY arrives
+      // in file order, not time order — the watermark must exceed the
+      // replay's max disorder, which for a historical table is its full
+      // span. (That is the documented operator contract, not a dodge:
+      // q205 is the audit that SIZES this number for live streams.)
+      streaming.StreamingImport.sessionEventStats(
+          stream, "ts_utc", "30 minutes", "730 days", Seq("user_id"))
+        .writeStream.outputMode("complete")
+    }.select(col("session_start"), col("user_id"), col("n"),
         col("sum_value").cast("double").as("sum_value"))
       .orderBy(col("user_id"), col("session_start"))
-  }
 
   // ---------------------------------------------------------------- q212
   /** APPEND-mode streaming windows — the third streaming engine
@@ -207,36 +170,24 @@ private[graft] trait StreamingQueries { this: SparkEntry.type =>
     * watermark crutch.
     */
   def q212StreamAppend(s: SparkSession, d: String): DataFrame =
-    // state partitions sized to the drain's keyed-state volume, not
-    // host cores (see withStatePartitions — §1-measured 80-90 s of
-    // per-batch state-store bookkeeping at the CPU-count default)
-    streaming.StreamingImport.withStatePartitions(s) {
-    streaming.StreamingImport.configureStateStore(s) // GRAFT_STREAM_STATE=rocksdb opt-in
-    val tmp = java.nio.file.Files.createTempDirectory("graft-q212-")
-    val src = tmp.resolve("src")
-    java.nio.file.Files.createDirectories(src)
-    val ev = events(s, d)
-      .select(timestamp_micros(expr("ts DIV 1000")).as("ts_utc"),
-        col("event_type"),
-        col("value").cast("decimal(18,6)").as("value"))
-    stageMonthly(ev, date_trunc("month", col("ts_utc")), src)
-    val schema = s.read.parquet(src.resolve("m000").toString).schema
-    val stream = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(src.toString + "/m*")
-    val agg = streaming.StreamingImport.windowedEventStats(
-      stream, "ts_utc", "1 hour", "0 seconds", Seq("event_type"))
-    val sink = s"q212_sink_${System.nanoTime()}"
-    val q = agg.writeStream.outputMode("append")
-      .format("memory").queryName(sink)
-      .option("checkpointLocation", tmp.resolve("ckpt").toString)
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    s.table(sink)
-      .select(col("window_start"), col("event_type"), col("n"),
+    streaming.StreamingImport.drain(s, "q212") { tmp =>
+      val src = tmp.resolve("src")
+      java.nio.file.Files.createDirectories(src)
+      val ev = events(s, d)
+        .select(timestamp_micros(expr("ts DIV 1000")).as("ts_utc"),
+          col("event_type"),
+          col("value").cast("decimal(18,6)").as("value"))
+      stageMonthly(ev, date_trunc("month", col("ts_utc")), src)
+      val schema = s.read.parquet(src.resolve("m000").toString).schema
+      val stream = s.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(src.toString + "/m*")
+      streaming.StreamingImport.windowedEventStats(
+          stream, "ts_utc", "1 hour", "0 seconds", Seq("event_type"))
+        .writeStream.outputMode("append")
+    }.select(col("window_start"), col("event_type"), col("n"),
         col("sum_value").cast("double").as("sum_value"))
       .orderBy(col("window_start"), col("event_type"))
-  }
 
   // ---------------------------------------------------------------- q213
   /** STREAM-STREAM interval join drained through the real engine —
@@ -253,39 +204,28 @@ private[graft] trait StreamingQueries { this: SparkEntry.type =>
     * driver-memory-sized.
     */
   def q213StreamIntervalJoin(s: SparkSession, d: String): DataFrame =
-    // state partitions sized to the drain's keyed-state volume, not
-    // host cores (see withStatePartitions — §1-measured 80-90 s of
-    // per-batch state-store bookkeeping at the CPU-count default)
-    streaming.StreamingImport.withStatePartitions(s) {
-    streaming.StreamingImport.configureStateStore(s) // GRAFT_STREAM_STATE=rocksdb opt-in
-    val tmp = java.nio.file.Files.createTempDirectory("graft-q213-")
-    val ev = events(s, d).filter(col("user_id") < 300)
-      .withColumn("ts_utc", timestamp_micros(expr("ts DIV 1000")))
-    ev.filter(col("event_type") === "click")
-      .select(col("user_id"), col("event_id"), col("ts_utc").as("c_ts"))
-      .repartition(4).write.mode("overwrite")
-      .parquet(tmp.resolve("clicks").toString)
-    ev.filter(col("event_type") === "view")
-      .select(col("user_id").as("v_user"), col("ts_utc").as("v_ts"))
-      .repartition(4).write.mode("overwrite")
-      .parquet(tmp.resolve("views").toString)
-    def rd(name: String) = s.readStream
-      .schema(s.read.parquet(tmp.resolve(name).toString).schema)
-      .option("maxFilesPerTrigger", "2").parquet(tmp.resolve(name).toString)
-    val joined = streaming.StreamingImport.intervalJoinStreams(
-      rd("clicks"), rd("views"), "user_id", "v_user", "c_ts", "v_ts",
-      delay = "730 days", lowerBoundS = -300L, upperBoundS = 300L)
-    val sink = s"q213_sink_${System.nanoTime()}"
-    val q = joined.select(col("user_id"), col("event_id"))
-      .writeStream.outputMode("append").format("memory").queryName(sink)
-      .option("checkpointLocation", tmp.resolve("ckpt").toString)
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    s.table(sink)
-      .groupBy(col("user_id"), col("event_id"))
+    streaming.StreamingImport.drain(s, "q213") { tmp =>
+      val ev = events(s, d).filter(col("user_id") < 300)
+        .withColumn("ts_utc", timestamp_micros(expr("ts DIV 1000")))
+      ev.filter(col("event_type") === "click")
+        .select(col("user_id"), col("event_id"), col("ts_utc").as("c_ts"))
+        .repartition(4).write.mode("overwrite")
+        .parquet(tmp.resolve("clicks").toString)
+      ev.filter(col("event_type") === "view")
+        .select(col("user_id").as("v_user"), col("ts_utc").as("v_ts"))
+        .repartition(4).write.mode("overwrite")
+        .parquet(tmp.resolve("views").toString)
+      def rd(name: String) = s.readStream
+        .schema(s.read.parquet(tmp.resolve(name).toString).schema)
+        .option("maxFilesPerTrigger", "2").parquet(tmp.resolve(name).toString)
+      streaming.StreamingImport.intervalJoinStreams(
+          rd("clicks"), rd("views"), "user_id", "v_user", "c_ts", "v_ts",
+          delay = "730 days", lowerBoundS = -300L, upperBoundS = 300L)
+        .select(col("user_id"), col("event_id"))
+        .writeStream.outputMode("append")
+    }.groupBy(col("user_id"), col("event_id"))
       .agg(count(lit(1)).as("n_views_nearby"))
       .orderBy(col("event_id"))
-  }
 
   // ---------------------------------------------------------------- q311
   /** STREAM-STREAM LEFT OUTER interval join drained through the real
@@ -305,46 +245,35 @@ private[graft] trait StreamingQueries { this: SparkEntry.type =>
     * `c_ts + 300 s < min(max c_ts, max v_ts)`.
     */
   def q311StreamOuterJoin(s: SparkSession, d: String): DataFrame =
-    // state partitions sized to the drain's keyed-state volume, not
-    // host cores (see withStatePartitions — §1-measured 80-90 s of
-    // per-batch state-store bookkeeping at the CPU-count default)
-    streaming.StreamingImport.withStatePartitions(s) {
-    streaming.StreamingImport.configureStateStore(s) // GRAFT_STREAM_STATE=rocksdb opt-in
-    val tmp = java.nio.file.Files.createTempDirectory("graft-q311-")
-    val ev = events(s, d).filter(col("user_id").isNotNull &&
-        col("user_id") < 300)
-      .withColumn("ts_utc", timestamp_micros(expr("ts DIV 1000")))
-    def stage(df: DataFrame, name: String): String = {
-      val dir = tmp.resolve(name)
-      java.nio.file.Files.createDirectories(dir)
-      stageMonthly(df, date_trunc("month", col("ts_utc")), dir)
-      dir.toString
-    }
-    val clicksDir = stage(ev.filter(col("event_type") === "click")
-      .select(col("user_id"), col("event_id"), col("ts_utc")), "clicks")
-    val viewsDir = stage(ev.filter(col("event_type") === "view")
-      .select(col("user_id").as("v_user"), col("ts_utc")), "views")
-    def rd(dir: String) = s.readStream
-      .schema(s.read.parquet(dir + "/m000").schema)
-      .option("maxFilesPerTrigger", "1").parquet(dir + "/m*")
-    val joined = streaming.StreamingImport.intervalJoinStreams(
-      rd(clicksDir).withColumnRenamed("ts_utc", "c_ts"),
-      rd(viewsDir).withColumnRenamed("ts_utc", "v_ts"),
-      "user_id", "v_user", "c_ts", "v_ts",
-      delay = "0 seconds", lowerBoundS = -300L, upperBoundS = 300L,
-      joinType = "left_outer")
-    val sink = s"q311_sink_${System.nanoTime()}"
-    val q = joined.select(col("user_id"), col("event_id"), col("v_user"))
-      .writeStream.outputMode("append").format("memory").queryName(sink)
-      .option("checkpointLocation", tmp.resolve("ckpt").toString)
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    s.table(sink)
-      .groupBy(col("user_id"), col("event_id"))
+    streaming.StreamingImport.drain(s, "q311") { tmp =>
+      val ev = events(s, d).filter(col("user_id").isNotNull &&
+          col("user_id") < 300)
+        .withColumn("ts_utc", timestamp_micros(expr("ts DIV 1000")))
+      def stage(df: DataFrame, name: String): String = {
+        val dir = tmp.resolve(name)
+        java.nio.file.Files.createDirectories(dir)
+        stageMonthly(df, date_trunc("month", col("ts_utc")), dir)
+        dir.toString
+      }
+      val clicksDir = stage(ev.filter(col("event_type") === "click")
+        .select(col("user_id"), col("event_id"), col("ts_utc")), "clicks")
+      val viewsDir = stage(ev.filter(col("event_type") === "view")
+        .select(col("user_id").as("v_user"), col("ts_utc")), "views")
+      def rd(dir: String) = s.readStream
+        .schema(s.read.parquet(dir + "/m000").schema)
+        .option("maxFilesPerTrigger", "1").parquet(dir + "/m*")
+      streaming.StreamingImport.intervalJoinStreams(
+          rd(clicksDir).withColumnRenamed("ts_utc", "c_ts"),
+          rd(viewsDir).withColumnRenamed("ts_utc", "v_ts"),
+          "user_id", "v_user", "c_ts", "v_ts",
+          delay = "0 seconds", lowerBoundS = -300L, upperBoundS = 300L,
+          joinType = "left_outer")
+        .select(col("user_id"), col("event_id"), col("v_user"))
+        .writeStream.outputMode("append")
+    }.groupBy(col("user_id"), col("event_id"))
       .agg(sum(when(col("v_user").isNotNull, 1L).otherwise(0L))
         .as("n_views_nearby"))
       .orderBy(col("event_id"))
-  }
 
   // ---------------------------------------------------------------- q214
   /** The STREAMING IMPORT flagship drained against an oracle: monthly
@@ -358,35 +287,29 @@ private[graft] trait StreamingQueries { this: SparkEntry.type =>
     * final target is every user's LATEST month row, which DuckDB
     * replays as an argmax-by-month join.
     */
-  def q214StreamUpsert(s: SparkSession, d: String): DataFrame =
-    // state partitions sized to the drain's keyed-state volume, not
-    // host cores (see withStatePartitions — §1-measured 80-90 s of
-    // per-batch state-store bookkeeping at the CPU-count default)
-    streaming.StreamingImport.withStatePartitions(s) {
-    streaming.StreamingImport.configureStateStore(s) // GRAFT_STREAM_STATE=rocksdb opt-in
-    val tmp = java.nio.file.Files.createTempDirectory("graft-q214-")
-    val src = tmp.resolve("src")
-    java.nio.file.Files.createDirectories(src)
-    val monthly = events(s, d)
-      .withColumn("m", date_trunc("month",
-        timestamp_micros(expr("ts DIV 1000"))))
-      .groupBy(col("user_id"), col("m"))
-      .agg(count(lit(1)).as("n_events"),
-        sum(col("value").cast("decimal(18,6)")).cast("double")
-          .as("sum_value"))
-    stageMonthly(monthly, col("m"), src)
-    val schema = s.read.parquet(src.resolve("m000").toString).schema
-    val stream = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(src.toString + "/m*")
-    var target = s.createDataFrame(
-      s.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    val w = streaming.StreamingImport.mergeEachBatch(stream,
-      keys = Seq("user_id"),
-      loadTarget = () => target,
-      saveTarget = merged => { target = merged.localCheckpoint(true) })
-    val q = w.option("checkpointLocation", tmp.resolve("ckpt").toString)
-      .start()
-    try q.processAllAvailable() finally q.stop()
+  def q214StreamUpsert(s: SparkSession, d: String): DataFrame = {
+    var target = s.emptyDataFrame // typed once the months are staged
+    streaming.StreamingImport.drainBatches(s, "q214") { tmp =>
+      val src = tmp.resolve("src")
+      java.nio.file.Files.createDirectories(src)
+      val monthly = events(s, d)
+        .withColumn("m", date_trunc("month",
+          timestamp_micros(expr("ts DIV 1000"))))
+        .groupBy(col("user_id"), col("m"))
+        .agg(count(lit(1)).as("n_events"),
+          sum(col("value").cast("decimal(18,6)")).cast("double")
+            .as("sum_value"))
+      stageMonthly(monthly, col("m"), src)
+      val schema = s.read.parquet(src.resolve("m000").toString).schema
+      val stream = s.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1").parquet(src.toString + "/m*")
+      target = s.createDataFrame(
+        s.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+      streaming.StreamingImport.mergeEachBatch(stream,
+        keys = Seq("user_id"),
+        loadTarget = () => target,
+        saveTarget = merged => { target = merged.localCheckpoint(true) })
+    }
     target.orderBy(col("user_id"))
   }
 
@@ -403,35 +326,24 @@ private[graft] trait StreamingQueries { this: SparkEntry.type =>
     * in plain SQL. Value sums in DECIMAL (exact, order-free).
     */
   def q235StreamStaticJoin(s: SparkSession, d: String): DataFrame =
-    // state partitions sized to the drain's keyed-state volume, not
-    // host cores (see withStatePartitions — §1-measured 80-90 s of
-    // per-batch state-store bookkeeping at the CPU-count default)
-    streaming.StreamingImport.withStatePartitions(s) {
-    streaming.StreamingImport.configureStateStore(s) // GRAFT_STREAM_STATE=rocksdb opt-in
-    val tmp = java.nio.file.Files.createTempDirectory("graft-q235-")
-    val src = tmp.resolve("src").toString
-    events(s, d).filter(col("user_id").isNotNull)
-      .select(col("user_id"), col("event_type"),
-        col("value").cast("decimal(18,6)").as("value"))
-      .withColumn("nk", pmod(col("user_id"), lit(25L)))
-      .repartition(8).write.mode("overwrite").parquet(src)
-    val stream = s.readStream.schema(s.read.parquet(src).schema)
-      .option("maxFilesPerTrigger", "2").parquet(src)
-    val dim = nation(s, d).select(col("n_nationkey"), col("n_name"))
-    val joined = streaming.StreamingImport.enrichWithStatic(
-      stream, dim, col("nk") === col("n_nationkey"))
-    val sink = s"q235_sink_${System.nanoTime()}"
-    val q = joined.select(col("n_name"), col("event_type"), col("value"))
-      .writeStream.outputMode("append").format("memory").queryName(sink)
-      .option("checkpointLocation", tmp.resolve("ckpt").toString)
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    s.table(sink)
-      .groupBy(col("n_name"), col("event_type"))
+    streaming.StreamingImport.drain(s, "q235") { tmp =>
+      val src = tmp.resolve("src").toString
+      events(s, d).filter(col("user_id").isNotNull)
+        .select(col("user_id"), col("event_type"),
+          col("value").cast("decimal(18,6)").as("value"))
+        .withColumn("nk", pmod(col("user_id"), lit(25L)))
+        .repartition(8).write.mode("overwrite").parquet(src)
+      val stream = s.readStream.schema(s.read.parquet(src).schema)
+        .option("maxFilesPerTrigger", "2").parquet(src)
+      val dim = nation(s, d).select(col("n_nationkey"), col("n_name"))
+      streaming.StreamingImport.enrichWithStatic(
+          stream, dim, col("nk") === col("n_nationkey"))
+        .select(col("n_name"), col("event_type"), col("value"))
+        .writeStream.outputMode("append")
+    }.groupBy(col("n_name"), col("event_type"))
       .agg(count(lit(1)).as("n"),
         sum(col("value")).cast("double").as("sum_value"))
       .orderBy(col("n_name"), col("event_type"))
-  }
 
   // ---------------------------------------------------------------- q251
   /** Streaming FUNNEL drained through the real engine — the TENTH
@@ -449,36 +361,25 @@ private[graft] trait StreamingQueries { this: SparkEntry.type =>
     * timestamps, so the in-batch sort is total.
     */
   def q251StreamFunnel(s: SparkSession, d: String): DataFrame =
-    // state partitions sized to the drain's keyed-state volume, not
-    // host cores (see withStatePartitions — §1-measured 80-90 s of
-    // per-batch state-store bookkeeping at the CPU-count default)
-    streaming.StreamingImport.withStatePartitions(s) {
-    streaming.StreamingImport.configureStateStore(s) // GRAFT_STREAM_STATE=rocksdb opt-in
-    val tmp = java.nio.file.Files.createTempDirectory("graft-q251-")
-    val src = tmp.resolve("src").toString
-    events(s, d).filter(col("user_id").isNotNull)
-      .select(col("user_id"), col("event_type"),
-        expr("ts DIV 1000").as("us"))
-      .repartition(8).write.mode("overwrite").parquet(src)
-    import s.implicits._
-    val stream = s.readStream.schema(s.read.parquet(src).schema)
-      .parquet(src)
-      .select(col("user_id").as("_1"), col("event_type").as("_2"),
-        col("us").as("_3"))
-      .as[(Long, String, Long)]
-    val fn = streaming.StreamingImport.funnelStream(stream,
-        Seq("signup", "click", "purchase"))
-      .toDF("user_id", "stage_idx", "us")
-    val sink = s"q251_sink_${System.nanoTime()}"
-    val q = fn.writeStream.outputMode("append").format("memory")
-      .queryName(sink)
-      .option("checkpointLocation", tmp.resolve("ckpt").toString)
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    s.table(sink).select(col("user_id"),
+    streaming.StreamingImport.drain(s, "q251") { tmp =>
+      val src = tmp.resolve("src").toString
+      events(s, d).filter(col("user_id").isNotNull)
+        .select(col("user_id"), col("event_type"),
+          expr("ts DIV 1000").as("us"))
+        .repartition(8).write.mode("overwrite").parquet(src)
+      import s.implicits._
+      val stream = s.readStream.schema(s.read.parquet(src).schema)
+        .parquet(src)
+        .select(col("user_id").as("_1"), col("event_type").as("_2"),
+          col("us").as("_3"))
+        .as[(Long, String, Long)]
+      streaming.StreamingImport.funnelStream(stream,
+          Seq("signup", "click", "purchase"))
+        .toDF("user_id", "stage_idx", "us")
+        .writeStream.outputMode("append")
+    }.select(col("user_id"),
         col("stage_idx").cast("long").as("stage_idx"), col("us"))
       .orderBy(col("user_id"), col("stage_idx"))
-  }
 
   // ---------------------------------------------------------------- q261
   /** Per-user running totals drained through the Spark 4
@@ -491,21 +392,10 @@ private[graft] trait StreamingQueries { this: SparkEntry.type =>
     * and integer cent-sums are associative+commutative the fold is
     * batch-split-invariant, and Update-mode emissions are monotone,
     * so the final per-user row is the per-user `max` over the sink —
-    * which must equal the plain batch group-by the oracle runs. The
-    * session's prior state-store provider is restored afterwards so
-    * the other drains keep honoring `GRAFT_STREAM_STATE`.
+    * which must equal the plain batch group-by the oracle runs.
     */
   def q261StreamRunningTotals(s: SparkSession, d: String): DataFrame =
-    // state partitions sized to the drain's keyed-state volume, not
-    // host cores (see withStatePartitions — §1-measured 80-90 s of
-    // per-batch state-store bookkeeping at the CPU-count default)
-    streaming.StreamingImport.withStatePartitions(s) {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prior = s.conf.getOption(key)
-    s.conf.set(key, "org.apache.spark.sql.execution.streaming.state." +
-      "RocksDBStateStoreProvider")
-    try {
-      val tmp = java.nio.file.Files.createTempDirectory("graft-q261-")
+    streaming.StreamingImport.drain(s, "q261", rocksDb = true) { tmp =>
       val src = tmp.resolve("src").toString
       events(s, d)
         .filter(col("user_id").isNotNull && col("value").isNotNull)
@@ -518,31 +408,19 @@ private[graft] trait StreamingQueries { this: SparkEntry.type =>
         .option("maxFilesPerTrigger", "2").parquet(src)
         .select(col("user_id").as("_1"), col("cents").as("_2"))
         .as[(Long, Long)]
-      val out = streaming.StreamingImport.runningTotalsStream(stream)
+      streaming.StreamingImport.runningTotalsStream(stream)
         .toDF("user_id", "n_events", "sum_cents")
-      val sink = s"q261_sink_${System.nanoTime()}"
-      val q = out.writeStream.outputMode("update").format("memory")
-        .queryName(sink)
-        .option("checkpointLocation", tmp.resolve("ckpt").toString)
-        .start()
-      try q.processAllAvailable() finally q.stop()
+        .writeStream.outputMode("update")
+    }.groupBy(col("user_id"))
       // final state = the emission with the highest event count:
       // n_events strictly increases per emission for a user, so the
       // lexicographic struct max picks ONE emission's (n, sum) pair —
       // correct even if amounts were negative (sum_cents alone is
       // monotone only for non-negative values)
-      s.table(sink).groupBy(col("user_id"))
-        .agg(max(struct(col("n_events"), col("sum_cents"))).as("__m"))
-        .select(col("user_id"), col("__m.n_events").as("n_events"),
-          col("__m.sum_cents").as("sum_cents"))
-        .orderBy(col("user_id"))
-    } finally {
-      prior match {
-        case Some(v) => s.conf.set(key, v)
-        case None => s.conf.unset(key)
-      }
-    }
-  }
+      .agg(max(struct(col("n_events"), col("sum_cents"))).as("__m"))
+      .select(col("user_id"), col("__m.n_events").as("n_events"),
+        col("__m.sum_cents").as("sum_cents"))
+      .orderBy(col("user_id"))
 
   private[graft] def queriesStreaming: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q261_stream_running_totals" -> (q261StreamRunningTotals _),

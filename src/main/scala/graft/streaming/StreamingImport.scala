@@ -1,8 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.nio.file.{Files, Path}
+
+import org.apache.commons.io.FileUtils
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery}
+import org.apache.spark.sql.streaming.DataStreamWriter
 import org.apache.spark.sql.types.StructType
 
 import graft.operators.Merge
@@ -32,15 +35,18 @@ object StreamingImport {
     * and the oracle drains prove result-identity under BOTH providers.
     */
   def configureStateStore(spark: SparkSession): String = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
     val want = sys.props.get("graft.stream.state")
       .orElse(sys.env.get("GRAFT_STREAM_STATE"))
     if (want.exists(_.equalsIgnoreCase("rocksdb")))
-      spark.conf.set(key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    spark.conf.get(key,
+      spark.conf.set(StateStoreKey, RocksDbProvider)
+    spark.conf.get(StateStoreKey,
       "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider")
   }
+
+  private val StateStoreKey = "spark.sql.streaming.stateStore.providerClass"
+  private val ShufflePartitionsKey = "spark.sql.shuffle.partitions"
+  private val RocksDbProvider =
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
   /** Continuous CSV-directory ingest (the directory-watch analog of
     * multi-file import).
@@ -103,36 +109,75 @@ object StreamingImport {
       .select((Seq(col("session_window.start").as("session_start")) ++
         groupCols.map(col) ++ Seq(col("n"), col("sum_value"))): _*)
 
-  /** Start `w` into an in-memory table named `name` (test/debug sink:
-    * results readable via `SELECT * FROM name`).
+  /** Shuffle partitions of every drain, which is also its STATE
+    * partition count: stateful operators fix their state-store
+    * partition count from `spark.sql.shuffle.partitions` at the query's
+    * FIRST batch, and every micro-batch then pays per-partition
+    * state-store open / commit / fsync on every stateful operator —
+    * with the session's CPU-count partitioning (32), a drain over a
+    * keyed state of a few thousand rows burned 80–90 s of task time PER
+    * BATCH on store bookkeeping (§1-measured; the join/agg work itself
+    * is milliseconds). State partitions are sized by keyed-state
+    * VOLUME, not by host cores; results are partition-count-invariant
+    * (the oracle rows hash-match at any value).
     */
-  def startMemorySink(w: DataStreamWriter[org.apache.spark.sql.Row],
-                      name: String): StreamingQuery =
-    w.format("memory").queryName(name).start()
+  private val StatePartitions = 8
 
-  /** Run `body` (a whole streaming drain: stage → start → drain →
-    * stop) with the session's shuffle-partition count set to the
-    * STATE-PARTITION budget, restoring the caller's value after.
-    *
-    * Stateful operators fix their state-store partition count from
-    * `spark.sql.shuffle.partitions` at the query's FIRST batch, and
-    * every micro-batch then pays per-partition state-store open /
-    * commit / fsync on every stateful operator — with the session's
-    * CPU-count partitioning (32), a drain over a keyed state of a few
-    * thousand rows burned 80–90 s of task time PER BATCH on store
-    * bookkeeping (§1-measured; the join/agg work itself is
-    * milliseconds). State partitions are sized by keyed-state VOLUME,
-    * not by host cores: `GRAFT_STREAM_STATE_PARTITIONS` (default 8)
-    * parameterizes it — a production stream with wide keyed state
-    * raises it; results are partition-count-invariant (the oracle
-    * rows hash-match at any value).
+  /** Bounded replay of one streaming query into a uniquely named
+    * memory sink, leaving nothing behind in the session. `build` stages
+    * its input under a fresh `graft-<tag>-` temp directory and returns
+    * the unstarted writer (output mode set, no sink); the drain starts
+    * it with a checkpoint in that directory, runs it to exhaustion
+    * (`processAllAvailable`) and stops it. Around the replay the session
+    * runs with [[StatePartitions]] shuffle partitions and the state-store
+    * provider of [[configureStateStore]] — RocksDB when `rocksDb` (the
+    * `transformWithState` API requires it) — and both confs, the sink's
+    * view and the directory are gone once the drain returns. The
+    * returned frame holds the sink's rows by reference, so it stays
+    * readable afterwards.
     */
-  def withStatePartitions[T](s: SparkSession)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = s.conf.get(key)
-    s.conf.set(key,
-      sys.env.getOrElse("GRAFT_STREAM_STATE_PARTITIONS", "8"))
-    try body finally s.conf.set(key, prev)
+  def drain(s: SparkSession, tag: String, rocksDb: Boolean = false)(
+      build: Path => DataStreamWriter[Row]): DataFrame =
+    drainScope(s, tag, rocksDb) { tmp =>
+      // unique per invocation: Bench's min-of-N protocol reruns every
+      // query in one session
+      val sink = s"${tag}_sink_${System.nanoTime()}"
+      try {
+        replay(build(tmp).format("memory").queryName(sink), tmp)
+        s.table(sink)
+      } finally s.catalog.dropTempView(sink)
+    }
+
+  /** [[drain]] for a `foreachBatch` writer, whose batches update the
+    * caller's own state instead of a sink: same conf, directory and
+    * stop discipline, nothing returned.
+    */
+  def drainBatches(s: SparkSession, tag: String)(
+      build: Path => DataStreamWriter[Row]): Unit =
+    drainScope(s, tag, rocksDb = false)(tmp => replay(build(tmp), tmp))
+
+  private def drainScope[T](s: SparkSession, tag: String, rocksDb: Boolean)(
+      body: Path => T): T = {
+    val keys = Seq(ShufflePartitionsKey, StateStoreKey)
+    val prior = keys.map(s.conf.getOption)
+    val tmp = Files.createTempDirectory(s"graft-$tag-")
+    try {
+      s.conf.set(ShufflePartitionsKey, StatePartitions.toString)
+      if (rocksDb) s.conf.set(StateStoreKey, RocksDbProvider)
+      else configureStateStore(s)
+      body(tmp)
+    } finally {
+      FileUtils.deleteQuietly(tmp.toFile)
+      keys.zip(prior).foreach {
+        case (k, Some(v)) => s.conf.set(k, v)
+        case (k, None) => s.conf.unset(k)
+      }
+    }
+  }
+
+  private def replay(w: DataStreamWriter[Row], tmp: Path): Unit = {
+    val q = w.option("checkpointLocation", tmp.resolve("ckpt").toString).start()
+    try q.processAllAvailable() finally q.stop()
   }
 
   /** Cross-batch streaming dedup via keyed state

@@ -2,12 +2,15 @@ package graft.operators
 
 import graft.{SparkEntry, SparkSpec}
 import org.apache.spark.sql.functions.col
+import org.scalatest.concurrent.{Signaler, ThreadSignaler, TimeLimits}
+import org.scalatest.time.{Seconds, Span}
 
 /** Pins [[Boruvka]] against hand graphs and [[ProductQuantization]] /
   * the q261 transformWithState drain against their invariants.
   */
-class MstPqSpec extends SparkSpec {
+class MstPqSpec extends SparkSpec with TimeLimits {
   import spark.implicits._
+  implicit val signaler: Signaler = ThreadSignaler
 
   test("Boruvka: triangle drops exactly the heaviest edge") {
     val edges = Seq((1L, 2L, 1L), (2L, 3L, 2L), (1L, 3L, 9L))
@@ -38,6 +41,25 @@ class MstPqSpec extends SparkSpec {
       .collect()
     assert(got(0).getLong(1) === 2L && got(0).getLong(3) === 2L)
     assert(got(1).getLong(1) === 0L && got(1).getLong(3) === 2L)
+  }
+
+  test("Boruvka: a long chain halves per round to one tree in bounded time") {
+    // edge i joins nodes i and i+1 and ranks by the trailing zeros of
+    // i, so round r adds exactly the edges with r-1 trailing zeros:
+    // every round merges half the components, the most rounds a chain
+    // can take, and the picks of round 1 alone number n/2
+    val logN = 12
+    val n = 1L << logN
+    val w = (1L until n).map(i =>
+      (i, java.lang.Long.numberOfTrailingZeros(i) * n + i))
+    val edges = w.map { case (i, wi) => (i, i + 1, wi) }.toDF("a", "b", "w")
+    val got = failAfter(Span(300, Seconds)) {
+      Boruvka.forestRounds(edges, "a", "b", "w", rounds = logN).collect()
+        .map(r => (r.getLong(1), r.getLong(2), r.getLong(3)))
+    }
+    assert(got.map(_._1).toSeq === (1 to logN).map(r => n >> r))
+    assert(got.map(_._2).sum === w.map(_._2).sum) // the whole chain
+    assert(got.last._3 === 1L)
   }
 
   test("PQ: codes are in range and deterministic; ADC self-rank top") {

@@ -119,6 +119,57 @@ class StreamingSpec extends SparkSpec {
     assert(all.toSeq == Seq(1 -> "a", 2 -> "b", 3 -> "c"))
   }
 
+  test("stageMonthly: one single-file directory per month, time-ordered") {
+    val dir = java.nio.file.Files.createTempDirectory("stage-monthly-")
+    try {
+      val df = Seq(Some("2024-03-05 10:00:00"), Some("2024-01-20 00:00:00"),
+          None, Some("2024-03-30 23:59:59"), Some("2024-02-01 00:00:00"))
+        .toDF("s").select(to_timestamp(col("s")).as("ts"))
+      graft.SparkEntry.stageMonthly(df, date_trunc("month", col("ts")), dir)
+      val months = dir.toFile.listFiles().filter(_.isDirectory)
+        .sortBy(_.getName).toSeq
+      // the null month has no directory
+      assert(months.map(_.getName) === Seq("m000", "m001", "m002"))
+      val files = months.map(_.listFiles().filterNot(f =>
+        f.getName.startsWith(".") || f.getName.startsWith("_")).toSeq)
+      assert(files.map(_.size) === Seq(1, 1, 1))
+      val mtimes = files.map(_.head.lastModified())
+      assert(mtimes.zip(mtimes.tail).forall { case (a, b) => a < b }, mtimes)
+      val perMonth = months.map(m => spark.read.parquet(m.getPath)
+        .select(date_format(col("ts"), "yyyy-MM")).as[String].collect().toSeq)
+      assert(perMonth === Seq(Seq("2024-01"), Seq("2024-02"),
+        Seq("2024-03", "2024-03")))
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+  }
+
+  test("drains leave no sink, query, conf or temp directory behind") {
+    val d = sf()
+    val tmpRoot = new File(System.getProperty("java.io.tmpdir"))
+    def drainDirs = tmpRoot.list().filter(_.startsWith("graft-q")).toSet
+    val keys = Seq("spark.sql.shuffle.partitions",
+      "spark.sql.streaming.stateStore.providerClass")
+    val confBefore = keys.map(spark.conf.getOption)
+    val dirsBefore = drainDirs
+    val dedups = Seq.fill(2)(graft.SparkEntry.q210StreamDedup(spark, d))
+    val totals = graft.SparkEntry.q261StreamRunningTotals(spark, d)
+    assert(spark.catalog.listTables().collect()
+      .filter(_.name.contains("_sink_")).isEmpty)
+    assert(spark.streams.active.isEmpty)
+    assert(keys.map(spark.conf.getOption) === confBefore)
+    assert((drainDirs -- dirsBefore).isEmpty)
+    // the returned frames outlive their sink view and staging directory
+    val ev = graft.Tables.events(spark, d)
+    val users = ev.select(col("user_id")).distinct().orderBy(col("user_id"))
+      .collect().toSeq
+    dedups.foreach(f => assert(f.collect().toSeq === users))
+    val sums = ev.filter(col("user_id").isNotNull && col("value").isNotNull)
+      .groupBy(col("user_id"))
+      .agg(count(lit(1)),
+        sum((col("value").cast("decimal(18,2)") * 100).cast("long")))
+      .orderBy(col("user_id")).collect().toSeq
+    assert(totals.collect().toSeq === sums)
+  }
+
   test("RocksDB state store opt-in: provider set, stateful dedup identical") {
     // default session: HDFS-backed provider (the zero-setup path)
     val before = StreamingImport.configureStateStore(spark)
