@@ -1,6 +1,51 @@
 package graft
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.SparkSession
 object Bench {
+
+  /** The one session the dev/driver mains (Bench, Verify, Profile,
+    * MakeLadderSf1) and the specs share: `local[cpus]` with one shuffle
+    * partition per core, UTC, and `events.ts` TIMESTAMP(NANOS) read as
+    * epoch-ns longs (see [[Tables.events]]).
+    */
+  def session(cpus: Int): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  def envSfDir: String =
+    sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+  def envCpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+
+  /** Comma-separated entry names (queries or artifacts), in order and
+    * with repeats. An unknown name throws: a typo that silently ran
+    * nothing would print `"value":0`, which reads as a fast success.
+    */
+  def entryNames(spec: String): Seq[String] = {
+    val known = SparkEntry.queries.keySet ++ SparkEntry.artifacts.map(_._1)
+    val names = spec.split(",").toSeq
+    val unknown = names.filterNot(known)
+    require(unknown.isEmpty, s"unknown entries: ${unknown.mkString(",")}")
+    names
+  }
+
+  /** The `SPARK_GRAFT_ONLY` filter; None selects every entry. */
+  def envOnly: Option[Set[String]] =
+    sys.env.get("SPARK_GRAFT_ONLY").map(entryNames(_).toSet)
+
+  /** Codegen, parquet footer cache and executor threads, so the first
+    * measured entry doesn't carry startup cost. */
+  def warm(spark: SparkSession, sfDir: String): Unit = {
+    spark.read.parquet(s"$sfDir/nation.parquet").count()
+    spark.range(1000000).selectExpr("sum(id)").collect()
+  }
 
   /** Reference cost of the calibration probe (median timed 5e7-row
     * range sum) on THIS box in its unloaded state — the divisor that
@@ -77,37 +122,33 @@ object Bench {
   }
 
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val only = envOnly
+    val sfDir = envSfDir
     // COLD artifact builds per bench run (r14 verdict what's-wrong #2):
     // the durable cross-JVM artifact cache is the PIPELINE contract
     // (day-2 dedup must not rebuild day-1 pairs), but inside a bench it
     // meant the artifact_* entries timed a warm parquet READ of files
     // built by an earlier run — a timed entry must do its work. Point
-    // the cache at a fresh per-run temp dir (deleted on exit) unless
-    // the caller explicitly pinned one (profiling runs set
-    // GRAFT_ARTIFACT_CACHE to keep a warm cache on purpose).
-    val freshArtifactDir: Option[java.nio.file.Path] =
-      if (sys.env.contains("GRAFT_ARTIFACT_CACHE") ||
-          sys.props.contains("graft.artifact.cache")) None
-      else {
-        val p = java.nio.file.Files
-          .createTempDirectory("graft-bench-artifacts-")
-        sys.props("graft.artifact.cache") = p.toString
-        Some(p)
+    // the cache at a fresh per-run temp dir unless the caller
+    // explicitly pinned one (profiling runs set GRAFT_ARTIFACT_CACHE to
+    // keep a warm cache on purpose). A shutdown hook deletes it on any
+    // exit: normal, an exception out of main, or a TERM from `timeout`.
+    // After a TERM, main keeps running while the hooks do (its entries
+    // fail fast once Spark's own hook stops the context) and would
+    // recreate the cache's subdirectories, so the hook lets it end first.
+    if (!sys.env.contains("GRAFT_ARTIFACT_CACHE") &&
+        !sys.props.contains("graft.artifact.cache")) {
+      val dir = java.nio.file.Files
+        .createTempDirectory("graft-bench-artifacts-").toFile
+      val mainThread = Thread.currentThread()
+      sys.addShutdownHook {
+        mainThread.join(30000)
+        FileUtils.deleteQuietly(dir)
       }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // warm the session (codegen, parquet footer cache, executor threads)
-    // so the first measured query doesn't carry startup cost
-    spark.read.parquet(s"$sfDir/nation.parquet").count()
-    spark.range(1000000).selectExpr("sum(id)").collect()
+      sys.props("graft.artifact.cache") = dir.toString
+    }
+    val spark = session(envCpus)
+    warm(spark, sfDir)
     // environment calibration: a fixed CPU-bound probe (median of 3
     // timed 5e7-row range sums across all threads) plus /proc/loadavg,
     // sampled at start AND end — byte-identical plans have shown ~1.7×
@@ -126,8 +167,6 @@ object Bench {
     }
     val loadStart = loadavg()
     val calStart = calProbe()
-    // optional comma-separated name filter for profiling single queries
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
     val failures = scala.collection.mutable.LinkedHashMap[String, String]()
     def timed(name: String)(run: => Unit): (String, Double) = {
       val t0 = System.nanoTime()
@@ -234,15 +273,6 @@ object Bench {
     scala.util.Try(java.nio.file.Files.writeString(
       java.nio.file.Paths.get(outPath), fullLine + "\n"))
     spark.stop()
-    freshArtifactDir.foreach { p =>
-      scala.util.Try { // best-effort: a leftover temp dir is harmless
-        import scala.jdk.CollectionConverters._
-        val walk = java.nio.file.Files.walk(p)
-        try walk.iterator().asScala.toSeq.sortBy(-_.getNameCount)
-          .foreach(f => java.nio.file.Files.deleteIfExists(f))
-        finally walk.close()
-      }
-    }
     // compact duplicate printed LAST — the machine-read contract line.
     // build.sbt routes forked run output straight to stdout and
     // suppresses sbt's [success] footer, so this IS the final stdout

@@ -103,7 +103,4 @@ object Transforms {
     * error (reference DbImportWorker.java:1124-1136).
     */
   def notNullStringRepair(c: Column): Column = coalesce(c, lit(""))
-
-  /** `-t`: trim all values at read (reference CsvDataProvider.java:89). */
-  def trimAll(c: Column): Column = trim(c)
 }

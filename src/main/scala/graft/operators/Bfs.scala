@@ -58,12 +58,4 @@ object Bfs {
     }
     visited
   }
-
-  /** [[reachable]] plus per-hop sizes — `(hop, n_nodes)`, the frontier
-    * growth profile.
-    */
-  def hopProfile(edges: DataFrame, srcCol: String, dstCol: String,
-                 seeds: DataFrame, maxHops: Int): DataFrame =
-    reachable(edges, srcCol, dstCol, seeds, maxHops)
-      .groupBy(col("hop")).agg(count(lit(1)).as("n_nodes"))
 }

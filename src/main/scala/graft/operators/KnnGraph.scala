@@ -139,7 +139,7 @@ object KnnGraph {
     * corpus — r = ⌈log2(n / targetBucketWidth)⌉ clamped to
     * [minBits, maxBits] — so expected bucket width, and with it
     * candidate-pair mass, stays ~targetBucketWidth·n instead of the
-    * fixed-width n²/2^r blow-up (measured via `LshBucketStats` at sf~1:
+    * fixed-width n²/2^r blow-up (measured per-band bucket widths at sf~1:
     * 157M candidate pairs for 20k vectors at the fixed 4-bit keys;
     * adaptive keys hold the pair mass ~linear in n up to the maxBits
     * cap, past which the hot-bucket diagnostic is the tripwire).

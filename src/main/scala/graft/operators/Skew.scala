@@ -36,21 +36,4 @@ object Skew {
     salted.join(explodedDim, keys :+ "__graft_salt")
       .drop("__graft_salt")
   }
-
-  /** Two-phase (salted) aggregation for low-cardinality groupings whose
-    * single-reducer finalize becomes a straggler: partial-aggregate on
-    * (keys, salt), then finalize on keys. Only algebraic aggregates
-    * compose; callers pass both phases.
-    */
-  def saltedAggregate(df: DataFrame, keys: Seq[String], saltFactor: Int,
-                      saltSource: Column,
-                      partial: Seq[Column], finalize: Seq[Column]): DataFrame = {
-    require(saltFactor >= 1, s"saltFactor must be >= 1, got $saltFactor")
-    df.withColumn("__graft_salt",
-        pmod(coalesce(saltSource, lit(0)), lit(saltFactor)).cast("int"))
-      .groupBy((keys :+ "__graft_salt").map(col): _*)
-      .agg(partial.head, partial.tail: _*)
-      .groupBy(keys.map(col): _*)
-      .agg(finalize.head, finalize.tail: _*)
-  }
 }

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Generate an sf≈1-equivalent synthetic slice for the scale ladder
@@ -42,13 +41,7 @@ object MakeLadderSf1 {
     val out = args.drop(1).headOption.getOrElse("/tmp/graft-sf1")
     val reps = args.lift(2).map(_.toInt).getOrElse(10)
     require(reps >= 2 && reps <= 64, s"reps must be in [2, 64], got $reps")
-    val spark = SparkSession.builder().master("local[16]")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Bench.session(16)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(out))
 
     // small dims are copied verbatim (Bench's warmup reads nation)

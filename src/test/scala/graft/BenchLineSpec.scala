@@ -83,4 +83,13 @@ class BenchLineSpec extends AnyFunSuite {
     assert(names.count(_.startsWith("artifact_")) === 4)
     assert(names.toSet.size === names.size)
   }
+
+  test("entry names: known queries and artifacts pass, an unknown one throws naming it") {
+    assert(Bench.entryNames("q01_scan_agg,artifact_pairs,q01_scan_agg") ===
+      Seq("q01_scan_agg", "artifact_pairs", "q01_scan_agg"))
+    val e = intercept[IllegalArgumentException](
+      Bench.entryNames("q01_scan_agg,nope"))
+    assert(e.getMessage.contains("nope"))
+    assert(!e.getMessage.contains("q01_scan_agg"))
+  }
 }
