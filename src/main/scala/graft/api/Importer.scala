@@ -3,7 +3,7 @@ package graft.api
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Dedup, Merge, Ordinals}
+import graft.operators.{Merge, Ordinals}
 import graft.operators.Merge.{DuplicateMode, ImportMode, Key}
 import graft.sink.JdbcSink
 
@@ -47,24 +47,24 @@ object Importer {
                           /** Run the merge as SQL inside the destination
                             * DB (reference strategy) instead of reading
                             * the target into Spark — for very large
-                            * remote targets. See [[graft.sink.JdbcMerge]].
+                            * remote targets; not for the UPDATE_FIRST_* and
+                            * MAKE_UNIQUE_* modes. See [[graft.sink.JdbcMerge]].
                             */
                           mergeInDb: Boolean = false,
-                          /** Divert rows whose mapped values failed to
-                            * parse (non-null source → null target) to the
-                            * error channel instead of importing nulls;
-                            * optionally re-export them as CSV
-                            * (reference erroneous-data file, §2.3).
+                          /** Re-export the rows whose mapped values failed
+                            * to parse as CSV here (reference erroneous-data
+                            * file, §2.3).
                             */
-                          errorChannel: Boolean = false,
                           errorExportPath: Option[String] = None,
                           /** Additional insert/update values: extra
                             * target columns set from SQL expressions
                             * (reference `-insvalues`/`-updvalues`,
-                            * DbImportWorker.java:939-948). Spark-evaluable
-                            * expressions apply cluster-side; DB-only
-                            * expressions (sequences) belong in
-                            * [[graft.sink.JdbcMerge]]'s generated SQL.
+                            * DbImportWorker.java:939-948) on the rows the
+                            * merge inserts / updates. Spark-evaluable
+                            * expressions apply cluster-side
+                            * ([[Merge.importMerge]]); DB-only expressions
+                            * (sequences) belong in [[graft.sink.JdbcMerge]]'s
+                            * generated SQL.
                             */
                           additionalInsertValues: Map[String, String] = Map.empty,
                           additionalUpdateValues: Map[String, String] = Map.empty,
@@ -84,54 +84,6 @@ object Importer {
                           createdIndex: Option[String],
                           dataAmount: Long = 0L, durationMs: Long = 0L,
                           itemsPerSecond: Double = 0.0)
-
-  /** Spark-evaluable additional insert/update values on the merge path:
-    * insert expressions apply to rows the merge INSERTED (key absent
-    * from the original target; all staged rows under CLEARINSERT and
-    * under sourceOnly Insert/Upsert, whose insertAll appends every
-    * staged row — those carry an explicit `__graft_stgflag` provenance
-    * column because a key join cannot tell an appended duplicate-key
-    * row from the target row it duplicates), update expressions to
-    * matched target rows — mirroring which SQL statement the reference
-    * would have routed each row through (DbImportWorker.java:939-948).
-    * UPDATE_FIRST modes must use the mergeInDb path for update values:
-    * only the generated SQL knows which single duplicate row was
-    * updated.
-    */
-  private def withAdditionalValues(merged: DataFrame, target: DataFrame,
-                                   staged: DataFrame, cfg: ImportConfig): DataFrame = {
-    if (cfg.additionalInsertValues.isEmpty && cfg.additionalUpdateValues.isEmpty)
-      return merged
-    require(cfg.additionalUpdateValues.isEmpty || !cfg.duplicateMode.updateFirst,
-      "additionalUpdateValues with an UPDATE_FIRST duplicate mode needs " +
-        "mergeInDb = true (row-precise update routing)")
-    val keys = cfg.keyColumns
-    val hasStgFlag = merged.columns.contains(StagedFlagCol)
-    val pre = target.select(keys.map(col): _*).distinct()
-      .withColumn("__graft_pre", lit(true))
-    val stg = staged.select(keys.map(col): _*).distinct()
-      .withColumn("__graft_stg", lit(true))
-    val j = merged.join(pre, keys, "left").join(stg, keys, "left")
-    val isNew =
-      if (hasStgFlag) col(StagedFlagCol)
-      else if (cfg.mode == ImportMode.ClearInsert) col("__graft_stg").isNotNull
-      else col("__graft_stg").isNotNull && col("__graft_pre").isNull
-    val doesUpdate = (cfg.mode == ImportMode.Update || cfg.mode == ImportMode.Upsert) &&
-      !cfg.duplicateMode.sourceOnly
-    val isUpd = col("__graft_stg").isNotNull && col("__graft_pre").isNotNull &&
-      lit(doesUpdate)
-    val withIns = cfg.additionalInsertValues.foldLeft(j) { case (df, (c, e)) =>
-      df.withColumn(c, when(isNew, expr(e)).otherwise(col(s"`$c`"))) }
-    val withUpd = cfg.additionalUpdateValues.foldLeft(withIns) { case (df, (c, e)) =>
-      df.withColumn(c, when(isUpd, expr(e)).otherwise(col(s"`$c`"))) }
-    withUpd.drop("__graft_pre", "__graft_stg", StagedFlagCol)
-      .select(merged.columns.filterNot(_ == StagedFlagCol).map(col).toIndexedSeq: _*)
-  }
-
-  /** Row-provenance marker threaded through the merge for sourceOnly
-    * Insert/Upsert (true = the row was appended from the staged side).
-    */
-  private val StagedFlagCol = "__graft_stgflag"
 
   /** Full import into a JDBC target. `source` carries raw (string-ish)
     * data columns as produced by the graft sources.
@@ -248,42 +200,27 @@ object Importer {
         (st.inserted, st.updated, 0L, st.duplicates)
       } else {
         // MERGE PATH: ordinal → dedup → mode matrix → atomic rewrite.
-        // staged is read by the dup accounting, the merge, the update
-        // count and the extra-values flags: cache it so the source
-        // pipeline (and the ordinal's partition-count pass) runs once —
-        // recomputation could even reorder arrival ordinals.
+        // staged is read by the dup accounting, the merge and the update
+        // count: cache it so the source pipeline (and the ordinal's
+        // partition-count pass) runs once — recomputation could even
+        // reorder arrival ordinals.
         val staged = Ordinals.withArrivalOrdinal(mapped, "__graft_ord").cache()
         val beforeCount = targetLc.count()
-        val dupsInSource = staged.count() -
-          Dedup.dropDuplicatesKeepFirst(staged, cfg.keyColumns, Seq(col("__graft_ord"))).count()
+        val (keys, ord) = (cfg.keyColumns.map(Key(_)), col("__graft_ord"))
+        // duplicates = the rows the staging dedup removes (both paths)
+        val deduped = Merge.stage(staged, keys, cfg.duplicateMode, cfg.updateWithNull, ord)
+        val dupsInSource = staged.count() - deduped.count()
         // target order for UPDATE_FIRST/MAKE_UNIQUE must break ties WITHIN
         // duplicate key groups — keys alone are constant there, so append
         // the value columns for a deterministic total order
         val targetOrder = (cfg.keyColumns ++
           targetLc.columns.filterNot(cfg.keyColumns.contains)).map(col)
-        // sourceOnly Insert/Upsert append EVERY staged row — even ones
-        // whose key already exists — and the reference's plain INSERT
-        // applies the extra insert expressions to all of them. A key
-        // join can't tell those appended rows from the target rows they
-        // duplicate, so carry explicit provenance through the merge.
-        val useStgFlag = cfg.duplicateMode.sourceOnly &&
-          (cfg.mode == ImportMode.Insert || cfg.mode == ImportMode.Upsert) &&
-          cfg.additionalInsertValues.nonEmpty
-        val (tIn, sIn) =
-          if (useStgFlag)
-            (targetLc.withColumn(StagedFlagCol, lit(false)),
-              staged.withColumn(StagedFlagCol, lit(true)))
-          else (targetLc, staged)
-        val keepCols = targetLc.columns.toIndexedSeq ++
-          (if (useStgFlag) Seq(StagedFlagCol) else Nil)
-        val merged0 = Merge.importMerge(
-            tIn, sIn, cfg.keyColumns.map(Key(_)),
+        val merged = Merge.importMerge(targetLc, staged, keys,
             cfg.mode, cfg.duplicateMode, cfg.updateWithNull,
-            sourceOrder = col("__graft_ord"),
-            targetOrder = targetOrder)
-          .drop("__graft_ord")
-          .select(keepCols.map(col): _*)
-        val merged = withAdditionalValues(merged0, targetLc, staged, cfg).cache()
+            sourceOrder = ord, targetOrder = targetOrder,
+            insertValues = cfg.additionalInsertValues,
+            updateValues = cfg.additionalUpdateValues)
+          .cache()
         val afterCount = merged.count()
         val deleted = if (cfg.mode == ImportMode.ClearInsert) beforeCount else 0L
         val insertedN = cfg.mode match {

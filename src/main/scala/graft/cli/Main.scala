@@ -49,6 +49,10 @@ object Main {
                   encoding: String = "UTF-8", verbose: Boolean = false,
                   logToFile: Boolean = false,
                   structureFile: Option[String] = None,
+                  /** `-logerrors` (reference logErroneousData): export
+                    * the erroneous rows next to the import file.
+                    */
+                  logErrors: Boolean = false,
                   secure: Boolean = false,
                   trustStorePath: Option[String] = None,
                   trustStorePassword: Option[String] = None,
@@ -162,10 +166,7 @@ object Main {
             java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(f)),
             "UTF-8").trim)))
         case "-structure" => i += 1; a = a.copy(structureFile = Some(next()))
-        case "-logerrors" => i += 1
-          // reference logErroneousData: erroneous rows export next to the
-          // import file (or CWD for inline data)
-          a = a.copy(cfg = a.cfg.copy(errorChannel = true))
+        case "-logerrors" => i += 1; a = a.copy(logErrors = true)
         case "-deactivatefk" => i += 1; a = a.copy(deactivateFk = true)
         case "-deactivatetriggers" => i += 1; a = a.copy(deactivateTriggers = true)
         case "-table" => i += 1; a = a.copy(table = next())
@@ -383,7 +384,7 @@ object Main {
     // -logerrors without an explicit export path: erroneous rows land
     // next to the import file (reference logErroneousData behavior)
     val cfgRun =
-      if (a.cfg.errorChannel && a.cfg.errorExportPath.isEmpty && !a.inline)
+      if (a.logErrors && a.cfg.errorExportPath.isEmpty && !a.inline)
         a.cfg.copy(errorExportPath = Some(a.importPathOrData + ".errors"))
       else a.cfg
     val a2 = a.copy(cfg = cfgRun)

@@ -180,8 +180,8 @@ private[graft] trait RelationalQueries { this: SparkEntry.type =>
 
   // ---------------------------------------------------------------- q11
   /** INSERT mode with duplicate checks: in-source dedup keep-first, then
-    * dropDuplicatesCrossTable (anti vs target), then append
-    * (reference DbImportWorker.java:495-514).
+    * append the staged rows whose key the target lacks (anti-join vs
+    * target, reference DbImportWorker.java:495-514).
     */
   def q11InsertPipeline(s: SparkSession, d: String): DataFrame = {
     val source = orders(s, d).select(

@@ -3,8 +3,8 @@ package graft.sink
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 
-import graft.operators.{Dedup, Merge, Ordinals}
-import graft.operators.Merge.{DuplicateMode, ImportMode}
+import graft.operators.{Merge, Ordinals}
+import graft.operators.Merge.{DuplicateMode, ImportMode, Key}
 
 /** DB-side merge: the reference's own execution strategy
   * (DbImportWorker.java:438-581 — stage into `tmp_<ts>`, then one SQL
@@ -27,9 +27,11 @@ object JdbcMerge {
   private def q(n: String) = s""""${n.toUpperCase}""""
 
   /** Stage + merge. `source` is the mapped, transformed import data (raw
-    * duplicates allowed — deduped Spark-side per `dupMode`).
-    */
-  /** @param additionalInsertValues extra target columns ← raw SQL
+    * duplicates allowed — deduped Spark-side by [[Merge.stage]]). The
+    * UPDATE_FIRST_* and MAKE_UNIQUE_* modes are rejected: the SQL below
+    * updates every matching target row and never dedups the target.
+    *
+    * @param additionalInsertValues extra target columns ← raw SQL
     *        evaluated by the DESTINATION DB inside the generated INSERT
     *        (the reference's `id=seq.NEXTVAL` case,
     *        DbImportWorker.java:939-948) — this path exists precisely
@@ -42,15 +44,13 @@ object JdbcMerge {
                   additionalInsertValues: Map[String, String] = Map.empty,
                   additionalUpdateValues: Map[String, String] = Map.empty): MergeStats = {
     require(keys.nonEmpty, "DB-side merge needs key columns")
+    require(!dupMode.updateFirst && !dupMode.makeUnique,
+      s"DB-side merge does not support duplicate mode $dupMode")
 
-    // Spark-side dedup of the staged data (SURVEY §2.5 semantics)
     val withOrd = Ordinals.withArrivalOrdinal(source, "__graft_ord")
     val rawCount = withOrd.count()
-    val staged0 =
-      if (dupMode == DuplicateMode.NoCheck) withOrd
-      else if (dupMode.drop) Dedup.dropDuplicatesKeepFirst(withOrd, keys, Seq(col("__graft_ord")))
-      else Dedup.joinDuplicates(withOrd, keys, col("__graft_ord"), updateWithNull)
-    val staged = staged0.drop("__graft_ord")
+    val staged = Merge.stage(withOrd, keys.map(Key(_)), dupMode, updateWithNull,
+      col("__graft_ord")).drop("__graft_ord")
     val stagedCount = staged.count()
 
     val cols = staged.columns.toSeq
@@ -58,18 +58,7 @@ object JdbcMerge {
     val keyEq = (t: String, s: String) =>
       keys.map(k => s"$t.${q(k)} = $s.${q(k)}").mkString(" AND ")
 
-    val tmp = JdbcSink.withConnection(url) { c =>
-      val t = JdbcSink.tempTableName(c)
-      // staging mirrors the target's VARCHAR widths (default 1024 would
-      // reject values the target accepts)
-      JdbcSink.createTable(c, t, staged.schema,
-        varcharSizes = JdbcSink.varcharSizes(c, table))
-      t
-    }
-    try {
-      // one txn per partition: task retries restart clean, no dup rows
-      JdbcSink.appendBatch(staged, url, tmp, batchSize,
-        singleRowFallback = false, commitPerBlock = false)
+    JdbcSink.withStagingTable(staged, url, table, batchSize) { (tmp, _) =>
       val T = q(table)
       val S = q(tmp)
 
@@ -123,10 +112,6 @@ object JdbcMerge {
           case e: java.sql.SQLException => c.rollback(); throw e
         } finally st.close()
       }
-    } finally JdbcSink.withConnection(url) { c =>
-      val st = c.createStatement()
-      try st.executeUpdate(s"""DROP TABLE "${tmp.toUpperCase}"""")
-      catch { case _: java.sql.SQLException => } finally st.close()
     }
   }
 }

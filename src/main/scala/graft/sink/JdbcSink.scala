@@ -242,21 +242,9 @@ object JdbcSink {
     stageAndPromote(df, url, table, batchSize, clearFirst = true)
 
   private def stageAndPromote(df: DataFrame, url: String, table: String,
-                              batchSize: Int, clearFirst: Boolean): WriteStats = {
-    val (tmp, cols) = withConnection(url) { c =>
-      val t = tempTableName(c)
-      // staging mirrors the target's VARCHAR widths — the 1024 default
-      // would reject values the target itself accepts
-      createTable(c, t, df.schema, varcharSizes = varcharSizes(c, table))
-      (t, df.schema.fieldNames.map(n => s""""${n.toUpperCase}"""").mkString(", "))
-    }
-    try {
-      // one transaction per partition (no per-block commits): a task
-      // retry starts from a clean rollback instead of duplicating rows
-      val stats = appendBatch(df, url, tmp, batchSize,
-        singleRowFallback = false, commitPerBlock = false)
-      if (stats.failedRows > 0)
-        throw new SQLException(s"${stats.failedRows} rows failed during staging")
+                              batchSize: Int, clearFirst: Boolean): WriteStats =
+    withStagingTable(df, url, table, batchSize) { (tmp, stats) =>
+      val cols = df.schema.fieldNames.map(n => s""""${n.toUpperCase}"""").mkString(", ")
       withConnection(url) { c =>
         c.setAutoCommit(false)
         val st = c.createStatement()
@@ -269,6 +257,28 @@ object JdbcSink {
         } catch { case e: SQLException => c.rollback(); throw e } finally st.close()
       }
       stats
+    }
+
+  /** The staging table's whole life (`tmp_<ts>`,
+    * DbImportWorker.java:438-451): create it for `df` with `table`'s
+    * VARCHAR widths (the 1024 default would reject values the target
+    * itself accepts), fill it in one transaction per partition (a task
+    * retry starts from a clean rollback instead of duplicating rows),
+    * run `use` on its name, and drop it whatever happens.
+    */
+  private[sink] def withStagingTable[A](df: DataFrame, url: String, table: String,
+                                        batchSize: Int)(use: (String, WriteStats) => A): A = {
+    val tmp = withConnection(url) { c =>
+      val t = tempTableName(c)
+      createTable(c, t, df.schema, varcharSizes = varcharSizes(c, table))
+      t
+    }
+    try {
+      val stats = appendBatch(df, url, tmp, batchSize,
+        singleRowFallback = false, commitPerBlock = false)
+      if (stats.failedRows > 0)
+        throw new SQLException(s"${stats.failedRows} rows failed during staging")
+      use(tmp, stats)
     } finally withConnection(url) { c =>
       val st = c.createStatement()
       try st.executeUpdate(s"""DROP TABLE "${tmp.toUpperCase}"""")

@@ -228,7 +228,7 @@ class CliSpec extends SparkSpec {
     assert(a.noEscapeSequences && a.cfg.preventSingleFallback)
     assert(a.cfg.dateFormat.contains("dd.MM.yyyy") &&
       a.cfg.dateTimeFormat.contains("dd.MM.yyyy HH:mm:ss"))
-    assert(a.cfg.errorChannel && a.secure &&
+    assert(a.logErrors && a.secure &&
       a.trustStorePath.contains("/tmp/ts.jks") &&
       a.trustStorePassword.contains("tsp"))
     assert(a.deactivateFk && a.deactivateTriggers)
@@ -249,6 +249,22 @@ class CliSpec extends SparkSpec {
     // trailing flag-position help still works, positionals preserved
     val t = Main.parseArgs(Array("jdbc:x", "t", "data.csv", "-help"))
     assert(t.help && t.table == "t")
+  }
+
+  test("-logerrors writes the rows that failed to parse to <file>.errors") {
+    val url = freshDb()
+    JdbcSink.withConnection(url) { c =>
+      val st = c.createStatement()
+      st.executeUpdate("CREATE TABLE \"LE\" (\"ID\" INTEGER, \"V\" VARCHAR(10))")
+      st.close()
+    }
+    val f = SyntheticFixtures.writeText(
+      new File(SyntheticFixtures.dir("clilogerr"), "le.csv"), "id;v\n1;ok\nx9;bad\n3;fine")
+    assert(Main.run(spark, Main.parseArgs(Array(url, "le", f.getPath, "-logerrors"))) == 0)
+    JdbcSink.withConnection(url)(c => assert(JdbcSink.countRows(c, "le") == 2))
+    val errs = spark.read.option("header", "true").option("sep", ";")
+      .csv(f.getPath + ".errors").collect()
+    assert(errs.map(r => (r.getAs[String]("id"), r.getAs[String]("v"))).toSeq == Seq(("x9", "bad")))
   }
 
   test("-mf reads the mapping from a file; -dateformat governs unpatterned DATE parses") {

@@ -197,7 +197,7 @@ class JdbcSinkSpec extends SparkSpec {
     val cfg = Importer.ImportConfig(mode = ImportMode.Upsert, keyColumns = Seq("k"),
       updateWithNull = false)
     val urlSpark = setup()
-    Importer.importToJdbc(src, urlSpark, "m", cfg)
+    val resSpark = Importer.importToJdbc(src, urlSpark, "m", cfg)
     val urlDb = setup()
     val resDb = Importer.importToJdbc(src, urlDb, "m", cfg.copy(mergeInDb = true))
     assert(readOut(urlSpark) == readOut(urlDb))
@@ -205,6 +205,56 @@ class JdbcSinkSpec extends SparkSpec {
     assert(readOut(urlDb) == Seq((1, "A1", "B1x"), (2, "A2", "B2"), (3, "a3", "b3"),
       (5, null, "B5"), (9, "a9", "b9")))
     assert(resDb.inserted == 2 && resDb.updated == 1 && resDb.duplicates == 1)
+    def counts(r: Importer.ImportResult) = (r.duplicates, r.inserted, r.updated, r.finalCount)
+    assert(counts(resSpark) == counts(resDb))
+  }
+
+  test("NO_CHECK INSERT: both merge paths count no duplicates and append every row") {
+    // no primary key, so the repeated source key 1 lands twice
+    def setup(): String = {
+      val url = freshDb()
+      JdbcSink.withConnection(url) { c =>
+        val st = c.createStatement()
+        st.executeUpdate("CREATE TABLE \"NC\" (\"K\" INTEGER, \"V\" VARCHAR(10))")
+        st.executeUpdate("INSERT INTO \"NC\" VALUES (1, 'old')")
+        st.close()
+      }
+      url
+    }
+    def readOut(url: String) =
+      spark.read.format("jdbc").option("url", url).option("dbtable", "NC").load()
+        .orderBy("K", "V").collect().map(r => (r.getInt(0), r.getString(1))).toSeq
+    val src = Seq(("1", "a"), ("1", "b"), ("2", "c")).toDF("k", "v")
+    val cfg = Importer.ImportConfig(mode = ImportMode.Insert, keyColumns = Seq("k"),
+      duplicateMode = DuplicateMode.NoCheck)
+    val urlSpark = setup()
+    val resSpark = Importer.importToJdbc(src, urlSpark, "nc", cfg)
+    val urlDb = setup()
+    val resDb = Importer.importToJdbc(src, urlDb, "nc", cfg.copy(mergeInDb = true))
+    assert(readOut(urlSpark) == Seq((1, "a"), (1, "b"), (1, "old"), (2, "c")))
+    assert(readOut(urlDb) == readOut(urlSpark))
+    for (r <- Seq(resSpark, resDb))
+      assert(r.duplicates == 0 && r.inserted == 3 && r.updated == 0 && r.finalCount == 4)
+  }
+
+  test("DB-side merge rejects MAKE_UNIQUE_DROP before staging, target unchanged") {
+    val url = freshDb()
+    JdbcSink.withConnection(url) { c =>
+      val st = c.createStatement()
+      st.executeUpdate("CREATE TABLE \"MU\" (\"K\" INTEGER, \"V\" VARCHAR(10))")
+      st.executeUpdate("INSERT INTO \"MU\" VALUES (1, 'x'), (1, 'y'), (2, 'z')")
+      st.close()
+    }
+    val src = Seq(("1", "new"), ("3", "ins")).toDF("k", "v")
+    val ex = intercept[IllegalArgumentException] {
+      Importer.importToJdbc(src, url, "mu",
+        Importer.ImportConfig(mode = ImportMode.Upsert, keyColumns = Seq("k"),
+          duplicateMode = DuplicateMode.MakeUniqueDrop, mergeInDb = true))
+    }
+    assert(ex.getMessage.contains("MakeUniqueDrop"))
+    val got = spark.read.format("jdbc").option("url", url).option("dbtable", "MU").load()
+      .orderBy("K", "V").collect().map(r => (r.getInt(0), r.getString(1))).toSeq
+    assert(got == Seq((1, "x"), (1, "y"), (2, "z")))
   }
 
   test("error channel in the orchestrator: unparseable rows diverted + exported") {
@@ -217,7 +267,7 @@ class JdbcSinkSpec extends SparkSpec {
       .toDF("column_integer", "column_date")
     val exportDir = new File(SyntheticFixtures.dir("ecerr"), "errors").getPath
     val res = Importer.importToJdbc(src, url, "ec",
-      Importer.ImportConfig(errorChannel = true, errorExportPath = Some(exportDir)))
+      Importer.ImportConfig(errorExportPath = Some(exportDir)))
     assert(res.found == 3 && res.valid == 1 && res.invalid == 2 && res.finalCount == 1)
     val errs = spark.read.option("header", "true").option("sep", ";").csv(exportDir)
     assert(errs.count() == 2)
@@ -241,7 +291,7 @@ class JdbcSinkSpec extends SparkSpec {
     val src = Seq("1", "not-a-number", "3").toDF("column_integer")
     val ex = intercept[IllegalStateException] {
       Importer.importToJdbc(src, url, "ecr",
-        Importer.ImportConfig(errorChannel = true, completeCommit = true))
+        Importer.ImportConfig(completeCommit = true))
     }
     assert(ex.getMessage.contains("import aborted"))
     // pre-existing row intact, nothing appended
@@ -324,6 +374,29 @@ class JdbcSinkSpec extends SparkSpec {
     assert(got.toSeq == Seq((1, "dup", "ins"), (1, "old", null), (2, "new", "ins")))
   }
 
+  test("UPDATE_FIRST: additional update values reach only the row the merge updates") {
+    val url = freshDb()
+    JdbcSink.withConnection(url) { c =>
+      val st = c.createStatement()
+      st.executeUpdate("CREATE TABLE \"AUF\" (\"K\" INTEGER, \"V\" VARCHAR(10), " +
+        "\"TOUCHED\" INTEGER)")
+      st.executeUpdate("INSERT INTO \"AUF\" (\"K\", \"V\") VALUES (1, 'b'), (1, 'a'), (2, 'c')")
+      st.close()
+    }
+    val src = Seq(("1", "new")).toDF("k", "v")
+    val res = Importer.importToJdbc(src, url, "auf",
+      Importer.ImportConfig(mode = ImportMode.Update, keyColumns = Seq("k"),
+        duplicateMode = DuplicateMode.UpdateFirstJoin,
+        additionalUpdateValues = Map("touched" -> "41 + 1")))
+    val got = spark.read.format("jdbc").option("url", url).option("dbtable", "AUF").load()
+      .orderBy("K", "V").collect()
+      .map(r => (r.getInt(0), r.getString(1), if (r.isNullAt(2)) -1 else r.getInt(2))).toSeq
+    // the first row of key 1 by (k, v, touched) is (1, 'a'): only it is
+    // updated and touched; (1, 'b') and key 2 stay as they were
+    assert(got == Seq((1, "b", -1), (1, "new", 42), (2, "c", -1)))
+    assert(res.updated == 1)
+  }
+
   test("rewriteAtomic keeps the target intact when staging fails") {
     val url = freshDb()
     JdbcSink.withConnection(url) { c =>
@@ -351,8 +424,7 @@ class JdbcSinkSpec extends SparkSpec {
       JdbcSink.createTable(c, "ovf", StructType(Seq(
         StructField("column_integer", IntegerType)))))
     val src = Seq("123", "12345678901234567890", "456").toDF("column_integer")
-    val res = Importer.importToJdbc(src, url, "ovf",
-      Importer.ImportConfig(errorChannel = true))
+    val res = Importer.importToJdbc(src, url, "ovf", Importer.ImportConfig())
     assert(res.valid == 2 && res.invalid == 1 && res.finalCount == 2)
   }
 
