@@ -14,8 +14,9 @@ import graft.operators.Merge.{DuplicateMode, ImportMode, Key}
   *  - Spark dedups/transforms the STAGED side (cheap, cluster-side,
   *    where the new data lives);
   *  - the DB runs the set-based anti-join INSERT and update-join UPDATE
-  *    against its own (indexed) target — no target extraction, no
-  *    rewrite.
+  *    with both sides indexed on the keys — the target by its own
+  *    index, the staging table by the one [[JdbcSink.withStagingTable]]
+  *    builds after the fill — no target extraction, no rewrite.
   *
   * Generated SQL is ANSI (correlated subqueries), valid on Derby/
   * HSQL/Postgres/MySQL-family alike.
@@ -58,7 +59,7 @@ object JdbcMerge {
     val keyEq = (t: String, s: String) =>
       keys.map(k => s"$t.${q(k)} = $s.${q(k)}").mkString(" AND ")
 
-    JdbcSink.withStagingTable(staged, url, table, batchSize) { (tmp, _) =>
+    JdbcSink.withStagingTable(staged, url, table, batchSize, keys) { (tmp, _) =>
       val T = q(table)
       val S = q(tmp)
 

@@ -79,24 +79,35 @@ object JdbcSink {
   }
 
   /** Index auto-create on merge keys if absent (`-nonewindex` disables in
-    * the reference); returns the created index name.
+    * the reference); returns the created index name. The keys count as
+    * indexed only when one index leads with exactly them, in any order:
+    * an index on `(X, K)` cannot serve a lookup on `K`.
     */
   def createIndexIfNeeded(c: Connection, table: String, keys: Seq[String]): Option[String] = {
     if (keys.isEmpty) return None
     val rs = c.getMetaData.getIndexInfo(null, null, table.toUpperCase, false, false)
-    val indexed = scala.collection.mutable.Set.empty[String]
-    try while (rs.next()) Option(rs.getString("COLUMN_NAME")).foreach(indexed += _)
-    finally rs.close()
-    if (keys.forall(k => indexed.contains(k.toUpperCase))) None
-    else {
-      val name = s"IDX_${table.toUpperCase}_${keys.map(_.toUpperCase).mkString("_")}".take(120)
-      val st = c.createStatement()
-      try {
-        st.executeUpdate(s"""CREATE INDEX "$name" ON "${table.toUpperCase}" """ +
-          s"""(${keys.map(k => s""""${k.toUpperCase}"""").mkString(", ")})""")
-        Some(name)
-      } catch { case _: SQLException => None } finally st.close()
+    val indexCols = scala.collection.mutable.ArrayBuffer.empty[(String, Int, String)]
+    try while (rs.next()) Option(rs.getString("COLUMN_NAME")).foreach { col =>
+      indexCols += ((rs.getString("INDEX_NAME"), rs.getInt("ORDINAL_POSITION"), col))
+    } finally rs.close()
+    val keySet = keys.map(_.toUpperCase).toSet
+    val covered = indexCols.groupBy(_._1).values.exists { ix =>
+      ix.sortBy(_._2).take(keys.size).map(_._3).toSet == keySet
     }
+    if (covered) None
+    else try Some(createIndex(c, table, keys)) catch { case _: SQLException => None }
+  }
+
+  /** The one place index DDL is built: a plain (non-unique) index on
+    * `keys`, named after the table and keys; returns the index name.
+    */
+  private def createIndex(c: Connection, table: String, keys: Seq[String]): String = {
+    val name = s"IDX_${table.toUpperCase}_${keys.map(_.toUpperCase).mkString("_")}".take(120)
+    val st = c.createStatement()
+    try st.executeUpdate(s"""CREATE INDEX "$name" ON "${table.toUpperCase}" """ +
+      s"""(${keys.map(k => s""""${k.toUpperCase}"""").mkString(", ")})""")
+    finally st.close()
+    name
   }
 
   /** Temp staging-table name with collision retry
@@ -265,9 +276,17 @@ object JdbcSink {
     * itself accepts), fill it in one transaction per partition (a task
     * retry starts from a clean rollback instead of duplicating rows),
     * run `use` on its name, and drop it whatever happens.
+    *
+    * Non-empty `keys` get a non-unique index once the table is filled
+    * (DbImportWorker.java:456-471), so keyed lookups into staging stop
+    * scanning it; building it after the fill lets the DB gather the
+    * index statistics from the staged rows. Not UNIQUE: staging may
+    * repeat keys and hold NULL keys. A failed CREATE INDEX fails the
+    * call.
     */
   private[sink] def withStagingTable[A](df: DataFrame, url: String, table: String,
-                                        batchSize: Int)(use: (String, WriteStats) => A): A = {
+                                        batchSize: Int, keys: Seq[String] = Nil)
+                                       (use: (String, WriteStats) => A): A = {
     val tmp = withConnection(url) { c =>
       val t = tempTableName(c)
       createTable(c, t, df.schema, varcharSizes = varcharSizes(c, table))
@@ -278,6 +297,7 @@ object JdbcSink {
         singleRowFallback = false, commitPerBlock = false)
       if (stats.failedRows > 0)
         throw new SQLException(s"${stats.failedRows} rows failed during staging")
+      if (keys.nonEmpty) withConnection(url)(c => createIndex(c, tmp, keys))
       use(tmp, stats)
     } finally withConnection(url) { c =>
       val st = c.createStatement()

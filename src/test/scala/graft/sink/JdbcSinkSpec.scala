@@ -140,6 +140,57 @@ class JdbcSinkSpec extends SparkSpec {
     }
   }
 
+  test("index auto-create counts keys as indexed only when one index leads with them") {
+    def fresh(): String = {
+      val url = freshDb()
+      JdbcSink.withConnection(url) { c =>
+        val st = c.createStatement()
+        st.executeUpdate("CREATE TABLE \"IXL\" (\"A\" INTEGER, \"B\" INTEGER)")
+        st.executeUpdate("CREATE INDEX \"IXL_AB\" ON \"IXL\" (\"A\", \"B\")")
+        st.close()
+      }
+      url
+    }
+    // B is the second column of (A, B): not usable for a lookup on B alone
+    JdbcSink.withConnection(fresh())(c =>
+      assert(JdbcSink.createIndexIfNeeded(c, "ixl", Seq("b")).contains("IDX_IXL_B")))
+    for (keys <- Seq(Seq("a"), Seq("b", "a")))
+      JdbcSink.withConnection(fresh())(c =>
+        assert(JdbcSink.createIndexIfNeeded(c, "ixl", keys).isEmpty, keys))
+  }
+
+  test("staging table: non-unique key index while in use, dropped afterwards or on failure") {
+    val url = freshDb()
+    JdbcSink.withConnection(url) { c =>
+      val st = c.createStatement()
+      st.executeUpdate("CREATE TABLE \"ST\" (\"K\" INTEGER, \"V\" VARCHAR(10))")
+      st.close()
+    }
+    val df = Seq((Some(1), "a"), (Some(1), "b"), (None, "c")).toDF("k", "v")
+    def indexes(c: java.sql.Connection, t: String): Seq[(String, Boolean)] = {
+      val rs = c.getMetaData.getIndexInfo(null, null, t.toUpperCase, false, false)
+      val b = Seq.newBuilder[(String, Boolean)]
+      try while (rs.next()) b += ((rs.getString("COLUMN_NAME"), rs.getBoolean("NON_UNIQUE")))
+      finally rs.close()
+      b.result()
+    }
+    val tmp = JdbcSink.withStagingTable(df, url, "st", 1000, keys = Seq("k")) { (tmp, stats) =>
+      assert(stats.inserted == 3) // repeated and NULL keys stage fine
+      JdbcSink.withConnection(url)(c => assert(indexes(c, tmp) == Seq("K" -> true)))
+      tmp
+    }
+    JdbcSink.withConnection(url)(c => assert(!JdbcSink.tableExists(c, tmp)))
+    var failedTmp = ""
+    intercept[IllegalStateException] {
+      JdbcSink.withStagingTable(df, url, "st", 1000, keys = Seq("k")) { (t, _) =>
+        failedTmp = t
+        throw new IllegalStateException("use failed")
+      }
+    }
+    assert(failedTmp.nonEmpty)
+    JdbcSink.withConnection(url)(c => assert(!JdbcSink.tableExists(c, failedTmp)))
+  }
+
   test("SQL script: per-statement errors collected; completeCommit rolls back") {
     val url = freshDb()
     val script =
@@ -235,6 +286,38 @@ class JdbcSinkSpec extends SparkSpec {
     assert(readOut(urlDb) == readOut(urlSpark))
     for (r <- Seq(resSpark, resDb))
       assert(r.duplicates == 0 && r.inserted == 3 && r.updated == 0 && r.finalCount == 4)
+  }
+
+  test("UPSERT with a NULL and a repeated key: both merge paths agree (non-unique staging)") {
+    // no primary key. A PRIMARY KEY staging table rejects the NULL key;
+    // a UNIQUE staging index rejects the repeated key NO_CHECK stages.
+    def setup(): String = {
+      val url = freshDb()
+      JdbcSink.withConnection(url) { c =>
+        val st = c.createStatement()
+        st.executeUpdate("CREATE TABLE \"NU\" (\"K\" INTEGER, \"V\" VARCHAR(10))")
+        st.executeUpdate("INSERT INTO \"NU\" VALUES (1, 'old1'), (3, 'old3')")
+        st.close()
+      }
+      url
+    }
+    def readOut(url: String) =
+      spark.read.format("jdbc").option("url", url).option("dbtable", "NU").load()
+        .collect().map(r => (Option(r.get(0)).map(_.asInstanceOf[Int]), r.getString(1)))
+        .toSeq.sortBy(r => (r._1.getOrElse(Int.MinValue), r._2))
+    val src = Seq[(String, String)](("1", "a"), ("1", "b"), (null, "n"), ("2", "c"))
+      .toDF("k", "v")
+    def counts(r: Importer.ImportResult) = (r.duplicates, r.inserted, r.updated, r.finalCount)
+    for (dupMode <- Seq(DuplicateMode.UpdateAllJoin, DuplicateMode.NoCheck)) {
+      val cfg = Importer.ImportConfig(mode = ImportMode.Upsert, keyColumns = Seq("k"),
+        duplicateMode = dupMode)
+      val urlSpark = setup()
+      val resSpark = Importer.importToJdbc(src, urlSpark, "nu", cfg)
+      val urlDb = setup()
+      val resDb = Importer.importToJdbc(src, urlDb, "nu", cfg.copy(mergeInDb = true))
+      assert(readOut(urlDb) == readOut(urlSpark), dupMode)
+      assert(counts(resDb) == counts(resSpark), dupMode)
+    }
   }
 
   test("DB-side merge rejects MAKE_UNIQUE_DROP before staging, target unchanged") {
