@@ -12,13 +12,16 @@ import graft.sink.JdbcSink
   * builder:
   *
   *   source (raw strings) → mapping/transform select → validate (error
-  *   side-channel) → FAST PATH (keyless INSERT/CLEARINSERT → batch
-  *   append) or MERGE PATH (arrival ordinal → dedup → mode matrix as
-  *   DataFrame joins → atomic rewrite of the JDBC target).
+  *   side-channel) → one of three branches:
+  *    - FAST PATH: keyless INSERT/CLEARINSERT → batch append;
+  *    - IN-DB MERGE (`mergeInDb`, keyed): Spark dedups the staged side,
+  *      the destination DB runs the set-based merge SQL
+  *      ([[graft.sink.JdbcMerge]], the reference's own strategy);
+  *    - SPARK MERGE (keyed, the default): arrival ordinal → dedup → mode
+  *      matrix as DataFrame joins → atomic rewrite of the JDBC target.
   *
-  * The relational merge runs in Spark (cluster-side) instead of the
-  * destination DB — the process boundary moves from "JVM→DB" to
-  * "driver→executors" and only final writes cross to the sink.
+  * The Spark merge moves the process boundary from "JVM→DB" to
+  * "driver→executors": only final writes cross to the sink.
   */
 object Importer {
 
@@ -181,8 +184,9 @@ object Importer {
         val deleted = if (cfg.mode == ImportMode.ClearInsert)
           JdbcSink.withConnection(url)(c => JdbcSink.clearTable(c, table))
         else 0L
-        // Spark-evaluable additional insert values (DB-only expressions
-        // like sequences need the mergeInDb path)
+        // additional insert values evaluate in Spark here: a DB-only
+        // expression (a sequence) fails. Only a keyed import with
+        // mergeInDb hands them to the destination DB's SQL.
         val withExtra = cfg.additionalInsertValues.foldLeft(mapped) {
           case (df, (c, sql)) => df.withColumn(c, expr(sql))
         }
@@ -197,7 +201,7 @@ object Importer {
         val st = graft.sink.JdbcMerge.mergeViaSql(mapped, url, table,
           cfg.keyColumns, cfg.mode, cfg.duplicateMode, cfg.updateWithNull,
           cfg.batchSize, cfg.additionalInsertValues, cfg.additionalUpdateValues)
-        (st.inserted, st.updated, 0L, st.duplicates)
+        (st.inserted, st.updated, st.deleted, st.duplicates)
       } else {
         // MERGE PATH: ordinal → dedup → mode matrix → atomic rewrite.
         // staged is read by the dup accounting, the merge and the update

@@ -100,10 +100,8 @@ object Mapping {
       case (DateType, _) =>
         Transforms.parseDateChain(trim(src),
           dateFormat.toSeq ++ Seq("yyyy-MM-dd", "dd.MM.yyyy"))
-      case (BinaryType, "file") =>
-        // `file` format info loads path contents sink-side; represented
-        // here as the raw path bytes placeholder (loader in JdbcSink).
-        src.cast(BinaryType)
+      case (BinaryType, "file") => Transforms.loadFile(src)
+      case (StringType, "file") => Transforms.loadFile(src, asText = true)
       case (BinaryType, _) => Transforms.base64Blob(src)
       case (IntegerType, _) => Transforms.coerceInt(src)
       case (BooleanType, _) => Transforms.interpretBool(src)

@@ -8,29 +8,19 @@ import graft.sources.TableNames
 /** Multi-file wildcard import (reference DbImportMultiWorker.java:39-130,
   * SURVEY §3.2): expand the `?`/`*` glob, sort file names, derive each
   * destination table when `-table '*'`, validate table existence up
-  * front when not creating, run pre/post hooks ONCE around the whole
-  * batch (the FK/trigger-deactivation analog,
-  * DbImportMultiWorker.java:71-105), and abort on the first error under
-  * completeCommit.
+  * front when not creating, and abort on the first error under
+  * completeCommit. The reference's FK/trigger deactivation around the
+  * batch (DbImportMultiWorker.java:71-105) is vendor DDL; the CLI
+  * accepts its flags and prints a warning.
   */
 object MultiImporter {
 
   case class FileResult(file: String, table: String,
                         result: Either[String, Importer.ImportResult])
 
-  /** SQL hooks executed once around the whole batch, each on its own
-    * connection — the vendor-specific FK/trigger toggles
-    * (`-deactivatefk`, `-deactivatetriggers`) plug in here. Statements
-    * must have GLOBAL effect (ALTER TABLE … DISABLE TRIGGER, catalog
-    * DDL): SESSION-scoped settings (MySQL `SET FOREIGN_KEY_CHECKS=0`)
-    * do NOT carry over to the import's own per-partition connections.
-    */
-  case class Hooks(pre: Seq[String] = Nil, post: Seq[String] = Nil)
-
   def importGlob(spark: SparkSession, pattern: String, url: String,
                  tableSpec: String, cfg: Importer.ImportConfig,
-                 readFile: (SparkSession, String) => DataFrame,
-                 hooks: Hooks = Hooks()): Seq[FileResult] = {
+                 readFile: (SparkSession, String) => DataFrame): Seq[FileResult] = {
     val files = TableNames.expandGlob(pattern)
     require(files.nonEmpty, s"no files match $pattern")
     val plan = files.map { f =>
@@ -44,28 +34,19 @@ object MultiImporter {
       }
       require(missing.isEmpty, s"destination tables missing: ${missing.mkString(", ")}")
     }
-    runHooks(url, hooks.pre)
-    try {
-      val out = scala.collection.mutable.ArrayBuffer.empty[FileResult]
-      val it = plan.iterator
-      var aborted = false
-      while (it.hasNext && !aborted) {
-        val (file, table) = it.next()
-        val r =
-          try Right(Importer.importToJdbc(readFile(spark, file), url, table, cfg))
-          catch { case e: Exception => Left(e.getMessage) }
-        out += FileResult(file, table, r)
-        if (r.isLeft && cfg.completeCommit) aborted = true
-      }
-      out.toSeq
-    } finally runHooks(url, hooks.post)
-  }
-
-  def runHooks(url: String, sqls: Seq[String]): Unit =
-    if (sqls.nonEmpty) JdbcSink.withConnection(url) { c =>
-      val st = c.createStatement()
-      try sqls.foreach(st.executeUpdate) finally st.close()
+    val out = scala.collection.mutable.ArrayBuffer.empty[FileResult]
+    val it = plan.iterator
+    var aborted = false
+    while (it.hasNext && !aborted) {
+      val (file, table) = it.next()
+      val r =
+        try Right(Importer.importToJdbc(readFile(spark, file), url, table, cfg))
+        catch { case e: Exception => Left(e.getMessage) }
+      out += FileResult(file, table, r)
+      if (r.isLeft && cfg.completeCommit) aborted = true
     }
+    out.toSeq
+  }
 
   /** `analyseDataOnly` mode (reference DbImportWorker.java:141-143):
     * list the source's property names with inferred types for

@@ -376,11 +376,9 @@ object Main {
       added.foreach { case (t, c) => println(s"Added column $t.$c") }
     }
     if (a.deactivateFk || a.deactivateTriggers)
-      // vendor-specific DDL toggles; embedded vendors expose none —
-      // the MultiImporter.Hooks API takes explicit SQL for real vendors
-      System.err.println("[graft] -deactivatefk/-deactivatetriggers: no " +
-        "toggle statements for this vendor; proceeding (use hooks for " +
-        "vendor SQL)")
+      // vendor-specific DDL toggles; graft runs none, so say so
+      System.err.println("[graft] -deactivatefk/-deactivatetriggers: " +
+        "not supported, foreign keys and triggers stay active; proceeding")
     // -logerrors without an explicit export path: erroneous rows land
     // next to the import file (reference logErroneousData behavior)
     val cfgRun =

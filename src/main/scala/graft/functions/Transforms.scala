@@ -6,8 +6,9 @@ import org.apache.spark.sql.functions._
 /** Per-column "format info" scalar transforms — the engine's scalar
   * function library, re-expressing reference
   * DbImportWorker.validateAndSetParameter (DbImportWorker.java:1113-1607)
-  * as codegen-friendly Column expressions (SURVEY §2.3). No UDFs: every
-  * transform stays inside whole-stage codegen.
+  * as codegen-friendly Column expressions (SURVEY §2.3). Every transform
+  * but [[loadFile]] stays inside whole-stage codegen; no Spark
+  * expression reads a file, so that one is a UDF.
   */
 object Transforms {
 
@@ -65,6 +66,26 @@ object Transforms {
     */
   def shiftTimezone(ts: Column, importTz: String, dbTz: String): Column =
     from_utc_timestamp(to_utc_timestamp(ts, importTz), dbTz)
+
+  /** `file` format info (reference DbImportWorker.java:1209-1315): the
+    * value is a file path and the column takes the file's contents —
+    * bytes for a BLOB target, UTF-8 text for a CLOB (`asText`) — with a
+    * single-entry zip/gz/tgz unpacked by
+    * [[graft.sources.Compression.decompress]]. An unreadable path maps
+    * to null, so validation marks the row invalid like any failed
+    * parse. The file is read inside the task that owns the row: paths
+    * must resolve on every executor.
+    */
+  def loadFile(path: Column, asText: Boolean = false): Column = {
+    val bytes = udf(fileBytes _).apply(path)
+    if (asText) bytes.cast("string") else bytes
+  }
+
+  private def fileBytes(p: String): Array[Byte] =
+    if (p == null) null
+    else try graft.sources.Compression.decompress(p,
+      java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(p)))
+    catch { case scala.util.control.NonFatal(_) => null }
 
   /** Base64 string into a Blob column (reference
     * DbImportWorker.java:1484-1487).

@@ -89,38 +89,20 @@ object ConnectedComponents {
     lab.join(lab.groupBy(col("cluster")).agg(count(lit(1)).as("cluster_size")),
       Seq("cluster"))
 
-  /** Drop every clustered document except its cluster representative
-    * (the minimum id): docs minus a broadcast-able anti-join on the
-    * non-representative members. The corpus is scanned once and never
-    * shuffled — only the (small) pair-derived member list moves.
-    */
-  def keepRepresentatives(docs: DataFrame, idCol: String,
-                          edges: DataFrame, srcCol: String, dstCol: String): DataFrame = {
-    val losers = labels(edges, srcCol, dstCol)
-      .filter(col("id") =!= col("cluster")).select(col("id"))
-    docs.join(losers, docs(idCol) === losers("id"), "left_anti")
-  }
-
-  /** Quality-aware survivor election: within every cluster keep the
-    * member with the HIGHEST score (ties → smallest id) instead of the
-    * minimum id — what curation pipelines actually want when duplicates
-    * differ (truncated mirrors, boilerplate-injected re-crawls score
-    * below the clean original). Docs in no cluster keep themselves.
+  /** Quality-aware survivor election from an already-computed
+    * (id, cluster) label frame (one components pass shared across
+    * consumers): within every cluster keep the member with the HIGHEST
+    * score (ties → smallest id) instead of the minimum id — what
+    * curation pipelines want when duplicates differ (truncated mirrors,
+    * boilerplate-injected re-crawls score below the clean original).
+    * Docs in no cluster keep themselves.
     *
     * Returns one row per doc: `(idCol, cluster_id, scoreCol, keep)`,
     * `cluster_id` the component minimum (the doc's own id for
-    * singletons). Scale shape matches [[keepRepresentatives]]: the
-    * member list and its per-cluster arg-max are pair-derived
-    * (≪ corpus) hash aggregations; the corpus is scanned twice (score
-    * lookup, then the keep join), both scans column-pruned, and never
-    * shuffled on its own.
-    */
-  def keepBestRepresentatives(docs: DataFrame, idCol: String, scoreCol: String,
-                              edges: DataFrame, srcCol: String, dstCol: String): DataFrame =
-    keepBestFromLabels(docs, idCol, scoreCol, labels(edges, srcCol, dstCol))
-
-  /** [[keepBestRepresentatives]] from an already-computed (id, cluster)
-    * label frame — shares one components pass across consumers.
+    * singletons). The member list and its per-cluster arg-max are
+    * pair-derived (≪ corpus) hash aggregations; the corpus is scanned
+    * twice (score lookup, then the keep join), both scans
+    * column-pruned, and never shuffled on its own.
     */
   def keepBestFromLabels(docs: DataFrame, idCol: String, scoreCol: String,
                          labelFrame: DataFrame): DataFrame = {

@@ -49,15 +49,6 @@ object Decontamination {
           >= threshold).cast("long"))
   }
 
-  /** The filtering face: corpus minus contaminated documents. */
-  def decontaminate(corpus: DataFrame, benchmark: DataFrame,
-                    idCol: String, textCol: String,
-                    k: Int = 3, threshold: Double = 0.5): DataFrame = {
-    val bad = contaminationStats(corpus, benchmark, idCol, textCol, k, threshold)
-      .filter(col("is_contaminated") === 1L).select(col("id"))
-    corpus.join(bad, corpus(idCol) === bad("id"), "left_anti")
-  }
-
   /** EMBEDDING-level cross-set decontamination — the semantic
     * complement of the n-gram tier: a paraphrased benchmark item
     * shares no shingles with its source but its embedding is nearly

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
@@ -72,37 +72,6 @@ object HeavyHitters {
     val agg = udaf(new MgAgg(k))
     items.select(agg(col(itemCol)).as("mg")).collect()(0)
       .getAs[Map[String, Long]](0).keys.toSeq
-  }
-
-  /** The merged MG summary itself (item → undercounted tally, ≤ k
-    * entries) — the mergeable-summaries surface (Agarwal et al.,
-    * PODS'12): [[mgMerge]] of two summaries covers the concatenated
-    * stream with the error bounds added. The streaming face folds one
-    * of these per micro-batch into a standing summary.
-    */
-  def mgSummary(items: DataFrame, itemCol: String, k: Int): Map[String, Long] = {
-    require(k >= 1, s"k must be >= 1, got $k")
-    val agg = udaf(new MgAgg(k))
-    items.select(agg(col(itemCol)).as("mg")).collect()(0)
-      .getAs[Map[String, Long]](0)
-  }
-
-  /** Merge two MG summaries under the k-slot bound: add counters,
-    * subtract the (k+1)-th largest, drop non-positives. Identical to
-    * the in-aggregator merge — exposed for cross-batch folds.
-    */
-  def mgMerge(a: Map[String, Long], b: Map[String, Long],
-              k: Int): Map[String, Long] = {
-    val sum = b.foldLeft(a) { case (m, (t, c)) =>
-      m.updated(t, m.getOrElse(t, 0L) + c)
-    }
-    if (sum.size <= k) sum
-    else {
-      val cut = sum.values.toArray.sorted(Ordering[Long].reverse).apply(k)
-      sum.flatMap { case (t, c) =>
-        if (c > cut) Some(t -> (c - cut)) else None
-      }
-    }
   }
 
   /** Items whose EXACT frequency is ≥ `minCount`, with their exact

@@ -48,8 +48,7 @@ object InvertedIndex {
     */
   def bm25TopK(docs: DataFrame, idCol: String, textCol: String,
                terms: Seq[String], k: Int,
-               k1: Double = 1.2, b: Double = 0.75,
-               staging: Staging.Mode = Staging.Memory): DataFrame = {
+               k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     val ts = terms.map(_.trim.toLowerCase).distinct
     // ONE tokenize pass and one shuffle: tokens group by (doc, query
     // term-or-null); the null bucket carries every non-query token, so
@@ -57,15 +56,13 @@ object InvertedIndex {
     // staged: four consumers (lens, stats, tf, df) would otherwise
     // each re-run the tokenize — the frame is ≤ |terms|+1 rows per
     // doc, far smaller than the corpus it summarizes, so staging it
-    // trades trivial storage for three whole-corpus scans. Same
-    // election as TextDedup/Similarity: Memory by default,
-    // Spill(DISK_ONLY)/Artifact for corpus-scale runs.
-    val grouped = Staging.stage(docs.select(col(idCol).as("doc_id"),
+    // trades trivial storage for three whole-corpus scans
+    val grouped = Retained.track(docs.select(col(idCol).as("doc_id"),
         explode(TextAnalysis.tokens(col(textCol))).as("term"))
       .groupBy(col("doc_id"),
         when(col("term").isin(ts: _*), col("term")).as("qterm"))
-      .agg(count(lit(1)).as("n")),
-      staging, "bm25_grouped")
+      .agg(count(lit(1)).as("n"))
+      .cache())
     val lens = grouped.groupBy(col("doc_id")).agg(sum(col("n")).as("len"))
     val stats = lens.agg(count(lit(1)).as("n_docs"),
       (sum(col("len")).cast("double") / count(lit(1)).cast("double"))
@@ -101,7 +98,7 @@ object InvertedIndex {
     * across queries.
     *
     * Scale shape: ONE tokenize pass; the (doc, term-or-null) grouped
-    * frame stages once (same `Staging` election) and only rows whose
+    * frame is cached once (as in [[bm25TopK]]) and only rows whose
     * term appears in SOME query survive into scoring (broadcast mark
     * join against the distinct query vocabulary); the per-query fan-out
     * is the (query_id, term) → (doc, term) join, proportional to
@@ -109,19 +106,18 @@ object InvertedIndex {
     */
   def bm25TopKBatch(docs: DataFrame, idCol: String, textCol: String,
                     queries: DataFrame, queryIdCol: String, termCol: String,
-                    k: Int, k1: Double = 1.2, b: Double = 0.75,
-                    staging: Staging.Mode = Staging.Memory): DataFrame = {
+                    k: Int, k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     val qt = queries.select(col(queryIdCol).as("query_id"),
       lower(trim(col(termCol))).as("term")).distinct()
     val vocab = broadcast(qt.select(col("term")).distinct()
       .withColumn("__is_q", lit(1)))
-    val grouped = Staging.stage(docs.select(col(idCol).as("doc_id"),
+    val grouped = Retained.track(docs.select(col(idCol).as("doc_id"),
         explode(TextAnalysis.tokens(col(textCol))).as("term"))
       .join(vocab, Seq("term"), "left")
       .groupBy(col("doc_id"),
         when(col("__is_q") === 1, col("term")).as("qterm"))
-      .agg(count(lit(1)).as("n")),
-      staging, "bm25_batch_grouped")
+      .agg(count(lit(1)).as("n"))
+      .cache())
     val lens = grouped.groupBy(col("doc_id")).agg(sum(col("n")).as("len"))
     val stats = lens.agg(count(lit(1)).as("n_docs"),
       (sum(col("len")).cast("double") / count(lit(1)).cast("double"))

@@ -60,26 +60,4 @@ object KCore {
     }
     adj.groupBy(col("u").as("node")).agg(count(lit(1)).as("deg"))
   }
-
-  /** The true k-core: peel to the fixpoint (at most `maxRounds`
-    * iterations — throws if not converged, which on any real graph
-    * means `maxRounds` was set far too low: peel depth is bounded by
-    * the longest degeneracy chain, typically O(tens)).
-    */
-  def kCore(edges: DataFrame, srcCol: String, dstCol: String, k: Int,
-            maxRounds: Int = 64): DataFrame = {
-    var adj = undirected(edges, srcCol, dstCol).localCheckpoint(eager = true)
-    var n = adj.count()
-    var converged = n == 0L
-    var round = 0
-    while (!converged) {
-      require(round < maxRounds, s"k-core did not converge in $maxRounds rounds")
-      round += 1
-      adj = peelOnce(adj, k).localCheckpoint(eager = true)
-      val n2 = adj.count() // edge count stable <=> no node was dropped
-      converged = n2 == n || n2 == 0L
-      n = n2
-    }
-    adj.groupBy(col("u").as("node")).agg(count(lit(1)).as("deg"))
-  }
 }

@@ -27,8 +27,7 @@ import org.apache.spark.sql.functions._
 object KMeans {
 
   /** Trained centroids only: (cluster_id, centroid) with ids 1..k.
-    * The building block shared by [[fit]] (which adds member counts)
-    * and [[ivfTopKTrained]] (which probes with the centroids directly).
+    * [[fit]] adds member counts to the same fold.
     */
   def fitCentroids(points: DataFrame, idCol: String, vecCol: String,
                    k: Int, iters: Int): DataFrame =
@@ -112,26 +111,5 @@ object KMeans {
       .withColumn("cluster_id",
         array_position(col("__sims"), array_max(col("__sims"))))
       .drop("__sims")
-  }
-
-  /** End-to-end trained-IVF top-k: fit a spherical k-means coarse
-    * quantizer, bucket the corpus by its trained assignment, and run
-    * the two-stage probe with the TRAINED centroids
-    * ([[Similarity.ivfTopKWithCentroids]] — nothing training produced
-    * is recomputed). The trained path for corpora with no natural
-    * coarse label.
-    */
-  def ivfTopKTrained(queries: DataFrame, corpus: DataFrame, k: Int,
-                     nprobe: Int, nlist: Int, iters: Int = 2,
-                     qId: String = "query_id", qVec: String = "query_vec",
-                     cId: String = "vec_id", cVec: String = "embedding"): DataFrame = {
-    val pts = prepare(corpus, cId, cVec)
-    val cents = fitCentroidsOn(pts, nlist, iters)
-    val bucketed = assign(pts, cents)
-      .select(col("__pid").as(cId), col("__v").as(cVec), col("cluster_id"))
-    Similarity.ivfTopKWithCentroids(queries, bucketed,
-      cents.select(col("cluster_id").as("bucket"), col("centroid")),
-      k, nprobe, bucketCol = "cluster_id",
-      qId = qId, qVec = qVec, cId = cId, cVec = cVec)
   }
 }

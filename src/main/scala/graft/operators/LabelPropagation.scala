@@ -44,37 +44,6 @@ object LabelPropagation {
     withSizes(labels.localCheckpoint(true))
   }
 
-  /** Fixpoint face for API callers: identical semantics per round, but
-    * stops as soon as a round changes NO label (one O(nodes) count — a
-    * 1-row driver witness per round, the k-core early-exit discipline)
-    * instead of always paying `maxRounds` edge joins. `maxRounds` still
-    * caps the loop because synchronous LPA can 2-cycle on bipartite
-    * structures and never converge. Once converged, the labeling equals
-    * [[communities]] at any round count ≥ the convergence round
-    * (property-pinned in GraphSpec) — the fixed-round face stays the
-    * measured/oracle query precisely because its cost is replayable.
-    */
-  def communitiesConverged(edges: DataFrame, srcCol: String, dstCol: String,
-                           maxRounds: Int = 20): DataFrame = {
-    require(maxRounds >= 1, s"maxRounds must be >= 1, got $maxRounds")
-    val e = mirroredEdges(edges, srcCol, dstCol)
-    var labels = initialLabels(e)
-    var round = 0
-    var changed = 1L
-    while (round < maxRounds && changed > 0L) {
-      // materialized per round HERE: each round's labels feed both the
-      // change probe and the next round (propagateOnce itself no longer
-      // checkpoints)
-      val next = propagateOnce(e, labels).localCheckpoint(true)
-      changed = next
-        .join(labels.withColumnRenamed("label", "prev"), Seq("node"))
-        .filter(col("label") =!= col("prev")).count()
-      labels = next
-      round += 1
-    }
-    withSizes(labels)
-  }
-
   /** Self-loops dropped (a node voting for its own label would damp
     * every update toward the identity labeling); mirrored once and
     * checkpointed — every round joins labels onto THIS frame.
@@ -127,7 +96,7 @@ object LabelPropagation {
 
   private def mirroredEdges(edges: DataFrame, srcCol: String,
                             dstCol: String,
-                            assumeCanonical: Boolean = false): DataFrame = {
+                            assumeCanonical: Boolean): DataFrame = {
     // canonicalize FIRST (one distinct over m undirected keys), then
     // mirror: the old orientation-preserving distinct needed a SECOND
     // distinct over the 2m mirrored rows to fold inputs that carry both
@@ -205,9 +174,8 @@ object LabelPropagation {
     * single fused job — the old per-round eager `localCheckpoint` paid
     * a scheduling round-trip plus a full label materialization per
     * round for lineage nobody re-read (§1 measured: 35 jobs → a
-    * handful; the label frames are node-sized either way). Call sites
-    * that DO read a round twice ([[communitiesConverged]]'s change
-    * probe, the final labels under [[withSizes]]) checkpoint
+    * handful; the label frames are node-sized either way). The final
+    * labels, which [[withSizes]] reads twice, are checkpointed
     * explicitly.
     */
   private def propagateOnce(e: DataFrame, labels: DataFrame): DataFrame =

@@ -8,16 +8,14 @@ import org.apache.spark.sql.functions._
   * plumbing (schema, partition-preserving batch decode via
   * `mapPartitions`, metadata extraction as pure expressions) is real and
   * tested. IMAGE decode is REAL — `javax.imageio` ships in the JDK
-  * (PNG/BMP/GIF/JPEG readers), so [[decodeImage]], [[imageFeatures]] and
-  * [[resizeImages]] run an actual pixel pipeline. AUDIO decode is REAL
-  * for PCM WAV — `javax.sound.sampled` ships in the JDK
-  * ([[decodeAudio]], [[audioFeatures]]). VIDEO decode is REAL for
-  * uncompressed RIFF/AVI with BI_RGB DIB frames
-  * ([[decodeVideoFrames]], [[videoFrameFeatures]] — a hand-rolled RIFF
-  * chunk walker, no codec library needed). Compressed-codec audio and
-  * video remain a documented deterministic stub ([[decodeStub]] — no
-  * codec libraries in the JDK); swap that one function for a real
-  * decoder (JavaCV, ffmpeg-pipe) in production.
+  * (PNG/BMP/GIF/JPEG readers), so [[decodeImage]] and [[imageFeatures]]
+  * run an actual pixel pipeline. AUDIO decode is REAL for PCM WAV —
+  * `javax.sound.sampled` ships in the JDK ([[decodeAudio]],
+  * [[audioFeatures]]). VIDEO decode is REAL for uncompressed RIFF/AVI
+  * with BI_RGB DIB frames ([[decodeVideoFrames]], [[videoFrameFeatures]]
+  * — a hand-rolled RIFF chunk walker, no codec library needed).
+  * Compressed-codec audio and video need an external decoder (JavaCV,
+  * ffmpeg-pipe); the JDK ships none.
   */
 object Multimodal {
 
@@ -29,10 +27,6 @@ object Multimodal {
   /** One media payload. `payload` is the opaque binary column. */
   case class MediaRecord(media_id: Long, media_type: String, payload: Array[Byte])
 
-  /** Decoded per-media features (what a real decoder would emit). */
-  case class MediaFeatures(media_id: Long, media_type: String, byte_len: Long,
-                           width: Int, height: Int, n_frames: Int)
-
   /** Pure-expression metadata over a binary column — byte length, header
     * prefix and content hash; runs codegen'd inside the scan.
     * (DuckDB has no md5(BLOB), so the content hash is md5 of the
@@ -42,28 +36,6 @@ object Multimodal {
     df.withColumn("byte_len", octet_length(col(binCol)).cast("long"))
       .withColumn("header_hex", upper(substring(hex(col(binCol)), 1, 16)))
       .withColumn("content_md5", md5(upper(hex(col(binCol)))))
-
-  /** STUB — deterministic fake decode standing in for a real media
-    * decoder. Derives "dimensions" from the payload hash so tests are
-    * reproducible. Replace the body (only) with a real decode to go to
-    * production; signature and batching stay the same.
-    */
-  def decodeStub(r: MediaRecord): MediaFeatures = {
-    val h = java.security.MessageDigest.getInstance("MD5").digest(r.payload)
-    def b(i: Int) = h(i) & 0xff
-    MediaFeatures(r.media_id, r.media_type, r.payload.length.toLong,
-      width = 16 * (1 + b(0) % 64), height = 16 * (1 + b(1) % 64),
-      n_frames = if (r.media_type == "video") 1 + b(2) % 240 else 1)
-  }
-
-  /** Batch feature extraction: partition-preserving `mapPartitions` so a
-    * real decoder can amortize per-batch setup (model load, ffmpeg
-    * process) exactly like a Pandas-UDF batch would.
-    */
-  def decodeFeatures(ds: Dataset[MediaRecord]): Dataset[MediaFeatures] = {
-    import ds.sparkSession.implicits._
-    ds.mapPartitions { it => it.map(decodeStub) }
-  }
 
   /** Decoded image features: real dimensions + per-channel means. */
   case class ImageFeatures(media_id: Long, width: Int, height: Int,
@@ -95,35 +67,15 @@ object Multimodal {
     }
   }
 
-  /** Batch image feature extraction — the real-decoder face of
-    * [[decodeFeatures]]: partition-preserving, undecodable payloads drop
-    * (a production pipeline would route them to an error channel).
+  /** Batch image feature extraction: partition-preserving
+    * `mapPartitions` (a decoder amortizes per-batch setup, as a
+    * Pandas-UDF batch would); undecodable payloads drop (a production
+    * pipeline would route them to an error channel).
     */
   def imageFeatures(ds: Dataset[MediaRecord]): Dataset[ImageFeatures] = {
     import ds.sparkSession.implicits._
     ds.mapPartitions(_.flatMap(r =>
       decodeImage(r.payload).map(_.copy(media_id = r.media_id))))
-  }
-
-  /** Real image resize (Graphics2D, then PNG re-encode) — the
-    * feature-extract/thumbnail stage of a multimodal pipeline, batched
-    * per partition like a Pandas-UDF would be.
-    */
-  def resizeImages(ds: Dataset[MediaRecord], w: Int, h: Int): Dataset[MediaRecord] = {
-    import ds.sparkSession.implicits._
-    ds.mapPartitions(_.flatMap { r =>
-      val src = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(r.payload))
-      if (src == null) None
-      else {
-        val dst = new java.awt.image.BufferedImage(w, h,
-          java.awt.image.BufferedImage.TYPE_INT_RGB)
-        val g = dst.createGraphics()
-        try g.drawImage(src, 0, 0, w, h, null) finally g.dispose()
-        val out = new java.io.ByteArrayOutputStream()
-        javax.imageio.ImageIO.write(dst, "png", out)
-        Some(MediaRecord(r.media_id, r.media_type, out.toByteArray))
-      }
-    })
   }
 
   /** Deterministic PNG fixture: a solid `(r,g,b)` image of `w`×`h` —
@@ -156,8 +108,8 @@ object Multimodal {
     * strictly greater. Bit index `i = gy*(gw-1)+gx`; bits ≥ 32 land in
     * `hash_hi`. Raw-sum comparison equals the textbook mean comparison
     * when `width % gw == 0 && height % gh == 0` (equal cell areas) —
-    * the intended use is hashing [[resizeImages]] output or fixtures
-    * built on a multiple of the grid. A uniform brightness shift
+    * the intended use is hashing images resized to, or fixtures built
+    * on, a multiple of the grid. A uniform brightness shift
     * leaves every comparison unchanged, which is exactly the
     * invariance a byte-level hash (md5) lacks.
     */
@@ -469,15 +421,6 @@ object Multimodal {
     bb.array()
   }
 
-  /** Frame sampling plumbing for video-like payloads: emit every
-    * `stride`-th frame index up to `n_frames` (the decode stub's frame
-    * count), as (media_id, frame_idx) — the shape a real frame extractor
-    * would fan out to.
-    */
-  def sampleFrames(features: Dataset[MediaFeatures], stride: Int): DataFrame =
-    features.toDF().select(col("media_id"),
-      explode(sequence(lit(0), col("n_frames") - 1, lit(stride))).as("frame_idx"))
-
   /** One decoded (sampled) video frame: real dimensions + exact
     * per-channel means.
     */
@@ -559,9 +502,8 @@ object Multimodal {
     } catch { case _: Exception => Nil }
   }
 
-  /** Batch sampled-frame extraction — the real-decoder face of
-    * [[sampleFrames]]: partition-preserving, one row per sampled frame,
-    * undecodable payloads drop.
+  /** Batch sampled-frame extraction: partition-preserving, one row per
+    * sampled frame, undecodable payloads drop.
     */
   def videoFrameFeatures(ds: Dataset[MediaRecord], stride: Int): Dataset[VideoFrame] = {
     import ds.sparkSession.implicits._

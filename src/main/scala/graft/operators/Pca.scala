@@ -1,90 +1,23 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-import org.apache.spark.sql.expressions.Aggregator
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Distributed PCA / whitening over an embedding column — the
-  * dimensionality-reduction step of an embedding pipeline (dedup
-  * preprocessing, ANN index compression, feature whitening), shaped for
-  * scale:
-  *
-  *  - the heavy pass is ONE typed aggregation ([[MomentsAgg]]) that
-  *    folds every partition into a `1 + d + d(d+1)/2` double buffer
-  *    (count, per-dim sums, upper-triangle Gram sums). Map-side
-  *    combine gives one buffer per partition and the shuffle carries
-  *    only those — no explode, no join, no d× row amplification; the
-  *    corpus is read once whatever its size;
-  *  - the d×d eigendecomposition runs on the driver (cyclic Jacobi) —
-  *    covariance is dimension-sized, not data-sized, the same driver
-  *    footprint class as k-means centroids;
-  *  - projection / whitening broadcast the k×d component matrix and
-  *    run as per-row HOF folds in the scan stage.
-  *
-  * [[covarianceExact]] is the slow engine-independent reference
-  * (DECIMAL moment sums, the q63 discipline): it is what the SQL
-  * oracle can express, and the spec pins the fast aggregator to it.
+/** Covariance over an embedding column — the first step of PCA /
+  * whitening in an embedding pipeline (dedup preprocessing, ANN index
+  * compression, feature whitening). [[covarianceExact]] uses DECIMAL
+  * moment sums (the q63 discipline), so the SQL oracle can express it
+  * and both engines agree bit-for-bit (q99). The eigendecomposition is
+  * dimension-sized driver work and is not part of the library.
   */
 object Pca {
-
-  /** One-pass moments: (n, Σx_i, Σx_i·x_j upper triangle). */
-  private[operators] class MomentsAgg(d: Int)
-      extends Aggregator[Array[Float], Array[Double], Array[Double]] {
-    private val len = 1 + d + d * (d + 1) / 2
-    override def zero: Array[Double] = new Array[Double](len)
-    override def reduce(b: Array[Double], v: Array[Float]): Array[Double] = {
-      require(v != null && v.length == d, s"expected dim $d, got ${if (v == null) "null" else v.length}")
-      b(0) += 1.0
-      var i = 0
-      var g = 1 + d
-      while (i < d) {
-        val xi = v(i).toDouble
-        b(1 + i) += xi
-        var j = i
-        while (j < d) { b(g) += xi * v(j); g += 1; j += 1 }
-        i += 1
-      }
-      b
-    }
-    override def merge(a: Array[Double], b: Array[Double]): Array[Double] = {
-      var i = 0
-      while (i < len) { a(i) += b(i); i += 1 }
-      a
-    }
-    override def finish(r: Array[Double]): Array[Double] = r
-    override def bufferEncoder = ExpressionEncoder[Array[Double]]()
-    override def outputEncoder = ExpressionEncoder[Array[Double]]()
-  }
-
-  /** Result of the one-pass moments fold, reassembled driver-side. */
-  case class Moments(n: Long, mean: Array[Double], cov: Array[Array[Double]])
-
-  /** Population covariance (divide by n) from one distributed pass.
-    * `dim` must match every vector (fail-fast inside the fold).
-    */
-  def moments(df: DataFrame, vecCol: String, dim: Int): Moments = {
-    val agg = udaf(new MomentsAgg(dim))
-    val buf = df.select(agg(col(vecCol)).as("m")).collect()(0)
-      .getAs[scala.collection.Seq[Double]](0).toArray
-    val n = buf(0).toLong
-    require(n > 0, "moments over an empty frame")
-    val mean = Array.tabulate(dim)(i => buf(1 + i) / n)
-    val cov = Array.ofDim[Double](dim, dim)
-    var g = 1 + dim
-    for (i <- 0 until dim; j <- i until dim) {
-      val c = buf(g) / n - mean(i) * mean(j)
-      cov(i)(j) = c; cov(j)(i) = c; g += 1
-    }
-    Moments(n, mean, cov)
-  }
 
   /** Engine-independent covariance: DECIMAL(18,10)-quantized inputs,
     * exact decimal moment sums (products carry scale 20 without
     * precision loss), final arithmetic in double, rounded. Output
-    * (i, j, cov) for the upper triangle, 0-based dims. This is the
-    * oracle-expressible face; at scale prefer [[moments]] (this path
-    * shuffles the exploded (row, dim) table for the self-join).
+    * (i, j, cov) for the upper triangle, 0-based dims. The path
+    * shuffles the exploded (row, dim) table for the self-join, so its
+    * cost grows with rows × d².
     */
   def covarianceExact(df: DataFrame, vecCol: String, roundTo: Int = 6): DataFrame = {
     val dec = "decimal(18,10)"
@@ -106,89 +39,5 @@ object Pca {
         // of a rounded-to-zero negative)
         (round((col("sxy") - col("sxi") * col("sxj") / n) / n, roundTo) +
           lit(0.0)).as("cov"))
-  }
-
-  /** Top-k eigenpairs of a symmetric matrix by cyclic Jacobi rotation —
-    * deterministic (fixed sweep order, fixed tolerance), driver-side,
-    * O(d³) for dimension-sized d. Eigenvectors carry a sign convention
-    * (largest-|component| positive) so results are reproducible.
-    * Returns (eigenvalues desc, row-major eigenvectors).
-    */
-  def topComponents(cov: Array[Array[Double]], k: Int):
-      (Array[Double], Array[Array[Double]]) = {
-    val d = cov.length
-    require(k >= 1 && k <= d, s"k must be in [1,$d], got $k")
-    val a = Array.tabulate(d, d)((i, j) => cov(i)(j))
-    val v = Array.tabulate(d, d)((i, j) => if (i == j) 1.0 else 0.0)
-    var sweep = 0
-    var off = offDiag(a)
-    while (off > 1e-12 && sweep < 64) {
-      for (p <- 0 until d - 1; q <- p + 1 until d if math.abs(a(p)(q)) > 1e-15) {
-        // 2x2 symmetric Schur rotation annihilating a(p)(q)
-        val theta = (a(q)(q) - a(p)(p)) / (2.0 * a(p)(q))
-        val t =
-          if (theta == 0.0) 1.0
-          else math.signum(theta) / (math.abs(theta) + math.sqrt(theta * theta + 1.0))
-        val c = 1.0 / math.sqrt(t * t + 1.0)
-        val s = t * c
-        for (i <- 0 until d) {
-          val aip = a(i)(p); val aiq = a(i)(q)
-          a(i)(p) = c * aip - s * aiq
-          a(i)(q) = s * aip + c * aiq
-        }
-        for (i <- 0 until d) {
-          val api = a(p)(i); val aqi = a(q)(i)
-          a(p)(i) = c * api - s * aqi
-          a(q)(i) = s * api + c * aqi
-        }
-        for (i <- 0 until d) {
-          val vip = v(i)(p); val viq = v(i)(q)
-          v(i)(p) = c * vip - s * viq
-          v(i)(q) = s * vip + c * viq
-        }
-      }
-      off = offDiag(a)
-      sweep += 1
-    }
-    val order = (0 until d).sortBy(i => -a(i)(i)).take(k)
-    val vals = order.map(i => a(i)(i)).toArray
-    val vecs = order.map { e =>
-      val col = Array.tabulate(d)(i => v(i)(e))
-      val m = col.indices.maxBy(i => math.abs(col(i)))
-      if (col(m) < 0) col.map(-_) else col
-    }.toArray
-    (vals, vecs)
-  }
-
-  private def offDiag(a: Array[Array[Double]]): Double = {
-    var s = 0.0
-    for (i <- a.indices; j <- a.indices if i != j) s += a(i)(j) * a(i)(j)
-    math.sqrt(s)
-  }
-
-  /** Center on `mean` and project onto `components` (k×d, broadcast as
-    * literals): adds pc1..pck columns, each a per-row left-to-right HOF
-    * fold (deterministic on any engine). `whiten` scales component c by
-    * 1/sqrt(λ_c) so projected dims have unit variance.
-    */
-  def project(df: DataFrame, vecCol: String, mean: Array[Double],
-              components: Array[Array[Double]],
-              eigenvalues: Array[Double] = Array.empty,
-              whiten: Boolean = false): DataFrame = {
-    require(!whiten || eigenvalues.length == components.length,
-      "whitening needs one eigenvalue per component")
-    val d = mean.length
-    val centered: Column = zip_with(
-      col(vecCol).cast("array<double>"),
-      array(mean.map(lit): _*), (x, m) => x - m)
-    val withC = df.withColumn("__c", centered)
-    components.zipWithIndex.foldLeft(withC) { case (acc, (comp, ci)) =>
-      require(comp.length == d, s"component $ci has dim ${comp.length}, expected $d")
-      val scale = if (whiten) 1.0 / math.sqrt(math.max(eigenvalues(ci), 1e-300)) else 1.0
-      val dot = aggregate(
-        zip_with(col("__c"), array(comp.map(lit): _*), (x, w) => x * w),
-        lit(0.0), (a, x) => a + x)
-      acc.withColumn(s"pc${ci + 1}", dot * lit(scale))
-    }.drop("__c")
   }
 }

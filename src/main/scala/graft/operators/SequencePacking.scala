@@ -33,15 +33,4 @@ object SequencePacking {
         expr(s"(start_offset + `$tokenCountCol` - 1L) div ${budget}L"))
       .withColumn("n_seqs", col("last_seq") - col("first_seq") + 1L)
   }
-
-  /** The exploded membership face: one row per (document, sequence) —
-    * what a sequence-building job joins against to fetch each
-    * sequence's documents.
-    */
-  def sequenceMembers(docs: DataFrame, tokenCountCol: String,
-                      order: Seq[Column], budget: Long): DataFrame =
-    packByBudget(docs, tokenCountCol, order, budget)
-      .withColumn("seq_id",
-        explode(sequence(col("first_seq"), col("last_seq"))))
-      .drop("first_seq", "last_seq", "n_seqs")
 }

@@ -98,7 +98,7 @@ object Similarity {
 
   /** IVF probe against ALREADY-BUILT coarse centroids (`(bucket,
     * centroid)`) — the entry point for a trained quantizer
-    * ([[KMeans.ivfTopKTrained]]) or any stored index, so the probe
+    * ([[KMeans.fitCentroids]]) or any stored index, so the probe
     * never recomputes what training just produced.
     */
   def ivfTopKWithCentroids(queries: DataFrame, corpus: DataFrame,
@@ -113,47 +113,6 @@ object Similarity {
       .filter(col("crank") <= nprobe)
       .select(col(qId), col(qVec), col("bucket"))
     val scored = corpus.join(broadcast(probed), col(bucketCol) === col("bucket"))
-      .withColumn("sim", simOrNull(col(qVec), col(cVec)))
-    scored.withColumn("rank", row_number().over(
-        Window.partitionBy(col(qId)).orderBy(col("sim").desc, col(cId))))
-      .filter(col("rank") <= k)
-      .select(col(qId), col("rank").cast("long").as("rank"), col(cId).as("neighbor_id"),
-        round(col("sim"), 6).as("sim"))
-  }
-
-  /** Persist the IVF index as a reusable artifact — the ANN analog of
-    * [[graft.operators.TextDedup.writeLshIndex]]: centroids are computed
-    * ONCE per corpus (`<path>/centroids`, tiny) and the vectors are laid
-    * out by coarse bucket (`<path>/vectors`, partitioned by bucket so a
-    * probe prunes to nprobe/nlist of the files at scan time).
-    */
-  def writeIvfIndex(corpus: DataFrame, path: String,
-                    bucketCol: String = "label",
-                    cId: String = "vec_id", cVec: String = "embedding"): Unit = {
-    centroids(corpus, bucketCol, cVec)
-      .write.mode("overwrite").parquet(s"$path/centroids")
-    corpus.select(col(bucketCol).as("bucket"), col(cId), col(cVec))
-      .write.mode("overwrite").partitionBy("bucket").parquet(s"$path/vectors")
-  }
-
-  /** IVF probe against a stored index: rank stored centroids per query
-    * (broadcast both — they are tiny), then scan ONLY the probed
-    * buckets' files (partition pruning on `bucket`) for the exact
-    * rerank. Result-identical to [[ivfTopK]] over the same corpus.
-    */
-  def probeIvfIndex(queries: DataFrame, path: String, k: Int, nprobe: Int,
-                    qId: String = "query_id", qVec: String = "query_vec",
-                    cId: String = "vec_id", cVec: String = "embedding"): DataFrame = {
-    val spark = queries.sparkSession
-    val cents = spark.read.parquet(s"$path/centroids")
-    val probed = queries.crossJoin(broadcast(cents))
-      .withColumn("csim", simOrNull(col(qVec), col("centroid")))
-      .withColumn("crank", row_number().over(
-        Window.partitionBy(col(qId)).orderBy(col("csim").desc, col("bucket"))))
-      .filter(col("crank") <= nprobe)
-      .select(col(qId), col(qVec), col("bucket"))
-    val vectors = spark.read.parquet(s"$path/vectors")
-    val scored = vectors.join(broadcast(probed), Seq("bucket"))
       .withColumn("sim", simOrNull(col(qVec), col(cVec)))
     scored.withColumn("rank", row_number().over(
         Window.partitionBy(col(qId)).orderBy(col("sim").desc, col(cId))))
@@ -208,7 +167,9 @@ object Similarity {
   }
 
   /** Pack sign bits into `bands` keys, `r` consecutive bits MSB-first
-    * per band. Callers MUST materialize `bits` as its own column first —
+    * per band. Two vectors at angle θ agree on a bit with probability
+    * 1 − θ/π, so near-identical vectors share a band key with high
+    * probability. Callers MUST materialize `bits` as its own column first —
     * each band key reads `r` positions, and an inlined bits expression
     * would recompute every dot product per reference.
     */
@@ -218,35 +179,17 @@ object Similarity {
         .reduce(_ + _)
     }: _*)
 
-  /** Per-vector LSH band keys from hyperplane sign bits: band b packs
-    * its `planes/bands` consecutive bits MSB-first into a small integer.
-    * Two vectors at angle θ agree on a bit with probability 1 − θ/π, so
-    * near-identical vectors land in the same band key with high
-    * probability while the key space partitions hot buckets into
-    * 2^(planes/bands) sub-buckets per band. (Convenience composition for
-    * tests/one-off use; the scale path materializes the bits column —
-    * see [[nearDupPairsLsh]].)
-    */
-  def hyperplaneBandKeys(vec: Column, weights: Array[Array[Double]],
-                         bands: Int): Column =
-    packBandKeys(hyperplaneBits(vec, weights), bands, weights.length / bands)
-
   /** Scale path for embedding near-dup: candidates must share the coarse
     * bucket AND at least one hyperplane-LSH band key, then verify with
     * exact cosine (approximate recall, exact precision — same contract as
     * the MinHash text tier). The (bucket, band, key) join space is
     * 2^(planes/bands) finer than the coarse bucket alone, so one hot
     * bucket no longer degenerates to all-pairs.
-    *
-    * @param staging how the multiply-read keyed/banded corpus frame is
-    *        held: in-memory cache by default; `Staging.Spill(DISK_ONLY)`
-    *        or `Staging.Artifact(dir)` for corpus-scale runs.
     */
   def nearDupPairsLsh(corpus: DataFrame, threshold: Double,
                       numPlanes: Int = 24, bands: Int = 4, dim: Int = 64,
                       bucketCol: String = "label",
-                      cId: String = "vec_id", cVec: String = "embedding",
-                      staging: Staging.Mode = Staging.Memory): DataFrame = {
+                      cId: String = "vec_id", cVec: String = "embedding"): DataFrame = {
     require(numPlanes % bands == 0,
       s"numPlanes ($numPlanes) must divide into bands ($bands)")
     // a dim mismatch would null-pad every zip_with product, turn every
@@ -256,7 +199,9 @@ object Similarity {
       require(r.getInt(0) == dim,
         s"dim ($dim) does not match the embedding length (${r.getInt(0)})")
     }
-    val keyed = Staging.stage(
+    // cached, not localCheckpoint — checkpoint size stats would break
+    // broadcast planning downstream; Retained.releaseAll reclaims
+    val keyed = Retained.track(
       corpus.select(col(bucketCol).as("bk"), col(cId).as("id"), col(cVec).as("v"))
         // bits materialized as their own projection so the per-band
         // element_at reads scan a computed array instead of re-deriving
@@ -264,12 +209,8 @@ object Similarity {
         // multi-referenced aliases materialized)
         .withColumn("__hp_bits", hyperplaneBits(col("v"), hyperplaneWeights(numPlanes, dim)))
         .withColumn("bandkeys", packBandKeys(col("__hp_bits"), bands, numPlanes / bands))
-        .drop("__hp_bits"),
-      // default Memory = cache, not localCheckpoint — checkpoint size
-      // stats would break broadcast planning downstream; clearCache()
-      // reclaims. Corpus-scale runs elect Spill(DISK_ONLY) or Artifact
-      // (see [[Staging]]).
-      staging, "neardup_keyed")
+        .drop("__hp_bits")
+        .cache())
     val exploded = keyed.select(col("bk"), col("id"),
       posexplode(col("bandkeys")).as(Seq("band_idx", "band_key")))
     val cand = exploded.as("a").join(exploded.as("b"),

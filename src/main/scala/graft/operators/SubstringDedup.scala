@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -69,15 +69,5 @@ object SubstringDedup {
         when(col("n_tokens") > 0,
           round(col("covered_tokens").cast("double") /
             col("n_tokens").cast("double"), 6)).otherwise(lit(0.0)))
-  }
-
-  /** The filtering face: documents whose duplicated-span coverage is
-    * below `maxDupFrac` (drop the heavily-repeated ones).
-    */
-  def dropHeavilyDuplicated(docs: DataFrame, idCol: String, textCol: String,
-                            w: Int, maxDupFrac: Double): DataFrame = {
-    val bad = duplicatedSpanStats(docs, idCol, textCol, w)
-      .filter(col("dup_frac") > maxDupFrac).select(col("id"))
-    docs.join(bad, docs(idCol) === bad("id"), "left_anti")
   }
 }

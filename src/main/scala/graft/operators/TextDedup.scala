@@ -237,26 +237,18 @@ object TextDedup {
     * enumeration cost tracks prefix collisions instead of every
     * co-shingled pair — the difference between quadratic blowup and
     * linear behavior on large corpora.
-    *
-    * @param staging how the two multiply-read intermediates (shingle
-    *        sets, ranked prefixes) are held: in-memory cache by default;
-    *        `Staging.Spill(DISK_ONLY)` or `Staging.Artifact(dir)` for
-    *        corpus-scale runs (see [[Staging]]).
     */
   def jaccardPairsPrefix(docs: DataFrame, idCol: String, textCol: String,
-                         k: Int = 3, threshold: Double = 0.5,
-                         staging: Staging.Mode = Staging.Memory): DataFrame = {
-    val sets = Staging.stage(docs.select(col(idCol).as("id"),
+                         k: Int = 3, threshold: Double = 0.5): DataFrame = {
+    // cached, NOT localCheckpoint: a checkpoint's LogicalRDD reports
+    // default (huge) size stats, which would demote the verify-stage
+    // broadcast joins to sort-merge (~4x slower here).
+    // Retained.releaseAll reclaims.
+    val sets = Retained.track(docs.select(col(idCol).as("id"),
         array_distinct(TextShingles.shingles(TextAnalysis.tokens(col(textCol)), k))
           .as("shingles"))
-      .withColumn("n", size(col("shingles"))),
-      // default Memory = cache, NOT localCheckpoint: a checkpoint's
-      // LogicalRDD reports default (huge) size stats, which would demote
-      // the verify-stage broadcast joins to sort-merge (~4x slower
-      // here). Long-lived sessions reclaim with
-      // spark.catalog.clearCache(); 100 TB runs elect Spill(DISK_ONLY)
-      // or Artifact (see [[Staging]]).
-      staging, "jaccard_sets")
+      .withColumn("n", size(col("shingles")))
+      .cache())
     val exploded = sets.select(col("id"), col("n"), explode(col("shingles")).as("sh"))
     val dfreq = exploded.groupBy("sh").agg(count(lit(1)).as("df"))
     val ranked = exploded.join(dfreq, "sh")
@@ -272,7 +264,7 @@ object TextDedup {
     // both sides of the candidate self-join read this frame; without
     // materialization each side would redo explode → df-join → window
     // (two full shuffles of every shingle, twice)
-    val rankedM = Staging.stage(ranked, staging, "jaccard_prefixes")
+    val rankedM = Retained.track(ranked.cache())
     // Candidate join with the full PPJoin filter stack — on a
     // collision-heavy corpus the prefix filter alone admits hundreds of
     // candidates per surviving pair, and these two predicates (both

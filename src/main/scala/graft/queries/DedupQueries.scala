@@ -237,11 +237,7 @@ private[graft] trait DedupQueries { this: SparkEntry.type =>
   // ---------------------------------------------------------------- q99
   /** PCA covariance over the embedding corpus — the oracle-expressible
     * face of [[operators.Pca]]: DECIMAL-exact moment sums make the
-    * upper-triangle covariance engine-independent. The 100 TB path is
-    * `Pca.moments` (ONE typed aggregation, d²-sized partials, no
-    * explode/join) — spec-pinned equal to this declarative reference;
-    * eigendecomposition + whitening are dimension-sized driver work,
-    * spec-pinned on their invariants (IndexingSpec).
+    * upper-triangle covariance engine-independent.
     */
   def q99PcaCovariance(s: SparkSession, d: String): DataFrame =
     operators.Pca.covarianceExact(
@@ -440,7 +436,7 @@ private[graft] trait DedupQueries { this: SparkEntry.type =>
     * truncated, so the untruncated original must win its cluster).
     * Third consumer of the shared PPJoin pair artifact: when q24/q67
     * already ran, this costs clustering + one broadcast join only
-    * ([[operators.ConnectedComponents.keepBestRepresentatives]]).
+    * ([[operators.ConnectedComponents.keepBestFromLabels]]).
     */
   def q104CanonicalDedup(s: SparkSession, d: String): DataFrame = {
     val corpus = dedupCorpus(s, d)

@@ -39,8 +39,9 @@ private[graft] trait EntrySupport { this: SparkEntry.type =>
 
   // ---------------------------------------------------------------- q24
   /** CONTENT-ADDRESSED parquet artifact store for pipeline intermediates
-    * shared by several queries ([[operators.Staging.Artifact]] pattern):
-    * whichever consumer runs first pays the generation pass, everyone
+    * shared by several queries (written once as parquet, read back with
+    * file-based size statistics): whichever consumer runs first pays the
+    * generation pass, everyone
     * else — including LATER SESSIONS — reads parquet.
     *
     * Addressing: an artifact lives at

@@ -108,8 +108,8 @@ private[graft] trait GraphQueries { this: SparkEntry.type =>
     * < 3 surviving neighbors". A FIXED round budget makes the result a
     * closed-form function of the input (idempotent once converged —
     * 12 ≥ the peel depth at every test scale), so the oracle replays
-    * the rounds as unrolled CTEs; the fixpoint variant
-    * ([[operators.KCore.kCore]]) is spec-pinned against brute force.
+    * the rounds as unrolled CTEs; with rounds ≥ the peel depth the
+    * result is the true k-core, spec-pinned against brute force.
     * Sixth consumer of the shared co-purchase edge artifact.
     */
   def q148KcorePeel(s: SparkSession, d: String): DataFrame =

@@ -23,7 +23,7 @@ import graft.operators.Merge.{DuplicateMode, ImportMode, Key}
   */
 object JdbcMerge {
 
-  case class MergeStats(staged: Long, duplicates: Long, inserted: Long, updated: Long)
+  case class MergeStats(deleted: Long, duplicates: Long, inserted: Long, updated: Long)
 
   private def q(n: String) = s""""${n.toUpperCase}""""
 
@@ -86,11 +86,12 @@ object JdbcMerge {
         c.setAutoCommit(false)
         val st = c.createStatement()
         try {
+          var deleted = 0L
           var inserted = 0L
           var updated = 0L
           mode match {
             case ImportMode.ClearInsert =>
-              JdbcSink.clearTable(c, table)
+              deleted = JdbcSink.clearTable(c, table)
               inserted = st.executeUpdate(insertSql).toLong
             case ImportMode.Insert =>
               // sourceOnly appends everything (Spark path: insertAll)
@@ -108,7 +109,7 @@ object JdbcMerge {
               }
           }
           c.commit()
-          MergeStats(stagedCount, rawCount - stagedCount, inserted, updated)
+          MergeStats(deleted, rawCount - stagedCount, inserted, updated)
         } catch {
           case e: java.sql.SQLException => c.rollback(); throw e
         } finally st.close()

@@ -6,7 +6,6 @@ import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
-import org.apache.spark.sql.types.StructType
 
 import graft.operators.Merge
 import graft.operators.Merge.{DuplicateMode, ImportMode, Key}
@@ -47,15 +46,6 @@ object StreamingImport {
   private val ShufflePartitionsKey = "spark.sql.shuffle.partitions"
   private val RocksDbProvider =
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-
-  /** Continuous CSV-directory ingest (the directory-watch analog of
-    * multi-file import).
-    */
-  def csvStream(spark: SparkSession, dir: String, schema: StructType,
-                separator: String = ";", header: Boolean = true): DataFrame =
-    spark.readStream.schema(schema)
-      .option("sep", separator).option("header", header.toString)
-      .csv(dir)
 
   /** Per-micro-batch merge into a target maintained by `applyBatch` —
     * each batch runs the full importMerge matrix exactly like one
@@ -203,20 +193,6 @@ object StreamingImport {
       }
   }
 
-  /** Cross-batch dedup with BOUNDED state: duplicates are dropped only
-    * while their key can still legally reappear — once the event-time
-    * watermark passes a key's last occurrence plus `delay`, its state is
-    * evicted (Spark's `dropDuplicatesWithinWatermark`). The unbounded
-    * [[dedupStream]] is exact forever but its state grows with distinct
-    * keys; this variant is the 100 TB-stream configuration, trading
-    * "duplicates arriving later than the watermark delay pass through"
-    * for state that tracks only the active window.
-    */
-  def dedupStreamWithinWatermark(stream: DataFrame, keyCols: Seq[String],
-                                 tsCol: String, delay: String): DataFrame =
-    stream.withWatermark(tsCol, delay)
-      .dropDuplicatesWithinWatermark(keyCols)
-
   /** Watermarked STREAM-STREAM interval join: each left event pairs
     * with right events of the same key whose event time lies in
     * `[leftTs + lowerBound, leftTs + upperBound]` (bounds in seconds,
@@ -263,165 +239,6 @@ object StreamingImport {
                        joinCond: org.apache.spark.sql.Column,
                        joinType: String = "inner"): DataFrame =
     stream.join(broadcast(dim), joinCond, joinType)
-
-  /** Streaming incremental near-dup: every micro-batch of documents
-    * probes the STANDING LSH index
-    * ([[graft.operators.TextDedup.probeLshIndex]]) — the corpus is never
-    * re-hashed; only the arriving batch's band keys broadcast. Matches
-    * (new_id, corpus_id, jaccard) go to `onMatches` per batch — route to
-    * a quarantine table, a drop filter, or metrics.
-    */
-  def nearDupStream(docs: DataFrame, idCol: String, textCol: String,
-                    indexPath: String, threshold: Double,
-                    onMatches: DataFrame => Unit): DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-      onMatches(graft.operators.TextDedup.probeLshIndex(
-        batch, idCol, textCol, indexPath, threshold = threshold))
-    }
-
-  /** End-to-end STREAMING curation — the streaming analog of the q92
-    * batch flagship, composed from the same building blocks:
-    *
-    *  1. quality gate: the batch pipeline's scan-stage
-    *     [[graft.functions.TextAnalysis.qualityScore]] filter — pure
-    *     per-row work, no state;
-    *  2. cross-batch exact dedup: content fingerprint
-    *     ([[graft.functions.TextAnalysis.fingerprintMd5]]) through the
-    *     keyed-state gate of [[dedupStream]] — the first document with a
-    *     fingerprint passes, every later copy in ANY micro-batch drops
-    *     (state = one boolean per distinct fingerprint);
-    *  3. token accounting: each surviving document carries its token
-    *     count for downstream budget control.
-    *
-    * Returns the surviving stream `(id, text, quality, n_tokens)`.
-    * State scales with distinct content, not stream volume; every
-    * stage is identical to its batch counterpart, so a document set
-    * replayed as a stream yields exactly the batch pipeline's survivors.
-    */
-  def curationStream(docs: DataFrame, idCol: String, textCol: String,
-                     minQuality: Double): org.apache.spark.sql.Dataset[(String, String, Double, Long)] = {
-    val ta = graft.functions.TextAnalysis
-    import docs.sparkSession.implicits._
-    val gated = docs
-      .withColumn("__quality", ta.qualityScore(col(textCol)))
-      .filter(col("__quality") >= minQuality)
-      .select(col(idCol).cast("string"), col(textCol).cast("string"),
-        col("__quality"), ta.tokenCount(col(textCol)).cast("long"),
-        ta.fingerprintMd5(col(textCol)))
-      .as[(String, String, Double, Long, String)]
-    dedupStream[String, (String, String, Double, Long, String)](gated, _._5)
-      .map(r => (r._1, r._2, r._3, r._4))
-  }
-
-  /** Streaming face of the batch rolling-anomaly gate
-    * ([[graft.operators.RollingAnomaly]]): per-key state is the ring of
-    * the last `window` integer values, and each arriving event is
-    * flagged with the SAME cross-multiplied integer test
-    * `(n·v − s)² > k²·(n·q − s²)` — so a stream replayed in order
-    * yields exactly the batch operator's flags (spec-pinned). Within a
-    * micro-batch, a key's rows process in `(ts, tie)` order; ACROSS
-    * batches, arrival order stands in for event order — the same
-    * concession every keyed-state operator here makes (late events
-    * score against the state as of their arrival).
-    *
-    * Emits `(key, ts, tie, value, window_n)` for flagged events only.
-    * State is `window` longs per active key — bounded, independent of
-    * stream volume.
-    */
-  def anomalyStream(events: org.apache.spark.sql.Dataset[(Long, Long, Long, Long)],
-                    window: Int = 8, minWindow: Int = 4,
-                    sigmas: Int = 3): org.apache.spark.sql.Dataset[(Long, Long, Long, Long, Long)] = {
-    require(window >= minWindow && minWindow >= 2,
-      s"need window >= minWindow >= 2, got ($window, $minWindow)")
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    import events.sparkSession.implicits._
-    val sig2 = sigmas.toLong * sigmas
-    events.groupByKey(_._1)
-      .flatMapGroupsWithState[List[Long], (Long, Long, Long, Long, Long)](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key: Long, rows: Iterator[(Long, Long, Long, Long)],
-         state: GroupState[List[Long]]) =>
-          var ring = state.getOption.getOrElse(Nil) // newest value last
-          val out = List.newBuilder[(Long, Long, Long, Long, Long)]
-          for ((_, ts, tie, v) <- rows.toSeq.sortBy(r => (r._2, r._3))) {
-            val n = ring.size.toLong
-            if (n >= minWindow) {
-              val s = ring.sum
-              val q = ring.iterator.map(x => x * x).sum
-              if ((n * v - s) * (n * v - s) > sig2 * (n * q - s * s))
-                out += ((key, ts, tie, v, n))
-            }
-            ring = (ring :+ v).takeRight(window)
-          }
-          state.update(ring)
-          out.result().iterator
-      }
-  }
-
-  /** Streaming count-min sketch: the SAME (row_idx, bucket) counter
-    * aggregation as [[graft.operators.Sketches.cmsSketch]], run as an
-    * incremental streaming aggregation — Structured Streaming's state
-    * store does the cell-wise merge that makes CMS mergeable, so the
-    * maintained counters equal the batch sketch of everything ever
-    * streamed (spec-pinned batch parity). Read with
-    * `outputMode(Complete)` into a memory sink, or `Update` to emit
-    * only touched cells per micro-batch.
-    */
-  def cmsStream(values: DataFrame, valueCol: String, depth: Int,
-                width: Int): DataFrame =
-    graft.operators.Sketches.cmsSketch(values, valueCol, depth, width)
-
-  /** Streaming HLL registers: the SAME bucket/max-rho aggregation as
-    * [[graft.operators.Sketches.hllRegisters]], run incrementally —
-    * per-bucket `max` is exactly the HLL merge, so the state store
-    * maintains the registers of everything ever streamed (spec-pinned
-    * batch parity; feed the complete-mode table to
-    * `Sketches.hllEstimate` at read time).
-    */
-  def hllStream(values: DataFrame, groupCols: Seq[String], valueCol: String,
-                p: Int): DataFrame =
-    graft.operators.Sketches.hllRegisters(values, groupCols, valueCol, p)
-
-  /** Streaming histogram sketch: the SAME bin/count aggregation as
-    * [[graft.operators.Sketches.histSketch]] — per-bin counts sum,
-    * which IS the histogram merge, so the complete-mode table equals
-    * the batch sketch of the whole stream (spec-pinned; feed to
-    * `Sketches.histQuantiles` at read time).
-    */
-  def histStream(values: DataFrame, valueCol: String,
-                 binWidth: Long): DataFrame =
-    graft.operators.Sketches.histSketch(values, valueCol, binWidth)
-
-  /** Streaming KMV sketch via `foreachBatch`: KMV's bottom-k needs a
-    * rank (no streaming-native aggregation), so each micro-batch's
-    * batch sketch merges into a STANDING sketch with the spec-pinned
-    * [[graft.operators.Sketches.kmvMerge]] law — the standing state is
-    * ≤ k rows per group (sketch-sized, never stream-sized), collected
-    * locally between batches to keep the lineage flat. `onUpdate`
-    * receives the merged sketch after every batch; the final callback
-    * value equals `kmvSketch` of the union of all batches (spec-pinned
-    * batch parity).
-    */
-  def kmvStream(values: DataFrame, groupCols: Seq[String], valueCol: String,
-                k: Int,
-                onUpdate: DataFrame => Unit): DataStreamWriter[org.apache.spark.sql.Row] = {
-    @volatile var standing: Option[DataFrame] = None
-    values.writeStream.outputMode("append").foreachBatch {
-      (batch: DataFrame, _: Long) =>
-        val spark = batch.sparkSession
-        val bs = graft.operators.Sketches.kmvSketch(batch, groupCols, valueCol, k)
-        val merged = standing match {
-          case Some(s) => graft.operators.Sketches.kmvMerge(s, bs, groupCols, k)
-          case None    => bs
-        }
-        // k-sized per group: localize to cut lineage growth across batches
-        val rows = merged.collect().toSeq
-        val flat = spark.createDataFrame(
-          spark.sparkContext.parallelize(rows, 1), merged.schema)
-        standing = Some(flat)
-        onUpdate(flat)
-    }
-  }
 
   /** Streaming ordered funnel: per-user state is one long per stage
     * (the first qualifying time, −1 = unreached) — a few words per
@@ -476,49 +293,6 @@ object StreamingImport {
     rows.groupByKey(_._1)
       .transformWithState(new RunningTotalsProcessor(),
         TimeMode.None(), OutputMode.Update())
-  }
-
-  /** Streaming heavy hitters: each micro-batch collapses to a k-slot
-    * Misra–Gries summary IN the executors
-    * ([[graft.operators.HeavyHitters.mgSummary]] — only ≤ k counters
-    * ever reach the driver), then folds into a standing summary with
-    * the mergeable-summaries merge ([[HeavyHitters.mgMerge]]). The
-    * standing state is sketch-sized forever; the classic MG guarantee
-    * holds for the whole stream (any item with true count >
-    * n_total/(k+1) is present; counters undercount by at most that) —
-    * spec-pinned against exact counts of the unioned batches.
-    *
-    * Delivery contract: foreachBatch is at-least-once, so a retried
-    * batch would be merged twice and break the never-overcounts bound;
-    * merges are therefore keyed by batchId and already-seen ids are
-    * skipped (idempotent under same-run retries). The standing summary
-    * lives in driver memory for the lifetime of ONE run: after a
-    * checkpoint RESTART it starts empty while completed batches are not
-    * replayed, so the whole-stream guarantee covers a single
-    * uninterrupted run — persist `onUpdate` output externally if the
-    * summary must survive restarts.
-    */
-  def heavyHittersStream(items: DataFrame, itemCol: String, k: Int,
-                         onUpdate: Map[String, Long] => Unit)
-      : DataStreamWriter[org.apache.spark.sql.Row] = {
-    @volatile var standing: Map[String, Long] = Map.empty
-    val merged = scala.collection.mutable.HashSet.empty[Long]
-    items.writeStream.outputMode("append").foreachBatch {
-      (batch: DataFrame, batchId: Long) =>
-        // membership check first, record only AFTER a successful merge:
-        // if mgSummary/mgMerge/onUpdate throws and the engine replays
-        // the batch (the at-least-once scenario this guard exists for),
-        // the replay must re-merge it — recording up front would skip
-        // the replay and silently lose the batch's counts, turning
-        // at-least-once into at-most-once
-        val fresh = merged.synchronized { !merged.contains(batchId) }
-        if (fresh) {
-          val bs = graft.operators.HeavyHitters.mgSummary(batch, itemCol, k)
-          standing = graft.operators.HeavyHitters.mgMerge(standing, bs, k)
-          onUpdate(standing)
-          merged.synchronized { merged.add(batchId); () }
-        }
-    }
   }
 }
 

@@ -40,7 +40,7 @@ class CliSpec extends SparkSpec {
     }
   }
 
-  test("multi-file glob with -table '*' derives tables and runs hooks once") {
+  test("multi-file glob with -table '*' derives one table per file") {
     val url = freshDb()
     val dir = SyntheticFixtures.dir("climulti")
     SyntheticFixtures.writeText(new File(dir, "t_one.csv"), "id;v\n1;x")
@@ -48,16 +48,12 @@ class CliSpec extends SparkSpec {
     val a = Main.parseArgs(Array(url, "*", new File(dir, "t_*.csv").getPath,
       "-i", "INSERT", "-create"))
     val results = MultiImporter.importGlob(spark, a.importPathOrData, url, "*",
-      a.cfg, (s, f) => Main.readSource(s, a, f),
-      MultiImporter.Hooks(
-        pre = Seq("CREATE TABLE \"HOOKLOG\" (\"X\" INTEGER)"),
-        post = Seq("INSERT INTO \"HOOKLOG\" VALUES (1)")))
+      a.cfg, (s, f) => Main.readSource(s, a, f))
     assert(results.map(_.table) == Seq("t_one", "t_two"))
     assert(results.forall(_.result.isRight))
     JdbcSink.withConnection(url) { c =>
       assert(JdbcSink.countRows(c, "t_one") == 1)
       assert(JdbcSink.countRows(c, "t_two") == 2)
-      assert(JdbcSink.countRows(c, "hooklog") == 1) // hooks ran once
     }
   }
 

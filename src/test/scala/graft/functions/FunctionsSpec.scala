@@ -226,37 +226,6 @@ class FunctionsSpec extends SparkSpec {
     assert(domainOnly == "reach me at <EMAIL> ok")
   }
 
-  test("pair staging modes (DISK_ONLY spill, parquet artifact) match the memory cache") {
-    import graft.operators.{Similarity, Staging, TextDedup}
-    import org.apache.spark.storage.StorageLevel
-    // text tier: PPJoin pair generation under each staging mode
-    val docs = spark.read.parquet(sf() + "/documents.parquet")
-      .select(col("doc_id"), col("text")).filter(col("doc_id") < 120)
-    def canonJ(df: org.apache.spark.sql.DataFrame) =
-      df.select("id1", "id2", "jaccard").as[(Long, Long, Double)].collect().sorted.toSeq
-    val mem = canonJ(TextDedup.jaccardPairsPrefix(docs, "doc_id", "text"))
-    val spill = canonJ(TextDedup.jaccardPairsPrefix(docs, "doc_id", "text",
-      staging = Staging.Spill(StorageLevel.DISK_ONLY)))
-    val artDir = java.nio.file.Files.createTempDirectory("graft_stage_j").toString
-    val art = canonJ(TextDedup.jaccardPairsPrefix(docs, "doc_id", "text",
-      staging = Staging.Artifact(artDir)))
-    assert(mem.nonEmpty && spill == mem && art == mem)
-    // embedding tier: hyperplane-LSH near-dup with planted copies
-    val e = spark.read.parquet(sf() + "/embeddings.parquet")
-      .select(col("vec_id"), col("label"), col("embedding"))
-    val corpus = e.unionAll(e.filter(col("vec_id") % 10 === 0)
-      .select((col("vec_id") + 1000000).as("vec_id"), col("label"), col("embedding")))
-    def canonS(df: org.apache.spark.sql.DataFrame) =
-      df.select("id1", "id2").as[(Long, Long)].collect().sorted.toSeq
-    val memL = canonS(Similarity.nearDupPairsLsh(corpus, threshold = 0.99))
-    val spillL = canonS(Similarity.nearDupPairsLsh(corpus, threshold = 0.99,
-      staging = Staging.Spill(StorageLevel.DISK_ONLY)))
-    val artDirL = java.nio.file.Files.createTempDirectory("graft_stage_l").toString
-    val artL = canonS(Similarity.nearDupPairsLsh(corpus, threshold = 0.99,
-      staging = Staging.Artifact(artDirL)))
-    assert(memL.nonEmpty && spillL == memL && artL == memL)
-  }
-
   test("hyperplane band keys partition a bucket and agree on copies") {
     import graft.operators.Similarity
     val w = Similarity.hyperplaneWeights(12, 4)
@@ -267,7 +236,8 @@ class FunctionsSpec extends SparkSpec {
     val df = Seq((1L, Array(1f, 2f, -3f, 0.5f)), (2L, Array(1f, 2f, -3f, 0.5f)),
         (3L, Array(-1f, -2f, 3f, -0.5f)))
       .toDF("id", "v")
-      .withColumn("keys", Similarity.hyperplaneBandKeys(col("v"), w, bands = 4))
+      .withColumn("bits", Similarity.hyperplaneBits(col("v"), w))
+      .withColumn("keys", Similarity.packBandKeys(col("bits"), bands = 4, r = 3))
     val rows = df.select("id", "keys").as[(Long, Seq[Int])].collect().sortBy(_._1)
     assert(rows(0)._2 == rows(1)._2)            // identical vectors: same keys
     assert(rows(0)._2 != rows(2)._2)            // antipodal: all bits flip
@@ -281,44 +251,6 @@ class FunctionsSpec extends SparkSpec {
     val got = graft.operators.Similarity.bruteForceTopK(queries, corpus, 2)
       .orderBy("rank").select("neighbor_id").as[Long].collect()
     assert(got.toSeq == Seq(10L, 11L))
-  }
-
-  test("multimodal decode stub: deterministic features + frame sampling") {
-    import graft.operators.Multimodal
-    import graft.operators.Multimodal._
-    val ds = spark.createDataset(Seq(
-      MediaRecord(1L, "video", "fake-bytes-a".getBytes("UTF-8")),
-      MediaRecord(2L, "image", "fake-bytes-b".getBytes("UTF-8"))))
-    val feats = Multimodal.decodeFeatures(ds)
-    val rows = feats.collect().sortBy(_.media_id)
-    assert(rows(0).n_frames > 1 && rows(1).n_frames == 1)
-    assert(rows.forall(f => f.width % 16 == 0 && f.height % 16 == 0))
-    // determinism
-    assert(Multimodal.decodeFeatures(ds).collect().sortBy(_.media_id).toSeq == rows.toSeq)
-    val frames = Multimodal.sampleFrames(feats, stride = 10)
-    assert(frames.where(col("media_id") === 2L).count() == 1)
-  }
-
-  test("IVF index probe equals in-session ivfTopK (partition-pruned scan)") {
-    import graft.operators.Similarity
-    val e = graft.Tables.embeddings(spark, sf())
-    val queries = e.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("query_id"), col("embedding").as("query_vec"))
-    val corpus = e.filter(col("vec_id") >= 5)
-    val idx = new java.io.File(
-      graft.sources.SyntheticFixtures.dir("ivfindex"), "spec").getPath
-    Similarity.writeIvfIndex(corpus, idx)
-    val probed = Similarity.probeIvfIndex(queries, idx, k = 3, nprobe = 2)
-      .select("query_id", "rank", "neighbor_id").as[(Long, Long, Long)]
-      .collect().sorted.toSeq
-    val inSession = Similarity.ivfTopK(queries, corpus, k = 3, nprobe = 2)
-      .select("query_id", "rank", "neighbor_id").as[(Long, Long, Long)]
-      .collect().sorted.toSeq
-    assert(probed == inSession && probed.nonEmpty)
-    // the vectors artifact is laid out for partition pruning on bucket
-    val pruned = spark.read.parquet(s"$idx/vectors").filter(col("bucket") === 0)
-    val scan = pruned.queryExecution.executedPlan.toString
-    assert(scan.contains("PartitionFilters") || pruned.count() > 0)
   }
 
   test("LSH index probe finds the same pairs as the in-session join") {
@@ -358,10 +290,10 @@ class FunctionsSpec extends SparkSpec {
     assert(both.count() == 200)
   }
 
-  test("multimodal real image decode: PNG roundtrip + resize via ImageIO") {
+  test("multimodal real image decode: PNG roundtrip via ImageIO") {
     import graft.operators.Multimodal
     import graft.operators.Multimodal._
-    // gradient image (not solid) so resize actually interpolates
+    // gradient image (not solid): the channel means are not constant
     val img = new java.awt.image.BufferedImage(20, 10,
       java.awt.image.BufferedImage.TYPE_INT_RGB)
     for (y <- 0 until 10; x <- 0 until 20)
@@ -376,12 +308,6 @@ class FunctionsSpec extends SparkSpec {
     assert(feats.map(_.media_id).toSeq == Seq(1L, 2L)) // undecodable drops
     assert(feats(0).width == 20 && feats(0).height == 10 && feats(0).mean_b == 40.0)
     assert(feats(1) == ImageFeatures(2L, 16, 8, 10.0, 20.0, 30.0))
-    // real resize: dimensions change, solid color is preserved exactly
-    val resized = Multimodal.imageFeatures(
-      Multimodal.resizeImages(ds, 4, 4)).collect().sortBy(_.media_id)
-    assert(resized.map(f => (f.width, f.height)).toSeq == Seq((4, 4), (4, 4)))
-    assert(resized(1).mean_r == 10.0 && resized(1).mean_g == 20.0 &&
-      resized(1).mean_b == 30.0)
   }
 
   test("multimodal perceptual dHash: shift-invariant, formula-exact, discriminating") {

@@ -302,27 +302,6 @@ class GraphSpec extends SparkSpec {
     spark.catalog.clearCache()
   }
 
-  test("label propagation: fixpoint face equals fixed-round once converged") {
-    import spark.implicits._
-    def clique(ids: Seq[Long]) =
-      for (a <- ids; b <- ids if a < b) yield (a, b)
-    val edges = (clique(Seq(1L, 2L, 3L, 4L)) ++ clique(Seq(5L, 6L, 7L, 8L)) ++
-      Seq((4L, 5L))).toDF("src", "dst")
-    def toMapOf(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
-    val converged = toMapOf(
-      LabelPropagation.communitiesConverged(edges, "src", "dst", maxRounds = 20))
-    // the two-clique graph converges well before 20 rounds: the fixpoint
-    // labeling must equal the fixed-round face at ANY round count past
-    // convergence (here 5 and 8)
-    assert(converged === toMapOf(
-      LabelPropagation.communities(edges, "src", "dst", rounds = 5)))
-    assert(converged === toMapOf(
-      LabelPropagation.communities(edges, "src", "dst", rounds = 8)))
-    Retained.releaseAll(spark)
-    spark.catalog.clearCache()
-  }
-
   test("personalized PageRank: seed mass propagates hop by hop on a path") {
     import spark.implicits._
     // directed path 1→2→3, seed {1}: closed-form mass per iteration

@@ -241,14 +241,6 @@ class PropertiesSpec extends SparkSpec {
     }, 6)
   }
 
-  test("keepRepresentatives drops exactly the non-minimum cluster members") {
-    val docs = (0L to 9L).map(i => (i, s"d$i")).toDF("doc_id", "text")
-    val pairs = Seq((1L, 3L), (3L, 5L), (7L, 8L)).toDF("id1", "id2")
-    val kept = ConnectedComponents.keepRepresentatives(docs, "doc_id", pairs, "id1", "id2")
-      .select("doc_id").as[Long].collect().toSet
-    assert(kept == Set(0L, 1L, 2L, 4L, 6L, 7L, 9L))
-  }
-
   test("KMV sketch: merge of halves equals sketch of the union") {
     val k = 16
     val all = spark.range(0, 4000)
@@ -493,15 +485,15 @@ class PropertiesSpec extends SparkSpec {
     check(p, 12)
   }
 
-  test("keepBestRepresentatives elects highest score, ties to smallest id") {
+  test("keepBestFromLabels elects highest score, ties to smallest id") {
     // cluster {1,3,5}: 5 has top score; cluster {7,8}: tie -> 7 wins;
     // singletons 0,2,4,6,9 keep themselves
     val docs = Seq(0L -> 0.1, 1L -> 0.2, 2L -> 0.3, 3L -> 0.9, 4L -> 0.4,
       5L -> 0.95, 6L -> 0.5, 7L -> 0.7, 8L -> 0.7, 9L -> 0.6)
       .toDF("doc_id", "score")
     val pairs = Seq((1L, 3L), (3L, 5L), (7L, 8L)).toDF("id1", "id2")
-    val got = ConnectedComponents.keepBestRepresentatives(
-        docs, "doc_id", "score", pairs, "id1", "id2")
+    val got = ConnectedComponents.keepBestFromLabels(docs, "doc_id", "score",
+        ConnectedComponents.labels(pairs, "id1", "id2"))
       .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getBoolean(3)))).toMap
     assert(got === Map(
       0L -> ((0L, true)), 1L -> ((1L, false)), 2L -> ((2L, true)),
@@ -529,17 +521,6 @@ class PropertiesSpec extends SparkSpec {
     }, 6)
   }
 
-  test("sequenceMembers covers every budget window exactly") {
-    val docs = Seq((1L, 500L), (2L, 30L), (3L, 1100L), (4L, 1L))
-      .toDF("doc_id", "n_tokens")
-    val members = SequencePacking.sequenceMembers(docs, "n_tokens",
-        Seq(col("doc_id")), budget = 512L)
-      .select("seq_id", "doc_id").as[(Long, Long)].collect().toSet
-    // offsets: 1→[0,500) 2→[500,530) 3→[530,1630) 4→[1630,1631)
-    assert(members == Set((0L, 1L), (0L, 2L), (1L, 2L), (1L, 3L), (2L, 3L),
-      (3L, 3L), (3L, 4L)))
-  }
-
   test("decontamination flags planted copies and clears unrelated docs") {
     val bench = Seq((100L, "the quick brown fox jumps over the lazy dog"))
       .toDF("doc_id", "text")
@@ -552,10 +533,6 @@ class PropertiesSpec extends SparkSpec {
         "doc_id", "text", k = 3, threshold = 0.5)
       .select("id", "is_contaminated").as[(Long, Long)].collect().toMap
     assert(got(1L) == 1L && got(2L) == 1L && got(3L) == 0L)
-    val kept = Decontamination.decontaminate(corpus, bench, "doc_id", "text",
-        k = 3, threshold = 0.5)
-      .select("doc_id").as[Long].collect().toSet
-    assert(kept == Set(3L))
   }
 
   test("PPJoin prefix tier equals brute-force Jaccard on random corpora") {
@@ -890,7 +867,8 @@ class PropertiesSpec extends SparkSpec {
     val edgeGen = Gen.zip(Gen.chooseNum(0L, 20L), Gen.chooseNum(0L, 20L))
     val graphGen = Gen.zip(Gen.listOfN(40, edgeGen), Gen.chooseNum(2, 4))
     check(Prop.forAllNoShrink(graphGen) { case (edges, k) =>
-      val got = KCore.kCore(edges.toDF("a", "b"), "a", "b", k)
+      // 64 rounds exceed the peel depth of any 21-node graph
+      val got = KCore.peelRounds(edges.toDF("a", "b"), "a", "b", k, rounds = 64)
         .as[(Long, Long)].collect().toMap
       // reference: iterate deletion over an adjacency-set model
       val adj = scala.collection.mutable.Map.empty[Long, Set[Long]]
@@ -911,14 +889,13 @@ class PropertiesSpec extends SparkSpec {
     }, 8)
   }
 
-  test("k-core peelRounds is idempotent past convergence and matches kCore") {
+  test("k-core peelRounds is idempotent past convergence") {
     // 4-clique + pendant chain: the chain peels off in 2 rounds
     val edges = (Seq((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L),
       (3L, 4L)) ++ Seq((4L, 5L), (5L, 6L))).toDF("a", "b")
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.as[(Long, Long)].collect().toSet
-    val fix = rows(KCore.kCore(edges, "a", "b", k = 3))
-    assert(fix === Set((1L, 3L), (2L, 3L), (3L, 3L), (4L, 3L)))
+    val fix = Set((1L, 3L), (2L, 3L), (3L, 3L), (4L, 3L))
     assert(rows(KCore.peelRounds(edges, "a", "b", k = 3, rounds = 2)) === fix)
     assert(rows(KCore.peelRounds(edges, "a", "b", k = 3, rounds = 9)) === fix)
     // zero rounds = raw degrees

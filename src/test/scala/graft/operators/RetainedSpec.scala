@@ -50,22 +50,4 @@ class RetainedSpec extends SparkSpec {
     // idempotent: a second release is a no-op
     assert(Retained.releaseAll(spark) === 0)
   }
-
-  test("Staging.Memory and Spill register; Artifact does not") {
-    cleanSlate()
-    val df = Seq(1, 2, 3).toDF("x")
-    Staging.stage(df, Staging.Memory, "m").count()
-    Staging.stage(df.select($"x" + 1 as "x"),
-      Staging.Spill(org.apache.spark.storage.StorageLevel.DISK_ONLY), "s").count()
-    assert(Retained.trackedCount(spark) === 2)
-    val dir = java.nio.file.Files.createTempDirectory("graft-stage-").toString
-    try {
-      Staging.stage(df, Staging.Artifact(dir), "a").count()
-      assert(Retained.trackedCount(spark) === 2, "Artifact must not register")
-    } finally {
-      Retained.releaseAll(spark)
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
-    }
-    assert(CacheBridge.isCacheEmpty(spark))
-  }
 }

@@ -228,6 +228,61 @@ class JdbcSinkSpec extends SparkSpec {
     }
   }
 
+  test("file format info: a path loads the file into BLOB/CLOB columns, gz unpacked") {
+    val url = freshDb()
+    JdbcSink.withConnection(url) { c =>
+      val st = c.createStatement()
+      st.executeUpdate("CREATE TABLE \"FL\" (\"ID\" INTEGER, \"B\" BLOB, \"T\" CLOB)")
+      st.close()
+    }
+    val dir = SyntheticFixtures.dir("fileload")
+    val plain = SyntheticFixtures.writeText(new File(dir, "a.txt"), "content-a")
+    val gz = SyntheticFixtures.writeGz(new File(dir, "b.txt.gz"), "content-b")
+    val missing = new File(dir, "missing.bin").getPath
+    val src = Seq(("1", plain.getPath), ("2", gz.getPath), ("3", missing))
+      .toDF("id", "path")
+    val res = Importer.importToJdbc(src, url, "fl", Importer.ImportConfig(
+      mapping = Some("id='id'; b='path' file; t='path' file")))
+    // an unreadable path fails its parse like any bad value
+    assert(res.found == 3 && res.invalid == 1 && res.inserted == 2)
+    JdbcSink.withConnection(url) { c =>
+      val rs = c.createStatement().executeQuery(
+        "SELECT \"ID\", \"B\", \"T\" FROM \"FL\" ORDER BY \"ID\"")
+      val got = Iterator.continually(rs).takeWhile(_.next())
+        .map(r => (r.getInt(1), new String(r.getBytes(2), "UTF-8"), r.getString(3)))
+        .toSeq
+      assert(got == Seq((1, "content-a", "content-a"), (2, "content-b", "content-b")))
+    }
+  }
+
+  test("CLEARINSERT with keys: both merge paths report the cleared rows") {
+    def setup(): String = {
+      val url = freshDb()
+      JdbcSink.withConnection(url) { c =>
+        val st = c.createStatement()
+        st.executeUpdate("CREATE TABLE \"CI\" (\"K\" INTEGER, \"V\" VARCHAR(10))")
+        st.executeUpdate("INSERT INTO \"CI\" VALUES (1, 'old1'), (2, 'old2'), (7, 'old7')")
+        st.close()
+      }
+      url
+    }
+    def readOut(url: String) =
+      spark.read.format("jdbc").option("url", url).option("dbtable", "CI").load()
+        .orderBy("K", "V").collect().map(r => (r.getInt(0), r.getString(1))).toSeq
+    val src = Seq(("1", "a"), ("1", "b"), ("3", "c")).toDF("k", "v")
+    val cfg = Importer.ImportConfig(mode = ImportMode.ClearInsert, keyColumns = Seq("k"))
+    val urlSpark = setup()
+    val resSpark = Importer.importToJdbc(src, urlSpark, "ci", cfg)
+    val urlDb = setup()
+    val resDb = Importer.importToJdbc(src, urlDb, "ci", cfg.copy(mergeInDb = true))
+    assert(readOut(urlDb) == readOut(urlSpark))
+    assert(readOut(urlSpark) == Seq((1, "b"), (3, "c")))
+    def counts(r: Importer.ImportResult) =
+      (r.deleted, r.duplicates, r.inserted, r.updated, r.finalCount)
+    assert(counts(resSpark) == ((3L, 1L, 2L, 0L, 2L)))
+    assert(counts(resDb) == counts(resSpark))
+  }
+
   test("DB-side merge SQL produces the same result as the Spark-side merge") {
     def setup(): String = {
       val url = freshDb()

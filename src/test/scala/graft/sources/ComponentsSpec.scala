@@ -6,9 +6,9 @@ import org.apache.spark.sql.types.IntegerType
 
 import graft.SparkSpec
 import graft.schema.StructureFile
-import graft.sink.{ConnectionTest, JdbcSink, UpsertWriter}
+import graft.sink.{ConnectionTest, JdbcSink}
 
-/** Upsert writer, structure file, connection test, file-blob loading and
+/** Structure file, connection test, bucketed staging and
   * spreadsheet parsers.
   */
 class ComponentsSpec extends SparkSpec {
@@ -16,42 +16,6 @@ class ComponentsSpec extends SparkSpec {
 
   private var dbN = 100
   private def freshDb(): String = { dbN += 1; s"jdbc:derby:memory:compdb$dbN;create=true" }
-
-  test("upsert writer routes UPDATE vs INSERT with in-flight key dedup") {
-    val url = freshDb()
-    JdbcSink.withConnection(url) { c =>
-      val st = c.createStatement()
-      st.executeUpdate("CREATE TABLE \"UP\" (\"K\" INTEGER PRIMARY KEY, \"V\" VARCHAR(10))")
-      st.executeUpdate("INSERT INTO \"UP\" VALUES (1, 'pre')")
-      st.close()
-    }
-    // key 1 exists → update; key 2 new → insert; second 2 → in-flight update
-    val df = Seq((1, "u1"), (2, "i2"), (2, "u2")).toDF("k", "v")
-    val stats = UpsertWriter.upsert(df, url, "up", Seq("k"))
-    assert(stats.inserted == 1 && stats.updated == 2)
-    JdbcSink.withConnection(url) { c =>
-      val rs = c.createStatement().executeQuery("SELECT \"K\", \"V\" FROM \"UP\" ORDER BY \"K\"")
-      val got = Iterator.continually(rs).takeWhile(_.next()).map(r => (r.getInt(1), r.getString(2))).toSeq
-      assert(got == Seq(1 -> "u1", 2 -> "u2"))
-    }
-  }
-
-  test("upsert writer with updateWithNull=false skips null columns") {
-    val url = freshDb()
-    JdbcSink.withConnection(url) { c =>
-      val st = c.createStatement()
-      st.executeUpdate("CREATE TABLE \"UP2\" (\"K\" INTEGER PRIMARY KEY, \"A\" VARCHAR(5), \"B\" VARCHAR(5))")
-      st.executeUpdate("INSERT INTO \"UP2\" VALUES (1, 'a0', 'b0')")
-      st.close()
-    }
-    val df = Seq((1, null.asInstanceOf[String], "b1")).toDF("k", "a", "b")
-    UpsertWriter.upsert(df, url, "up2", Seq("k"), updateWithNull = false)
-    JdbcSink.withConnection(url) { c =>
-      val rs = c.createStatement().executeQuery("SELECT \"A\", \"B\" FROM \"UP2\"")
-      rs.next()
-      assert(rs.getString(1) == "a0" && rs.getString(2) == "b1")
-    }
-  }
 
   test("structure file: parse, create, and column sync") {
     val url = freshDb()
@@ -248,25 +212,6 @@ class ComponentsSpec extends SparkSpec {
     assert(ok.forall(_.ok) && ok.length == 3)
     val bad = ConnectionTest.run("jdbc:derby:memory:doesnotexist", iterations = 1)
     assert(!bad.head.ok && bad.head.error.nonEmpty)
-  }
-
-  test("file format info: path column loads as BLOB/CLOB with size guard") {
-    import graft.functions.FileLoad
-    val f1 = SyntheticFixtures.writeText(
-      new File(SyntheticFixtures.dir("fileload"), "a.txt"), "content-a")
-    val f2 = SyntheticFixtures.writeGz(
-      new File(SyntheticFixtures.dir("fileload"), "b.txt.gz"), "content-b")
-    val df = Seq((1, f1.getPath), (2, f2.getPath)).toDF("id", "path")
-    val blobs = FileLoad.loadFileColumn(df, "path", "data")
-      .orderBy("id").collect()
-    assert(new String(blobs(0).getAs[Array[Byte]]("data"), "UTF-8") == "content-a")
-    assert(new String(blobs(1).getAs[Array[Byte]]("data"), "UTF-8") == "content-b") // gz transparent
-    val clobs = FileLoad.loadFileColumn(df, "path", "data", asText = true)
-      .orderBy("id").collect()
-    assert(clobs(0).getAs[String]("data") == "content-a")
-    intercept[org.apache.spark.SparkException] {
-      FileLoad.loadFileColumn(df, "path", "data", maxBytes = 3).collect()
-    }
   }
 
   test("xlsx parser: shared strings, cell refs, blank cells, sheet select") {
