@@ -1,11 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
-
-import graft.operators.{Dedup, Merge, Ordinals}
-import graft.operators.Merge.{DuplicateMode, ImportMode, Key}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Driver contract — one entry per implemented operator from SURVEY.md §2,
   * each with a DuckDB-equivalent oracle in [[SparkEntry.oracleSql]].
@@ -20,8 +15,6 @@ import graft.operators.Merge.{DuplicateMode, ImportMode, Key}
   */object SparkEntry
     extends EntrySupport
     with RelationalQueries with SourcesQueries with TextQueries with DedupQueries with EventsQueries with StatsQueries with RankStatsQueries with TimeseriesStatsQueries with CausalStatsQueries with GraphQueries with TemporalQueries with StreamingQueries {
-
-  import Tables._
 
   /** Flagship query on sf=0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =

@@ -12,16 +12,15 @@ import graft.sink.JdbcSink
   * builder:
   *
   *   source (raw strings) → mapping/transform select → validate (error
-  *   side-channel) → one of three branches:
+  *   side-channel) → one of three branches, picked by keys, import mode
+  *   and duplicate mode alone:
   *    - FAST PATH: keyless INSERT/CLEARINSERT → batch append;
-  *    - IN-DB MERGE (`mergeInDb`, keyed): Spark dedups the staged side,
-  *      the destination DB runs the set-based merge SQL
+  *    - SQL MERGE (every other keyed import): Spark dedups the staged
+  *      side, the destination DB runs the set-based merge SQL
   *      ([[graft.sink.JdbcMerge]], the reference's own strategy);
-  *    - SPARK MERGE (keyed, the default): arrival ordinal → dedup → mode
+  *    - SPARK MERGE (UPDATE_FIRST_* and MAKE_UNIQUE_* only, which must
+  *      tell target duplicates apart): arrival ordinal → dedup → mode
   *      matrix as DataFrame joins → atomic rewrite of the JDBC target.
-  *
-  * The Spark merge moves the process boundary from "JVM→DB" to
-  * "driver→executors": only final writes cross to the sink.
   */
 object Importer {
 
@@ -47,27 +46,26 @@ object Importer {
                           trimValues: Boolean = false,
                           importTz: String = "UTC", dbTz: String = "UTC",
                           createIndexIfNeeded: Boolean = true,
-                          /** Run the merge as SQL inside the destination
-                            * DB (reference strategy) instead of reading
-                            * the target into Spark — for very large
-                            * remote targets; not for the UPDATE_FIRST_* and
-                            * MAKE_UNIQUE_* modes. See [[graft.sink.JdbcMerge]].
+                          /** Ignored: the duplicate mode picks the merge
+                            * (see the class doc). The import benchmark
+                            * still sets it; its next change deletes it.
                             */
                           mergeInDb: Boolean = false,
                           /** Re-export the rows whose mapped values failed
-                            * to parse as CSV here (reference erroneous-data
-                            * file, §2.3).
+                            * to parse here (reference erroneous-data file,
+                            * §2.3): a `.json`/`.xml` path gets one file in
+                            * that format, any other a CSV directory.
                             */
                           errorExportPath: Option[String] = None,
                           /** Additional insert/update values: extra
                             * target columns set from SQL expressions
                             * (reference `-insvalues`/`-updvalues`,
                             * DbImportWorker.java:939-948) on the rows the
-                            * merge inserts / updates. Spark-evaluable
-                            * expressions apply cluster-side
-                            * ([[Merge.importMerge]]); DB-only expressions
-                            * (sequences) belong in [[graft.sink.JdbcMerge]]'s
-                            * generated SQL.
+                            * merge inserts / updates. Keyed imports
+                            * evaluate them in the destination DB
+                            * ([[graft.sink.JdbcMerge]], sequences work),
+                            * except UPDATE_FIRST_* and MAKE_UNIQUE_*, which
+                            * evaluate them in Spark like the keyless path.
                             */
                           additionalInsertValues: Map[String, String] = Map.empty,
                           additionalUpdateValues: Map[String, String] = Map.empty,
@@ -150,9 +148,11 @@ object Importer {
       }
       val v = Validation.validate(combined, rules)
       cfg.errorExportPath.foreach { p =>
-        Validation.exportErrorsCsv(
-          v.errors.select((trimmed.columns.map(c => col(s"`$c`")) :+
-            col("error_reason")).toIndexedSeq: _*), p)
+        val errors = v.errors.select((trimmed.columns.map(c => col(s"`$c`")) :+
+          col("error_reason")).toIndexedSeq: _*)
+        if (p.endsWith(".json")) Validation.exportErrorsJson(errors, p)
+        else if (p.endsWith(".xml")) Validation.exportErrorsXml(errors, p)
+        else Validation.exportErrorsCsv(errors, p)
       }
       (v.valid.select(resolved.map { case (_, f) =>
         col(s"__graft_m_${f.name}").as(f.name) }.toIndexedSeq: _*),
@@ -185,8 +185,8 @@ object Importer {
           JdbcSink.withConnection(url)(c => JdbcSink.clearTable(c, table))
         else 0L
         // additional insert values evaluate in Spark here: a DB-only
-        // expression (a sequence) fails. Only a keyed import with
-        // mergeInDb hands them to the destination DB's SQL.
+        // expression (a sequence) fails. The SQL merge hands them to the
+        // destination DB.
         val withExtra = cfg.additionalInsertValues.foldLeft(mapped) {
           case (df, (c, sql)) => df.withColumn(c, expr(sql))
         }
@@ -195,15 +195,8 @@ object Importer {
           else JdbcSink.appendBatch(withExtra, url, table, cfg.batchSize,
             singleRowFallback = !cfg.preventSingleFallback)
         (stats.inserted, 0L, deleted, 0L)
-      } else if (cfg.mergeInDb) {
-        // DB-side merge: Spark dedups the staged side, the destination DB
-        // runs the set-based merge against its indexed target in place.
-        val st = graft.sink.JdbcMerge.mergeViaSql(mapped, url, table,
-          cfg.keyColumns, cfg.mode, cfg.duplicateMode, cfg.updateWithNull,
-          cfg.batchSize, cfg.additionalInsertValues, cfg.additionalUpdateValues)
-        (st.inserted, st.updated, st.deleted, st.duplicates)
-      } else {
-        // MERGE PATH: ordinal → dedup → mode matrix → atomic rewrite.
+      } else if (cfg.duplicateMode.updateFirst || cfg.duplicateMode.makeUnique) {
+        // SPARK MERGE: ordinal → dedup → mode matrix → atomic rewrite.
         // staged is read by the dup accounting, the merge and the update
         // count: cache it so the source pipeline (and the ordinal's
         // partition-count pass) runs once — recomputation could even
@@ -231,16 +224,13 @@ object Importer {
           case ImportMode.ClearInsert => afterCount
           case _ => afterCount - beforeCount
         }
-        // rows actually updated: none for sourceOnly; one per matched key
-        // for UPDATE_FIRST (and for MAKE_UNIQUE, which dedups the target
-        // first); every matched row otherwise
+        // rows actually updated: one per matched key — UPDATE_FIRST
+        // updates the first row of a key group, MAKE_UNIQUE dedups the
+        // target first
         val updatedN = cfg.mode match {
-          case ImportMode.Update | ImportMode.Upsert
-              if !cfg.duplicateMode.sourceOnly =>
+          case ImportMode.Update | ImportMode.Upsert =>
             val matched = targetLc.join(staged, cfg.keyColumns, "left_semi")
-            if (cfg.duplicateMode.updateFirst || cfg.duplicateMode.makeUnique)
-              matched.select(cfg.keyColumns.map(col): _*).distinct().count()
-            else matched.count()
+            matched.select(cfg.keyColumns.map(col): _*).distinct().count()
           case _ => 0L
         }
         // atomic rewrite: stage the merged table while the target stays
@@ -250,6 +240,13 @@ object Importer {
         merged.unpersist()
         staged.unpersist()
         (insertedN, updatedN, deleted, dupsInSource)
+      } else {
+        // SQL MERGE: Spark dedups the staged side, the destination DB runs
+        // the set-based merge against its indexed target in place.
+        val st = graft.sink.JdbcMerge.mergeViaSql(mapped, url, table,
+          cfg.keyColumns, cfg.mode, cfg.duplicateMode, cfg.updateWithNull,
+          cfg.batchSize, cfg.additionalInsertValues, cfg.additionalUpdateValues)
+        (st.inserted, st.updated, st.deleted, st.duplicates)
       }
 
     val finalCount = JdbcSink.withConnection(url)(c => JdbcSink.countRows(c, table))

@@ -202,12 +202,24 @@ object Main {
     a
   }
 
+  private def containerStripped(path: String): String = path.toLowerCase
+    .stripSuffix(".zip").stripSuffix(".tar.gz").stripSuffix(".tgz").stripSuffix(".gz")
+  private val Extensions = Seq(".csv" -> "CSV", ".txt" -> "CSV", ".json" -> "JSON",
+    ".yaml" -> "YAML", ".yml" -> "YAML", ".xml" -> "XML", ".xlsx" -> "EXCEL",
+    ".xls" -> "EXCEL", ".ods" -> "ODS", ".vcf" -> "VCF", ".kdbx" -> "KDBX")
+
+  /** -x <format> overrides the extension sniff (reference
+    * DbImportDefinition.getDataType); without it the extension decides.
+    */
+  private def sourceFormat(a: Args, path: String): Option[String] =
+    a.dataType.filterNot(_ == "SQL").orElse(Extensions.collectFirst {
+      case (ext, fmt) if containerStripped(path).endsWith(ext) => fmt })
+
   /** Format sniffing by extension (reference
     * DbImportDefinition.java:582-653).
     */
   def readSource(spark: SparkSession, a: Args, path: String): DataFrame = {
-    val lower = path.toLowerCase
-      .stripSuffix(".zip").stripSuffix(".tar.gz").stripSuffix(".tgz").stripSuffix(".gz")
+    val lower = containerStripped(path)
     // schema pre-pass is a JSON/XML concept (DbImportDefinition.java:696)
     if (a.schemaFile.isDefined && !lower.endsWith(".json") && !lower.endsWith(".xml"))
       throw new IllegalArgumentException(
@@ -231,19 +243,8 @@ object Main {
         java.nio.file.Files.write(tmp.toPath, dec)
         tmp.getPath
       } else path
-    // -x <format> overrides the extension sniff (reference
-    // DbImportDefinition.getDataType); without it the extension decides
-    val fmt = a.dataType.filterNot(_ == "SQL").getOrElse {
-      if (lower.endsWith(".csv") || lower.endsWith(".txt")) "CSV"
-      else if (lower.endsWith(".json")) "JSON"
-      else if (lower.endsWith(".yaml") || lower.endsWith(".yml")) "YAML"
-      else if (lower.endsWith(".xml")) "XML"
-      else if (lower.endsWith(".xlsx") || lower.endsWith(".xls")) "EXCEL"
-      else if (lower.endsWith(".ods")) "ODS"
-      else if (lower.endsWith(".vcf")) "VCF"
-      else if (lower.endsWith(".kdbx")) "KDBX"
-      else throw new IllegalArgumentException(s"unsupported format: $path")
-    }
+    val fmt = sourceFormat(a, path).getOrElse(
+      throw new IllegalArgumentException(s"unsupported format: $path"))
     fmt match {
       case "CSV" =>
         // reference field-count strictness: structure errors abort unless
@@ -380,11 +381,14 @@ object Main {
       System.err.println("[graft] -deactivatefk/-deactivatetriggers: " +
         "not supported, foreign keys and triggers stay active; proceeding")
     // -logerrors without an explicit export path: erroneous rows land
-    // next to the import file (reference logErroneousData behavior)
+    // next to the import file (reference logErroneousData behavior), in
+    // the source's own format for JSON and XML
     val cfgRun =
-      if (a.logErrors && a.cfg.errorExportPath.isEmpty && !a.inline)
-        a.cfg.copy(errorExportPath = Some(a.importPathOrData + ".errors"))
-      else a.cfg
+      if (a.logErrors && a.cfg.errorExportPath.isEmpty && !a.inline) {
+        val ext = sourceFormat(a, a.importPathOrData).filter(Set("JSON", "XML"))
+          .fold("")("." + _.toLowerCase)
+        a.cfg.copy(errorExportPath = Some(a.importPathOrData + ".errors" + ext))
+      } else a.cfg
     val a2 = a.copy(cfg = cfgRun)
     val multi = a.importPathOrData.exists(c => c == '*' || c == '?') && !a.inline
     if (multi) {

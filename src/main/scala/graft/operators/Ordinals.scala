@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
 /** Arrival-order ordinal ("import_item") support.

@@ -4,9 +4,6 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Dedup, Merge, Ordinals}
-import graft.operators.Merge.{DuplicateMode, ImportMode, Key}
-
 /** Dedup / similarity / embedding queries — exact through MinHash-LSH/SimHash/PPJoin dedup, ANN (brute/IVF/int8), kNN graphs, leakage splits, dup provenance.
   *
   * Split from the monolithic `SparkEntry.scala` in round 11 (it had

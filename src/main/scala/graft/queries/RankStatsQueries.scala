@@ -1,11 +1,8 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-
-import graft.operators.{Dedup, Merge, Ordinals}
-import graft.operators.Merge.{DuplicateMode, ImportMode, Key}
 
 /** Hypothesis-test / correlation / exact-selection queries — the
   * chi-square/KS/Mann-Whitney/Spearman screens, the nonparametric

@@ -1,11 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-
-import graft.operators.{Dedup, Merge, Ordinals}
-import graft.operators.Merge.{DuplicateMode, ImportMode, Key}
 
 /** File-format source queries — CSV/JSON/XML/YAML/vCard/xlsx/xls/ODS/KeePass/compressed scans and the multimodal (image/audio/video) decode surface.
   *

@@ -1,11 +1,7 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-
-import graft.operators.{Dedup, Merge, Ordinals}
-import graft.operators.Merge.{DuplicateMode, ImportMode, Key}
 
 /** Statistical screen queries — sketches (KMV/HLL/CMS), sampling,
   * distribution audits, privacy, drift, and model-eval style metrics.

@@ -1,11 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-
-import graft.operators.{Dedup, Merge, Ordinals}
-import graft.operators.Merge.{DuplicateMode, ImportMode, Key}
 
 /** Streaming-engine drain queries — real readStream micro-batch replays (windows, keyed dedup, sessions, append eviction, stream-stream join, foreachBatch upsert) hash-matched against batch oracles.
   *

@@ -1,11 +1,8 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-
-import graft.operators.{Dedup, Merge, Ordinals}
-import graft.operators.Merge.{DuplicateMode, ImportMode, Key}
 
 /** Text-analysis queries — language ID, quality scores, tokenization/BPE, retrieval (TF-IDF/BM25/RRF), chunking, readability, PII text audit.
   *

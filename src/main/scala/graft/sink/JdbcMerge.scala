@@ -8,8 +8,9 @@ import graft.operators.Merge.{DuplicateMode, ImportMode, Key}
 
 /** DB-side merge: the reference's own execution strategy
   * (DbImportWorker.java:438-581 — stage into `tmp_<ts>`, then one SQL
-  * statement per phase inside the destination DB), for targets too large
-  * to read into the cluster. Division of labor at scale:
+  * statement per phase inside the destination DB). Every keyed import
+  * runs here except UPDATE_FIRST_* and MAKE_UNIQUE_*, which need the
+  * Spark merge ([[graft.api.Importer]]). Division of labor:
   *
   *  - Spark dedups/transforms the STAGED side (cheap, cluster-side,
   *    where the new data lives);
@@ -35,8 +36,8 @@ object JdbcMerge {
     * @param additionalInsertValues extra target columns ← raw SQL
     *        evaluated by the DESTINATION DB inside the generated INSERT
     *        (the reference's `id=seq.NEXTVAL` case,
-    *        DbImportWorker.java:939-948) — this path exists precisely
-    *        because such expressions cannot run in Spark.
+    *        DbImportWorker.java:939-948), so DB-only expressions such as
+    *        sequences work.
     * @param additionalUpdateValues same for the UPDATE statement.
     */
   def mergeViaSql(source: DataFrame, url: String, table: String, keys: Seq[String],
@@ -72,15 +73,15 @@ object JdbcMerge {
       val insertSql =
         s"""$plainInsertSql
            | WHERE NOT EXISTS (SELECT 1 FROM $T dst WHERE ${keyEq("dst", "src")})""".stripMargin
-      def updateSql: String = {
-        val sets = valCols.map { vc =>
-          val sub = s"(SELECT src.${q(vc)} FROM $S src WHERE ${keyEq("src", "dst")})"
-          val v = if (updateWithNull) sub else s"COALESCE($sub, dst.${q(vc)})"
-          s"${q(vc)} = $v"
-        } ++ additionalUpdateValues.map { case (c, e) => s"${q(c)} = $e" }
+      // an import that maps only the keys still sets the extra update values
+      val sets = valCols.map { vc =>
+        val sub = s"(SELECT src.${q(vc)} FROM $S src WHERE ${keyEq("src", "dst")})"
+        val v = if (updateWithNull) sub else s"COALESCE($sub, dst.${q(vc)})"
+        s"${q(vc)} = $v"
+      } ++ additionalUpdateValues.map { case (c, e) => s"${q(c)} = $e" }
+      val updateSql =
         s"""UPDATE $T dst SET ${sets.mkString(", ")}
            | WHERE EXISTS (SELECT 1 FROM $S src WHERE ${keyEq("src", "dst")})""".stripMargin
-      }
 
       JdbcSink.withConnection(url) { c =>
         c.setAutoCommit(false)
@@ -98,13 +99,13 @@ object JdbcMerge {
               inserted = st.executeUpdate(
                 if (dupMode.sourceOnly) plainInsertSql else insertSql).toLong
             case ImportMode.Update =>
-              if (!dupMode.sourceOnly && valCols.nonEmpty)
+              if (!dupMode.sourceOnly && sets.nonEmpty)
                 updated = st.executeUpdate(updateSql).toLong
             case ImportMode.Upsert =>
               if (dupMode.sourceOnly)
                 inserted = st.executeUpdate(plainInsertSql).toLong
               else {
-                if (valCols.nonEmpty) updated = st.executeUpdate(updateSql).toLong
+                if (sets.nonEmpty) updated = st.executeUpdate(updateSql).toLong
                 inserted = st.executeUpdate(insertSql).toLong
               }
           }

@@ -2,7 +2,7 @@ package graft.sources
 
 import java.util.Locale
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** HTML ingestion + boilerplate extraction — the one high-traffic

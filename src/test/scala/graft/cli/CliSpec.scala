@@ -263,6 +263,27 @@ class CliSpec extends SparkSpec {
     assert(errs.map(r => (r.getAs[String]("id"), r.getAs[String]("v"))).toSeq == Seq(("x9", "bad")))
   }
 
+  test("-logerrors on a JSON import writes <file>.errors.json as a JSON array") {
+    val url = freshDb()
+    JdbcSink.withConnection(url) { c =>
+      val st = c.createStatement()
+      st.executeUpdate("CREATE TABLE \"LEJ\" (\"ID\" INTEGER, \"V\" VARCHAR(10))")
+      st.close()
+    }
+    val f = SyntheticFixtures.writeText(
+      new File(SyntheticFixtures.dir("clilogerrjson"), "le.json"),
+      """[{"id": "1", "v": "ok"}, {"id": "x9", "v": "bad"}, {"id": "3", "v": "fine"}]""")
+    val out = new File(f.getPath + ".errors.json")
+    out.delete() // the fixture directory outlives the run
+    assert(Main.run(spark, Main.parseArgs(Array(url, "lej", f.getPath, "-logerrors"))) == 0)
+    JdbcSink.withConnection(url)(c => assert(JdbcSink.countRows(c, "lej") == 2))
+    assert(out.isFile)
+    val text = new String(java.nio.file.Files.readAllBytes(out.toPath), "UTF-8").trim
+    assert(text.startsWith("[") && text.endsWith("]"))
+    val errs = spark.read.option("multiLine", "true").json(out.getPath).collect()
+    assert(errs.map(r => (r.getAs[String]("id"), r.getAs[String]("v"))).toSeq == Seq(("x9", "bad")))
+  }
+
   test("-mf reads the mapping from a file; -dateformat governs unpatterned DATE parses") {
     val url = freshDb()
     JdbcSink.withConnection(url) { c =>

@@ -2,11 +2,13 @@ package graft.sink
 
 import java.io.File
 
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.SparkSpec
 import graft.api.{Importer, Validation}
+import graft.operators.{Merge, Ordinals}
 import graft.operators.Merge.{DuplicateMode, ImportMode}
 import graft.sources.{CsvSource, SyntheticFixtures}
 
@@ -255,123 +257,120 @@ class JdbcSinkSpec extends SparkSpec {
     }
   }
 
-  test("CLEARINSERT with keys: both merge paths report the cleared rows") {
-    def setup(): String = {
-      val url = freshDb()
-      JdbcSink.withConnection(url) { c =>
-        val st = c.createStatement()
-        st.executeUpdate("CREATE TABLE \"CI\" (\"K\" INTEGER, \"V\" VARCHAR(10))")
-        st.executeUpdate("INSERT INTO \"CI\" VALUES (1, 'old1'), (2, 'old2'), (7, 'old7')")
-        st.close()
-      }
-      url
-    }
-    def readOut(url: String) =
-      spark.read.format("jdbc").option("url", url).option("dbtable", "CI").load()
-        .orderBy("K", "V").collect().map(r => (r.getInt(0), r.getString(1))).toSeq
-    val src = Seq(("1", "a"), ("1", "b"), ("3", "c")).toDF("k", "v")
-    val cfg = Importer.ImportConfig(mode = ImportMode.ClearInsert, keyColumns = Seq("k"))
-    val urlSpark = setup()
-    val resSpark = Importer.importToJdbc(src, urlSpark, "ci", cfg)
-    val urlDb = setup()
-    val resDb = Importer.importToJdbc(src, urlDb, "ci", cfg.copy(mergeInDb = true))
-    assert(readOut(urlDb) == readOut(urlSpark))
-    assert(readOut(urlSpark) == Seq((1, "b"), (3, "c")))
-    def counts(r: Importer.ImportResult) =
-      (r.deleted, r.duplicates, r.inserted, r.updated, r.finalCount)
-    assert(counts(resSpark) == ((3L, 1L, 2L, 0L, 2L)))
-    assert(counts(resDb) == counts(resSpark))
-  }
+  /** A parity fixture: Derby table `P` with an INTEGER key `K` and VARCHAR
+    * value columns, its rows, and the raw string rows of the import.
+    */
+  private case class Fixture(values: Seq[String], pk: Boolean,
+                             target: Seq[Seq[Any]], source: Seq[Seq[String]])
+  /** One parity case; `rows` and `counts` (deleted, duplicates, inserted,
+    * updated, finalCount) are literal expectations where given.
+    */
+  private case class ParityCase(fx: Fixture, cfg: Importer.ImportConfig,
+                                rows: Option[Seq[Seq[Any]]] = None,
+                                counts: Option[(Long, Long, Long, Long, Long)] = None)
 
   test("DB-side merge SQL produces the same result as the Spark-side merge") {
-    def setup(): String = {
-      val url = freshDb()
-      JdbcSink.withConnection(url) { c =>
-        val st = c.createStatement()
-        st.executeUpdate("CREATE TABLE \"M\" (\"K\" INTEGER PRIMARY KEY, \"A\" VARCHAR(10), \"B\" VARCHAR(10))")
-        st.executeUpdate("INSERT INTO \"M\" VALUES (1,'a1','b1'), (3,'a3','b3'), (9,'a9','b9')")
-        st.close()
-      }
-      url
-    }
-    val src = Seq(("1", "A1", null), ("1", null, "B1x"), ("2", "A2", "B2"), ("5", null, "B5"))
-      .toDF("k", "a", "b")
-    def readOut(url: String) =
-      spark.read.format("jdbc").option("url", url).option("dbtable", "M").load()
-        .orderBy("K").collect()
-        .map(r => (r.getInt(0), r.getString(1), r.getString(2))).toSeq
-    val cfg = Importer.ImportConfig(mode = ImportMode.Upsert, keyColumns = Seq("k"),
-      updateWithNull = false)
-    val urlSpark = setup()
-    val resSpark = Importer.importToJdbc(src, urlSpark, "m", cfg)
-    val urlDb = setup()
-    val resDb = Importer.importToJdbc(src, urlDb, "m", cfg.copy(mergeInDb = true))
-    assert(readOut(urlSpark) == readOut(urlDb))
-    // last-non-null join-dup: key 1 -> (A1, B1x); inserts 2 and 5
-    assert(readOut(urlDb) == Seq((1, "A1", "B1x"), (2, "A2", "B2"), (3, "a3", "b3"),
-      (5, null, "B5"), (9, "a9", "b9")))
-    assert(resDb.inserted == 2 && resDb.updated == 1 && resDb.duplicates == 1)
-    def counts(r: Importer.ImportResult) = (r.duplicates, r.inserted, r.updated, r.finalCount)
-    assert(counts(resSpark) == counts(resDb))
-  }
+    // Each case runs Importer.importToJdbc (the SQL merge for these modes)
+    // and compares rows and counts with Merge.importMerge on the same
+    // frames. The matrix target repeats key 1; its source repeats key 1
+    // and holds a NULL key and NULL values.
+    val matrix = Fixture(Seq("a", "b"), pk = false,
+      target = Seq(Seq(1, "a1", "b1"), Seq(1, "a1b", "b1b"), Seq(3, "a3", "b3")),
+      source = Seq(Seq("1", "A1", null), Seq("1", null, "B1x"), Seq(null, "An", null),
+        Seq("2", "A2", "B2"), Seq("5", null, "B5")))
+    val keyed = Importer.ImportConfig(keyColumns = Seq("k"))
+    val matrixCases = for {
+      mode <- Seq(ImportMode.Insert, ImportMode.Update, ImportMode.Upsert, ImportMode.ClearInsert)
+      dup <- Seq(DuplicateMode.NoCheck, DuplicateMode.CheckSourceOnlyDrop,
+        DuplicateMode.CheckSourceOnlyJoin, DuplicateMode.UpdateAllDrop, DuplicateMode.UpdateAllJoin)
+      updateWithNull <- Seq(true, false)
+    } yield ParityCase(matrix,
+      keyed.copy(mode = mode, duplicateMode = dup, updateWithNull = updateWithNull))
+    val kv = (target: Seq[Seq[Any]], source: Seq[Seq[String]]) =>
+      Fixture(Seq("v"), pk = false, target, source)
+    val repeatedAndNullKey = kv(Seq(Seq(1, "old1"), Seq(3, "old3")),
+      Seq(Seq("1", "a"), Seq("1", "b"), Seq(null, "n"), Seq("2", "c")))
+    val literalCases = Seq(
+      // CLEARINSERT with keys reports the cleared rows
+      ParityCase(kv(Seq(Seq(1, "old1"), Seq(2, "old2"), Seq(7, "old7")),
+          Seq(Seq("1", "a"), Seq("1", "b"), Seq("3", "c"))),
+        keyed.copy(mode = ImportMode.ClearInsert),
+        rows = Some(Seq(Seq(1, "b"), Seq(3, "c"))), counts = Some((3L, 1L, 2L, 0L, 2L))),
+      // last-non-null join-dup: key 1 -> (A1, B1x); inserts 2 and 5
+      ParityCase(Fixture(Seq("a", "b"), pk = true,
+          Seq(Seq(1, "a1", "b1"), Seq(3, "a3", "b3"), Seq(9, "a9", "b9")),
+          Seq(Seq("1", "A1", null), Seq("1", null, "B1x"), Seq("2", "A2", "B2"),
+            Seq("5", null, "B5"))),
+        keyed.copy(mode = ImportMode.Upsert, updateWithNull = false),
+        rows = Some(Seq(Seq(1, "A1", "B1x"), Seq(2, "A2", "B2"), Seq(3, "a3", "b3"),
+          Seq(5, null, "B5"), Seq(9, "a9", "b9"))),
+        counts = Some((0L, 1L, 2L, 1L, 5L))),
+      // NO_CHECK INSERT counts no duplicates and appends every row
+      ParityCase(kv(Seq(Seq(1, "old")), Seq(Seq("1", "a"), Seq("1", "b"), Seq("2", "c"))),
+        keyed.copy(duplicateMode = DuplicateMode.NoCheck),
+        rows = Some(Seq(Seq(1, "a"), Seq(1, "b"), Seq(1, "old"), Seq(2, "c"))),
+        counts = Some((0L, 0L, 3L, 0L, 4L))),
+      // UPSERT with a NULL and a repeated key stages into a non-unique table
+      ParityCase(repeatedAndNullKey, keyed.copy(mode = ImportMode.Upsert)),
+      ParityCase(repeatedAndNullKey,
+        keyed.copy(mode = ImportMode.Upsert, duplicateMode = DuplicateMode.NoCheck)))
 
-  test("NO_CHECK INSERT: both merge paths count no duplicates and append every row") {
-    // no primary key, so the repeated source key 1 lands twice
-    def setup(): String = {
+    def sorted(rows: Seq[Seq[Any]]) = rows.sortBy(_.mkString("|"))
+    for (pc <- matrixCases ++ literalCases) {
+      val (fx, cfg) = (pc.fx, pc.cfg)
+      val clue = s"${cfg.mode} ${cfg.duplicateMode} updateWithNull=${cfg.updateWithNull} " +
+        fx.target
+      val cols = "k" +: fx.values
       val url = freshDb()
       JdbcSink.withConnection(url) { c =>
         val st = c.createStatement()
-        st.executeUpdate("CREATE TABLE \"NC\" (\"K\" INTEGER, \"V\" VARCHAR(10))")
-        st.executeUpdate("INSERT INTO \"NC\" VALUES (1, 'old')")
+        val pk = if (fx.pk) " PRIMARY KEY" else ""
+        st.executeUpdate(s"""CREATE TABLE "P" ("K" INTEGER$pk, """ +
+          fx.values.map(v => s""""${v.toUpperCase}" VARCHAR(10)""").mkString(", ") + ")")
         st.close()
+        val ps = c.prepareStatement(
+          s"INSERT INTO \"P\" VALUES (${cols.map(_ => "?").mkString(", ")})")
+        fx.target.foreach { r =>
+          r.zipWithIndex.foreach { case (v, i) => ps.setObject(i + 1, v) }
+          ps.executeUpdate()
+        }
+        ps.close()
       }
-      url
-    }
-    def readOut(url: String) =
-      spark.read.format("jdbc").option("url", url).option("dbtable", "NC").load()
-        .orderBy("K", "V").collect().map(r => (r.getInt(0), r.getString(1))).toSeq
-    val src = Seq(("1", "a"), ("1", "b"), ("2", "c")).toDF("k", "v")
-    val cfg = Importer.ImportConfig(mode = ImportMode.Insert, keyColumns = Seq("k"),
-      duplicateMode = DuplicateMode.NoCheck)
-    val urlSpark = setup()
-    val resSpark = Importer.importToJdbc(src, urlSpark, "nc", cfg)
-    val urlDb = setup()
-    val resDb = Importer.importToJdbc(src, urlDb, "nc", cfg.copy(mergeInDb = true))
-    assert(readOut(urlSpark) == Seq((1, "a"), (1, "b"), (1, "old"), (2, "c")))
-    assert(readOut(urlDb) == readOut(urlSpark))
-    for (r <- Seq(resSpark, resDb))
-      assert(r.duplicates == 0 && r.inserted == 3 && r.updated == 0 && r.finalCount == 4)
-  }
+      def frame(rows: Seq[Seq[Any]], schema: Seq[StructField]) = spark.createDataFrame(
+        spark.sparkContext.parallelize(rows.map(Row.fromSeq(_)), 1), StructType(schema))
+      val raw = frame(fx.source, cols.map(StructField(_, StringType)))
+      val res = Importer.importToJdbc(raw, url, "p", cfg)
+      val got = JdbcSink.withConnection(url) { c =>
+        val rs = c.createStatement().executeQuery("SELECT * FROM \"P\"")
+        Iterator.continually(rs).takeWhile(_.next())
+          .map(r => cols.indices.map(i => r.getObject(i + 1)).toSeq).toList
+      }
 
-  test("UPSERT with a NULL and a repeated key: both merge paths agree (non-unique staging)") {
-    // no primary key. A PRIMARY KEY staging table rejects the NULL key;
-    // a UNIQUE staging index rejects the repeated key NO_CHECK stages.
-    def setup(): String = {
-      val url = freshDb()
-      JdbcSink.withConnection(url) { c =>
-        val st = c.createStatement()
-        st.executeUpdate("CREATE TABLE \"NU\" (\"K\" INTEGER, \"V\" VARCHAR(10))")
-        st.executeUpdate("INSERT INTO \"NU\" VALUES (1, 'old1'), (3, 'old3')")
-        st.close()
+      // the reference twin of the merge matrix, on the same frames
+      val target = frame(fx.target,
+        StructField("k", IntegerType) +: fx.values.map(StructField(_, StringType)))
+      val staged = Ordinals.withArrivalOrdinal(raw.withColumn("k", col("k").cast("int")), "ord")
+      val keys = Seq(Merge.Key("k"))
+      val want = Merge.importMerge(target, staged, keys, cfg.mode, cfg.duplicateMode,
+        cfg.updateWithNull, sourceOrder = col("ord"), targetOrder = Seq(col("k")))
+        .collect().map(_.toSeq).toSeq
+      assert(sorted(got) == sorted(want), clue)
+      pc.rows.foreach(r => assert(sorted(got) == sorted(r), clue))
+
+      val clear = cfg.mode == ImportMode.ClearInsert
+      val sourceKeys = fx.source.flatMap(r => Option(r.head)).map(_.toInt).toSet
+      val updated = cfg.mode match {
+        case ImportMode.Update | ImportMode.Upsert if !cfg.duplicateMode.sourceOnly =>
+          fx.target.count(r => sourceKeys(r.head.asInstanceOf[Int])).toLong
+        case _ => 0L
       }
-      url
-    }
-    def readOut(url: String) =
-      spark.read.format("jdbc").option("url", url).option("dbtable", "NU").load()
-        .collect().map(r => (Option(r.get(0)).map(_.asInstanceOf[Int]), r.getString(1)))
-        .toSeq.sortBy(r => (r._1.getOrElse(Int.MinValue), r._2))
-    val src = Seq[(String, String)](("1", "a"), ("1", "b"), (null, "n"), ("2", "c"))
-      .toDF("k", "v")
-    def counts(r: Importer.ImportResult) = (r.duplicates, r.inserted, r.updated, r.finalCount)
-    for (dupMode <- Seq(DuplicateMode.UpdateAllJoin, DuplicateMode.NoCheck)) {
-      val cfg = Importer.ImportConfig(mode = ImportMode.Upsert, keyColumns = Seq("k"),
-        duplicateMode = dupMode)
-      val urlSpark = setup()
-      val resSpark = Importer.importToJdbc(src, urlSpark, "nu", cfg)
-      val urlDb = setup()
-      val resDb = Importer.importToJdbc(src, urlDb, "nu", cfg.copy(mergeInDb = true))
-      assert(readOut(urlDb) == readOut(urlSpark), dupMode)
-      assert(counts(resDb) == counts(resSpark), dupMode)
+      val dups = staged.count() - Merge.stage(staged, keys, cfg.duplicateMode,
+        cfg.updateWithNull, col("ord")).count()
+      val inserted = want.size - (if (clear) 0 else fx.target.size)
+      val counts = (res.deleted, res.duplicates, res.inserted, res.updated, res.finalCount)
+      assert(counts == ((if (clear) fx.target.size.toLong else 0L), dups, inserted.toLong,
+        updated, want.size.toLong), clue)
+      pc.counts.foreach(c => assert(counts == c, clue))
     }
   }
 
@@ -384,15 +383,62 @@ class JdbcSinkSpec extends SparkSpec {
       st.close()
     }
     val src = Seq(("1", "new"), ("3", "ins")).toDF("k", "v")
+    def readOut() = spark.read.format("jdbc").option("url", url).option("dbtable", "MU").load()
+      .orderBy("K", "V").collect().map(r => (r.getInt(0), r.getString(1))).toSeq
     val ex = intercept[IllegalArgumentException] {
-      Importer.importToJdbc(src, url, "mu",
-        Importer.ImportConfig(mode = ImportMode.Upsert, keyColumns = Seq("k"),
-          duplicateMode = DuplicateMode.MakeUniqueDrop, mergeInDb = true))
+      JdbcMerge.mergeViaSql(src.withColumn("k", col("k").cast("int")), url, "mu",
+        Seq("k"), ImportMode.Upsert, DuplicateMode.MakeUniqueDrop)
     }
     assert(ex.getMessage.contains("MakeUniqueDrop"))
-    val got = spark.read.format("jdbc").option("url", url).option("dbtable", "MU").load()
-      .orderBy("K", "V").collect().map(r => (r.getInt(0), r.getString(1))).toSeq
-    assert(got == Seq((1, "x"), (1, "y"), (2, "z")))
+    assert(readOut() == Seq((1, "x"), (1, "y"), (2, "z")))
+    // the same import through the orchestrator takes the Spark merge: the
+    // target keeps the first row of key 1 by (k, v), updates it, inserts 3
+    val res = Importer.importToJdbc(src, url, "mu",
+      Importer.ImportConfig(mode = ImportMode.Upsert, keyColumns = Seq("k"),
+        duplicateMode = DuplicateMode.MakeUniqueDrop))
+    assert(readOut() == Seq((1, "new"), (2, "z"), (3, "ins")))
+    assert(res.inserted == 0 && res.updated == 1 && res.finalCount == 3)
+  }
+
+  test("SQL merge UPSERT keeps identity ids and fills DEFAULT columns of inserted rows") {
+    val url = freshDb()
+    JdbcSink.withConnection(url) { c =>
+      val st = c.createStatement()
+      st.executeUpdate("CREATE TABLE \"IDT\" (\"ID\" INTEGER GENERATED ALWAYS AS IDENTITY, " +
+        "\"K\" INTEGER PRIMARY KEY, \"V\" VARCHAR(10), \"D\" VARCHAR(10) DEFAULT 'dflt')")
+      st.executeUpdate("INSERT INTO \"IDT\" (\"K\", \"V\", \"D\") VALUES (1, 'old', 'mine')")
+      st.close()
+    }
+    val src = Seq(("1", "upd"), ("2", "new")).toDF("k", "v")
+    val res = Importer.importToJdbc(src, url, "idt",
+      Importer.ImportConfig(mode = ImportMode.Upsert, keyColumns = Seq("k")))
+    val got = spark.read.format("jdbc").option("url", url).option("dbtable", "IDT").load()
+      .orderBy("K").collect()
+      .map(r => (r.getInt(0), r.getInt(1), r.getString(2), r.getString(3))).toSeq
+    // the INSERT names only the mapped columns: the DB generates the id
+    // and the default
+    assert(got == Seq((1, 1, "upd", "mine"), (2, 2, "new", "dflt")))
+    assert(res.inserted == 1 && res.updated == 1 && res.finalCount == 2)
+  }
+
+  test("SQL merge rolls the UPDATE back when the INSERT after it fails") {
+    val url = freshDb()
+    JdbcSink.withConnection(url) { c =>
+      val st = c.createStatement()
+      st.executeUpdate("CREATE TABLE \"CK\" (\"K\" INTEGER PRIMARY KEY, " +
+        "\"V\" VARCHAR(10) CHECK (\"V\" <> 'bad'))")
+      st.executeUpdate("INSERT INTO \"CK\" VALUES (1, 'old')")
+      st.close()
+    }
+    // key 1 updates fine; inserting key 2 violates the CHECK constraint
+    val src = Seq(("1", "upd"), ("2", "bad")).toDF("k", "v")
+    intercept[java.sql.SQLException] {
+      Importer.importToJdbc(src, url, "ck",
+        Importer.ImportConfig(mode = ImportMode.Upsert, keyColumns = Seq("k")))
+    }
+    val got = spark.read.format("jdbc").option("url", url).option("dbtable", "CK").load()
+      .collect().map(r => (r.getInt(0), r.getString(1))).toSeq
+    assert(got == Seq((1, "old")))
   }
 
   test("error channel in the orchestrator: unparseable rows diverted + exported") {
@@ -445,46 +491,29 @@ class JdbcSinkSpec extends SparkSpec {
       st.executeUpdate("CREATE TABLE \"AV\" (\"K\" INTEGER PRIMARY KEY, \"V\" VARCHAR(10), " +
         "\"CREATED\" VARCHAR(10), \"TOUCHED\" INTEGER)")
       st.executeUpdate("INSERT INTO \"AV\" (\"K\", \"V\") VALUES (1, 'old')")
+      st.executeUpdate("INSERT INTO \"AV\" (\"K\", \"V\", \"TOUCHED\") VALUES (3, 'keep', 7)")
       st.close()
     }
     val src = Seq(("1", "upd"), ("2", "new")).toDF("k", "v")
     Importer.importToJdbc(src, url, "av",
       Importer.ImportConfig(mode = ImportMode.Upsert, keyColumns = Seq("k"),
-        mergeInDb = true,
         additionalInsertValues = Map("created" -> "'ins'"),
         additionalUpdateValues = Map("touched" -> "41 + 1")))
     val got = spark.read.format("jdbc").option("url", url).option("dbtable", "AV").load()
       .orderBy("K").collect()
       .map(r => (r.getInt(0), r.getString(1), r.getString(2),
         if (r.isNullAt(3)) -1 else r.getInt(3)))
-    // key 1 updated (touched=42, created untouched-null), key 2 inserted (created='ins')
-    assert(got.toSeq == Seq((1, "upd", null, 42), (2, "new", "ins", -1)))
-  }
-
-  test("additional insert/update values on the Spark-side merge path") {
-    val url = freshDb()
-    JdbcSink.withConnection(url) { c =>
-      val st = c.createStatement()
-      st.executeUpdate("CREATE TABLE \"AVS\" (\"K\" INTEGER PRIMARY KEY, \"V\" VARCHAR(10), " +
-        "\"CREATED\" VARCHAR(10), \"TOUCHED\" INTEGER)")
-      st.executeUpdate("INSERT INTO \"AVS\" (\"K\", \"V\") VALUES (1, 'old')")
-      st.executeUpdate("INSERT INTO \"AVS\" (\"K\", \"V\", \"TOUCHED\") VALUES (3, 'keep', 7)")
-      st.close()
-    }
-    val src = Seq(("1", "upd"), ("2", "new")).toDF("k", "v")
-    // same scenario as the mergeInDb variant above, but cluster-side:
-    // key 1 updated (touched=42), key 2 inserted (created='ins'),
-    // key 3 untouched (not staged)
-    Importer.importToJdbc(src, url, "avs",
-      Importer.ImportConfig(mode = ImportMode.Upsert, keyColumns = Seq("k"),
-        additionalInsertValues = Map("created" -> "'ins'"),
-        additionalUpdateValues = Map("touched" -> "41 + 1")))
-    val got = spark.read.format("jdbc").option("url", url).option("dbtable", "AVS").load()
-      .orderBy("K").collect()
-      .map(r => (r.getInt(0), r.getString(1), r.getString(2),
-        if (r.isNullAt(3)) -1 else r.getInt(3)))
+    // key 1 updated (touched=42, created untouched-null), key 2 inserted
+    // (created='ins'), key 3 untouched (not staged)
     assert(got.toSeq == Seq((1, "upd", null, 42), (2, "new", "ins", -1),
       (3, "keep", null, 7)))
+    // an import mapping only the key still sets the extra update values
+    val res = Importer.importToJdbc(Seq("3").toDF("k"), url, "av",
+      Importer.ImportConfig(mode = ImportMode.Update, keyColumns = Seq("k"),
+        additionalUpdateValues = Map("touched" -> "8")))
+    val touched = spark.read.format("jdbc").option("url", url).option("dbtable", "AV").load()
+      .filter("K = 3").select("TOUCHED").collect().map(_.getInt(0)).toSeq
+    assert(touched == Seq(8) && res.updated == 1)
   }
 
   test("additional insert values reach sourceOnly-appended duplicate-key rows") {
