@@ -121,21 +121,15 @@ object Bench {
       .getOrElse(render(trim1dp = true, ordered.size - 1))
   }
 
-  def main(args: Array[String]): Unit = {
-    val only = envOnly
-    val sfDir = envSfDir
-    // COLD artifact builds per bench run (r14 verdict what's-wrong #2):
-    // the durable cross-JVM artifact cache is the PIPELINE contract
-    // (day-2 dedup must not rebuild day-1 pairs), but inside a bench it
-    // meant the artifact_* entries timed a warm parquet READ of files
-    // built by an earlier run — a timed entry must do its work. Point
-    // the cache at a fresh per-run temp dir unless the caller
-    // explicitly pinned one (profiling runs set GRAFT_ARTIFACT_CACHE to
-    // keep a warm cache on purpose). A shutdown hook deletes it on any
-    // exit: normal, an exception out of main, or a TERM from `timeout`.
-    // After a TERM, main keeps running while the hooks do (its entries
-    // fail fast once Spark's own hook stops the context) and would
-    // recreate the cache's subdirectories, so the hook lets it end first.
+  // COLD artifact builds per run: the durable cross-JVM artifact cache is
+  // the pipeline contract (day-2 dedup must not rebuild day-1 pairs), but
+  // a bench reading it times a warm parquet read, and a Verify reading it
+  // checks another checkout's builders. Point it at a fresh per-run temp
+  // dir unless GRAFT_ARTIFACT_CACHE / graft.artifact.cache pins one. A
+  // shutdown hook deletes it on any exit (normal, exception, TERM), after
+  // letting the calling main thread, which would recreate its
+  // subdirectories after a TERM, end first.
+  def freshArtifactCache(): Unit =
     if (!sys.env.contains("GRAFT_ARTIFACT_CACHE") &&
         !sys.props.contains("graft.artifact.cache")) {
       val dir = java.nio.file.Files
@@ -147,6 +141,11 @@ object Bench {
       }
       sys.props("graft.artifact.cache") = dir.toString
     }
+
+  def main(args: Array[String]): Unit = {
+    val only = envOnly
+    val sfDir = envSfDir
+    freshArtifactCache()
     val spark = session(envCpus)
     warm(spark, sfDir)
     // environment calibration: a fixed CPU-bound probe (median of 3

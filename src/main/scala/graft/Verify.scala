@@ -6,6 +6,7 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val only = Bench.envOnly
+    Bench.freshArtifactCache()
     val spark = Bench.session(Bench.envCpus)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries

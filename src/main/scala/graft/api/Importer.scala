@@ -3,7 +3,7 @@ package graft.api
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Merge, Ordinals}
+import graft.operators.Merge
 import graft.operators.Merge.{DuplicateMode, ImportMode, Key}
 import graft.sink.JdbcSink
 
@@ -15,11 +15,11 @@ import graft.sink.JdbcSink
   *   side-channel) → one of three branches, picked by keys, import mode
   *   and duplicate mode alone:
   *    - FAST PATH: keyless INSERT/CLEARINSERT → batch append;
-  *    - SQL MERGE (every other keyed import): Spark dedups the staged
-  *      side, the destination DB runs the set-based merge SQL
-  *      ([[graft.sink.JdbcMerge]], the reference's own strategy);
+  *    - SQL MERGE (every other keyed import): one Spark plan orders,
+  *      dedups and stages the source, the destination DB runs the merge
+  *      SQL ([[graft.sink.JdbcMerge]], the reference's own strategy);
   *    - SPARK MERGE (UPDATE_FIRST_* and MAKE_UNIQUE_* only, which must
-  *      tell target duplicates apart): arrival ordinal → dedup → mode
+  *      tell target duplicates apart): the same ordinal → dedup → mode
   *      matrix as DataFrame joins → atomic rewrite of the JDBC target.
   */
 object Importer {
@@ -198,10 +198,9 @@ object Importer {
       } else if (cfg.duplicateMode.updateFirst || cfg.duplicateMode.makeUnique) {
         // SPARK MERGE: ordinal → dedup → mode matrix → atomic rewrite.
         // staged is read by the dup accounting, the merge and the update
-        // count: cache it so the source pipeline (and the ordinal's
-        // partition-count pass) runs once — recomputation could even
-        // reorder arrival ordinals.
-        val staged = Ordinals.withArrivalOrdinal(mapped, "__graft_ord").cache()
+        // count: cache it so the source pipeline runs once and every
+        // reader sees the same ordinals.
+        val staged = mapped.withColumn("__graft_ord", monotonically_increasing_id()).cache()
         val beforeCount = targetLc.count()
         val (keys, ord) = (cfg.keyColumns.map(Key(_)), col("__graft_ord"))
         // duplicates = the rows the staging dedup removes (both paths)
@@ -246,7 +245,7 @@ object Importer {
         val st = graft.sink.JdbcMerge.mergeViaSql(mapped, url, table,
           cfg.keyColumns, cfg.mode, cfg.duplicateMode, cfg.updateWithNull,
           cfg.batchSize, cfg.additionalInsertValues, cfg.additionalUpdateValues)
-        (st.inserted, st.updated, st.deleted, st.duplicates)
+        (st.inserted, st.updated, st.deleted, valid - st.staged)
       }
 
     val finalCount = JdbcSink.withConnection(url)(c => JdbcSink.countRows(c, table))

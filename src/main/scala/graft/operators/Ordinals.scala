@@ -9,15 +9,15 @@ import org.apache.spark.sql.types.LongType
   * staged temp table (`DbUtilities.addIndexedIntegerColumn`,
   * reference DbImportWorker.java:465, populated at :992-997) and uses it
   * for every "first occurrence" decision (dedup keep-first, join-duplicates
-  * last-wins, UPDATE_FIRST_*). On Spark, arrival order must be made
-  * explicit; two strategies:
+  * last-wins, UPDATE_FIRST_*). Those only compare the ordinal, so the
+  * merges order by `monotonically_increasing_id`: the same (partition,
+  * position) order with no extra job. This object numbers 1-based:
   *
   *  - [[withArrivalOrdinal]]: true ingest order (partition-by-partition,
-  *    row-by-row) via a two-pass per-partition offset computation. Scales
-  *    linearly: one tiny job to count partition sizes, then a narrow
-  *    map — no shuffle, no global sort, works at 100 TB. Order is the
-  *    source's split order (for files: file order × in-file offset),
-  *    which is the exact analog of the reference's single-stream order.
+  *    row-by-row) via a two-pass per-partition offset computation: one
+  *    tiny job to count partition sizes, then a narrow map — no shuffle,
+  *    no global sort. Order is the source's split order (for files: file
+  *    order × in-file offset), the analog of the reference's stream order.
   *
   *  - [[withOrderedOrdinal]]: ordinal from an explicit deterministic
   *    ORDER BY — a range-partitioned distributed sort (Spark `orderBy`)

@@ -666,8 +666,8 @@ private[graft] trait RelationalQueries { this: SparkEntry.type =>
   // ---------------------------------------------------------------- q172
   /** JDBC sink round-trip — the ONE layer with no oracle-backed row
     * until now: a real import through [[api.Importer.importToJdbc]]
-    * into embedded Derby (auto-create + completeCommit `appendAtomic`
-    * staging on the first pass, then a keyed Upsert MERGE on a delta),
+    * into embedded Derby (auto-create + a keyed completeCommit Insert,
+    * then a keyed Upsert on a delta; both run `JdbcMerge.mergeViaSql`),
     * read back through the JDBC source. The oracle replays the merge
     * relationally (FULL JOIN + coalesce, delta wins). `bal` stays an
     * untouched IEEE double both ways (×2 is exact), so the hash

@@ -1,9 +1,9 @@
 package graft.sink
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, monotonically_increasing_id}
 
-import graft.operators.{Merge, Ordinals}
+import graft.operators.Merge
 import graft.operators.Merge.{DuplicateMode, ImportMode, Key}
 
 /** DB-side merge: the reference's own execution strategy
@@ -24,14 +24,15 @@ import graft.operators.Merge.{DuplicateMode, ImportMode, Key}
   */
 object JdbcMerge {
 
-  case class MergeStats(deleted: Long, duplicates: Long, inserted: Long, updated: Long)
+  case class MergeStats(deleted: Long, staged: Long, inserted: Long, updated: Long)
 
   private def q(n: String) = s""""${n.toUpperCase}""""
 
-  /** Stage + merge. `source` is the mapped, transformed import data (raw
-    * duplicates allowed — deduped Spark-side by [[Merge.stage]]). The
-    * UPDATE_FIRST_* and MAKE_UNIQUE_* modes are rejected: the SQL below
-    * updates every matching target row and never dedups the target.
+  /** Stage + merge. `source` is the mapped import data (raw duplicates
+    * allowed): one Spark plan orders it by `monotonically_increasing_id`,
+    * dedups it ([[Merge.stage]]) and fills staging; `MergeStats.staged`
+    * counts the rows filled. UPDATE_FIRST_* and MAKE_UNIQUE_* are rejected:
+    * the SQL below updates every matching target row, never dedups the target.
     *
     * @param additionalInsertValues extra target columns ← raw SQL
     *        evaluated by the DESTINATION DB inside the generated INSERT
@@ -49,18 +50,16 @@ object JdbcMerge {
     require(!dupMode.updateFirst && !dupMode.makeUnique,
       s"DB-side merge does not support duplicate mode $dupMode")
 
-    val withOrd = Ordinals.withArrivalOrdinal(source, "__graft_ord")
-    val rawCount = withOrd.count()
+    val withOrd = source.withColumn("__graft_ord", monotonically_increasing_id())
     val staged = Merge.stage(withOrd, keys.map(Key(_)), dupMode, updateWithNull,
       col("__graft_ord")).drop("__graft_ord")
-    val stagedCount = staged.count()
 
     val cols = staged.columns.toSeq
     val valCols = cols.filterNot(keys.contains)
     val keyEq = (t: String, s: String) =>
       keys.map(k => s"$t.${q(k)} = $s.${q(k)}").mkString(" AND ")
 
-    JdbcSink.withStagingTable(staged, url, table, batchSize, keys) { (tmp, _) =>
+    JdbcSink.withStagingTable(staged, url, table, batchSize, keys) { (tmp, fill) =>
       val T = q(table)
       val S = q(tmp)
 
@@ -110,7 +109,7 @@ object JdbcMerge {
               }
           }
           c.commit()
-          MergeStats(deleted, rawCount - stagedCount, inserted, updated)
+          MergeStats(deleted, fill.inserted, inserted, updated)
         } catch {
           case e: java.sql.SQLException => c.rollback(); throw e
         } finally st.close()

@@ -59,7 +59,7 @@ object StreamingImport {
                      loadTarget: () => DataFrame,
                      saveTarget: DataFrame => Unit): DataStreamWriter[org.apache.spark.sql.Row] =
     stream.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-      val staged = graft.operators.Ordinals.withArrivalOrdinal(batch, "__graft_ord")
+      val staged = batch.withColumn("__graft_ord", monotonically_increasing_id())
       val target = loadTarget()
       // importMerge's targetOrder must be unique WITHIN a duplicate key
       // group (joinDuplicates picks per-column max_by over it; a fully

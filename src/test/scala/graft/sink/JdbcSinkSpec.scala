@@ -441,6 +441,80 @@ class JdbcSinkSpec extends SparkSpec {
     assert(got == Seq((1, "old")))
   }
 
+  test("keyed SQL-merge UPSERT reads each source row 3 times: found, invalid, staging fill") {
+    val url = freshDb()
+    JdbcSink.withConnection(url)(c => JdbcSink.createTable(c, "rc",
+      StructType(Seq(StructField("k", IntegerType), StructField("v", StringType))),
+      keys = Seq("k")))
+    val reads = spark.sparkContext.longAccumulator("spec.rowsRead")
+    // non-deterministic, so no optimizer rule may prune or fold it away
+    val counted = udf { () => reads.add(1L); true }.asNondeterministic()
+    val rows = (1 to 20).map(i => ((i % 15).toString, s"v$i"))
+    val src = spark.sparkContext.parallelize(rows, 2).toDF("k", "v").filter(counted())
+    val res = Importer.importToJdbc(src, url, "rc",
+      Importer.ImportConfig(mode = ImportMode.Upsert, keyColumns = Seq("k")))
+    assert(res.found == 20 && res.duplicates == 5 && res.inserted == 15 &&
+      res.finalCount == 15)
+    assert(reads.value == 3L * rows.size)
+  }
+
+  test("first occurrence is partition order across partitions, on both merge paths") {
+    // keys 1 and 2 arrive in partition 0 and again in partition 2
+    val rows = Seq(("1", "a0", "x0"), ("2", "b0", "y0"), ("3", "c1", "z1"),
+      ("4", "d1", "z4"), ("1", "a2", null), ("2", null, "y2"))
+    val rdd = spark.sparkContext.parallelize(rows, 3)
+    assert(rdd.glom().collect().map(_.map(_._1).toSeq).toSeq ==
+      Seq(Seq("1", "2"), Seq("3", "4"), Seq("1", "2")))
+    val raw = rdd.toDF("k", "v", "w")
+    val targetRows = Seq(Seq(1, "t", "t"), Seq(1, "u", "u"), Seq(9, "n", "n"))
+    val target = spark.createDataFrame(
+      spark.sparkContext.parallelize(targetRows.map(Row.fromSeq(_)), 1),
+      StructType(Seq(StructField("k", IntegerType), StructField("v", StringType),
+        StructField("w", StringType))))
+    val keyed = Importer.ImportConfig(mode = ImportMode.Upsert, keyColumns = Seq("k"))
+    val common = Seq(Seq(3, "c1", "z1"), Seq(4, "d1", "z4"), Seq(9, "n", "n"))
+    val cases = Seq(
+      // keep-first: the partition-0 rows
+      keyed.copy(duplicateMode = DuplicateMode.UpdateAllDrop) -> Seq(
+        Seq(1, "a0", "x0"), Seq(1, "a0", "x0"), Seq(2, "b0", "y0")),
+      // last wins: the partition-2 values, nulls included
+      keyed.copy(duplicateMode = DuplicateMode.UpdateAllJoin) -> Seq(
+        Seq(1, "a2", null), Seq(1, "a2", null), Seq(2, null, "y2")),
+      // last non-null wins, per column
+      keyed.copy(duplicateMode = DuplicateMode.UpdateAllJoin, updateWithNull = false) -> Seq(
+        Seq(1, "a2", "x0"), Seq(1, "a2", "x0"), Seq(2, "b0", "y2")),
+      // Spark merge: the first target row of key 1 takes the partition-0 row
+      keyed.copy(duplicateMode = DuplicateMode.UpdateFirstDrop) -> Seq(
+        Seq(1, "a0", "x0"), Seq(1, "u", "u"), Seq(2, "b0", "y0")))
+    def sorted(rs: Seq[Seq[Any]]) = rs.sortBy(_.mkString("|"))
+    for ((cfg, changed) <- cases) {
+      val clue = s"${cfg.duplicateMode} updateWithNull=${cfg.updateWithNull}"
+      val url = freshDb()
+      JdbcSink.withConnection(url) { c =>
+        val st = c.createStatement()
+        st.executeUpdate("CREATE TABLE \"FO\" (\"K\" INTEGER, \"V\" VARCHAR(10), " +
+          "\"W\" VARCHAR(10))")
+        st.executeUpdate("INSERT INTO \"FO\" VALUES (1, 't', 't'), (1, 'u', 'u'), (9, 'n', 'n')")
+        st.close()
+      }
+      val res = Importer.importToJdbc(raw, url, "fo", cfg)
+      val got = JdbcSink.withConnection(url) { c =>
+        val rs = c.createStatement().executeQuery("SELECT * FROM \"FO\"")
+        Iterator.continually(rs).takeWhile(_.next())
+          .map(r => Seq[Any](r.getInt(1), r.getString(2), r.getString(3))).toList
+      }
+      assert(sorted(got) == sorted(changed ++ common), clue)
+      assert(res.duplicates == 2, clue)
+      // the reference twin, ordered by the 1-based arrival ordinal
+      val staged = Ordinals.withArrivalOrdinal(raw.withColumn("k", col("k").cast("int")), "ord")
+      val want = Merge.importMerge(target, staged, Seq(Merge.Key("k")), cfg.mode,
+        cfg.duplicateMode, cfg.updateWithNull, sourceOrder = col("ord"),
+        targetOrder = Seq(col("k"), col("v"), col("w")))
+        .collect().map(_.toSeq).toSeq
+      assert(sorted(got) == sorted(want), clue)
+    }
+  }
+
   test("error channel in the orchestrator: unparseable rows diverted + exported") {
     val url = freshDb()
     JdbcSink.withConnection(url)(c =>
