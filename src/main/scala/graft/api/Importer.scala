@@ -181,7 +181,11 @@ object Importer {
 
     val (inserted, updated, deleted, duplicates) =
       if (fastPath) {
-        val deleted = if (cfg.mode == ImportMode.ClearInsert)
+        // -c clears inside the promote transaction (rewriteAtomic, like
+        // the reference's clear after autoCommit=false); without -c the
+        // clear commits on its own before the append
+        val clear = cfg.mode == ImportMode.ClearInsert
+        val cleared = if (clear && !cfg.completeCommit)
           JdbcSink.withConnection(url)(c => JdbcSink.clearTable(c, table))
         else 0L
         // additional insert values evaluate in Spark here: a DB-only
@@ -191,10 +195,11 @@ object Importer {
           case (df, (c, sql)) => df.withColumn(c, expr(sql))
         }
         val stats =
-          if (cfg.completeCommit) JdbcSink.appendAtomic(withExtra, url, table, cfg.batchSize)
-          else JdbcSink.appendBatch(withExtra, url, table, cfg.batchSize,
+          if (!cfg.completeCommit) JdbcSink.appendBatch(withExtra, url, table, cfg.batchSize,
             singleRowFallback = !cfg.preventSingleFallback)
-        (stats.inserted, 0L, deleted, 0L)
+          else if (clear) JdbcSink.rewriteAtomic(withExtra, url, table, cfg.batchSize)
+          else JdbcSink.appendAtomic(withExtra, url, table, cfg.batchSize)
+        (stats.inserted, 0L, cleared + stats.deleted, 0L)
       } else if (cfg.duplicateMode.updateFirst || cfg.duplicateMode.makeUnique) {
         // SPARK MERGE: ordinal → dedup → mode matrix → atomic rewrite.
         // staged is read by the dup accounting, the merge and the update

@@ -20,7 +20,9 @@ import graft.sources._
   * -dateformat <f> -datetimeformat <f> -structure <file> -logerrors
   * -deactivatefk -deactivatetriggers -table <t> -import <f>
   * -secure -truststore <file> -truststorepassword <pw>
-  * -analyse -sp <schemafile> (JSON-schema/XSD pre-pass), plus the
+  * -analyse -sp <schemafile> (JSON-schema/XSD pre-pass) -e <charset>
+  * (decodes CSV, YAML, XML and vCard files; JSON keeps Spark's own
+  * charset detection, inline -data is already text), plus the
   * `importblob` mode with -updatesql/-blobfile (single file → BLOB
   * column, reference DbImport.java:234-235,834) and the
   * `createtruststore` mode (<host[:port]> <truststoreFile>
@@ -236,12 +238,8 @@ object Main {
     val p =
       if (compressed) {
         val raw = readFileBytes(spark, path)
-        val dec = Compression.decompress(new java.io.File(path).getName, raw, a.zipPassword)
-        val tmp = java.io.File.createTempFile("graft_dec_",
-          "_" + new java.io.File(lower).getName)
-        tmp.deleteOnExit()
-        java.nio.file.Files.write(tmp.toPath, dec)
-        tmp.getPath
+        tempFile("graft_dec_", "_" + new java.io.File(lower).getName,
+          Compression.decompress(new java.io.File(path).getName, raw, a.zipPassword))
       } else path
     val fmt = sourceFormat(a, path).getOrElse(
       throw new IllegalArgumentException(s"unsupported format: $path"))
@@ -256,10 +254,10 @@ object Main {
         a.schemaFile.foreach(SchemaValidation.validateJsonSchema(p, _))
         a.dataPath.map(dp => JsonSource.readArrayAt(spark, p, dp))
           .getOrElse(JsonSource.readArray(spark, p))
-      case "YAML" => YamlSource.read(spark, p)
+      case "YAML" => YamlSource.read(spark, p, a.encoding)
       case "XML" =>
         a.schemaFile.foreach(SchemaValidation.validateXsd(p, _))
-        XmlSource.read(spark, p, a.dataPath, a.nullToken)
+        XmlSource.read(spark, p, a.dataPath, a.nullToken, a.encoding)
       case "EXCEL" =>
         // one DataType covers both workbook generations (reference
         // ExcelDataProvider): OOXML zips start with "PK", BIFF8 with the
@@ -276,12 +274,22 @@ object Main {
         // password flag, like the reference's zipPassword plumbing)
         else XlsSource.read(spark, p, a.dataPath, a.headers, a.zipPassword)
       case "ODS" => OdsSource.read(spark, p, a.dataPath, a.headers)
-      case "VCF" => VcfSource.read(spark, p)
+      case "VCF" => VcfSource.read(spark, p, a.encoding)
       case "KDBX" =>
         KdbxSource.read(spark, p, a.kdbxPassword.getOrElse(
           throw new IllegalArgumentException(".kdbx import requires -kdbxpassword")))
       case other => throw new IllegalArgumentException(s"unsupported format: $other")
     }
+  }
+
+  /** A temp file (deleted on exit) holding `bytes`; its name ends in
+    * `suffix`, so the extension sniff sees the inner format.
+    */
+  private def tempFile(prefix: String, suffix: String, bytes: Array[Byte]): String = {
+    val tmp = java.io.File.createTempFile(prefix, suffix)
+    tmp.deleteOnExit()
+    java.nio.file.Files.write(tmp.toPath, bytes)
+    tmp.getPath
   }
 
   /** Whole-file bytes for any path Spark can see. A plain local file is
@@ -295,7 +303,7 @@ object Main {
     if (!isPattern && local.isFile)
       java.nio.file.Files.readAllBytes(local.toPath)
     else {
-      val rows = spark.read.format("binaryFile").load(path)
+      val rows = BinaryFiles.read(spark, path)
         .select("path", "content").limit(2).collect()
       require(rows.nonEmpty, s"no file matched: $path")
       require(rows.length == 1,
@@ -316,7 +324,7 @@ object Main {
       |  -deactivatefk -deactivatetriggers -table <t> -import <f> -blobfile <f>
       |  -updatesql <sql> -secure -truststore <file> -truststorepassword <pw>
       |  -insvalues <list> -updvalues <list> -iter <n> -sleep <s> -check <sql>
-      |  -e <charset> -v -l""".stripMargin
+      |  -e <charset> (CSV/YAML/XML/VCF files) -v -l""".stripMargin
 
   def run(spark: SparkSession, a: Args): Int = {
     if (a.help) { println(Usage); return 0 }
@@ -403,33 +411,20 @@ object Main {
     } else {
       val src =
         if (a.inline) {
-          // -data payload shape decides the parser (the reference feeds
-          // inline data through the SAME provider dispatch,
-          // DataProvider.java:150-156): JSON array/object, vCard, YAML
-          // sequence, else the CSV dialect
+          // -data goes through the SAME file dispatch (reference
+          // DataProvider.java:150-156): the payload lands in a temp file
+          // named by its format, -x or else its shape (JSON array/object,
+          // vCard, YAML sequence, else the CSV dialect). Argv text is
+          // already decoded, so the file is UTF-8 whatever -e says.
           val t = a.importPathOrData.trim
-          val fmt = a.dataType.filterNot(_ == "SQL").getOrElse {
+          val fmt = a.dataType.getOrElse {
             if (t.startsWith("[") || t.startsWith("{")) "JSON"
             else if (t.toUpperCase.startsWith("BEGIN:VCARD")) "VCF"
             else if (t.startsWith("- ")) "YAML"
             else "CSV"
           }
-          fmt match {
-            case "JSON" => JsonSource.readInline(spark, a.importPathOrData)
-            case "VCF" => VcfSource.readInline(spark, a.importPathOrData)
-            case "YAML" => YamlSource.readInline(spark, a.importPathOrData)
-            case "CSV" =>
-              import spark.implicits._
-              val csvOpts = CsvSource.CsvOptions(separator = a.sep,
-                quote = a.quote, escape = a.quoteEscape, header = a.headers,
-                nullToken = a.nullToken)
-              val ds = spark.createDataset(a.importPathOrData.split("\n").toSeq)
-              CsvSource.validateStructure(ds, csvOpts,
-                a.allowUnderfilled, a.removeSurplusColumns)
-              CsvSource.readLines(ds, csvOpts)
-            case other => throw new IllegalArgumentException(
-              s"unsupported inline data format: $other")
-          }
+          readSource(spark, a.copy(encoding = "UTF-8"), tempFile("graft_inline_",
+            "." + fmt.toLowerCase, a.importPathOrData.getBytes("UTF-8")))
         } else readSource(spark, a, a.importPathOrData)
       if (a.analyse) {
         MultiImporter.analyse(src).foreach { case (c, t) => println(s"$c: $t") }

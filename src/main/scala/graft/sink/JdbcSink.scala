@@ -23,7 +23,9 @@ import org.apache.spark.util.LongAccumulator
   */
 object JdbcSink {
 
-  case class WriteStats(inserted: Long, failedRows: Long, fallbackBlocks: Long)
+  /** `deleted`: the rows `rewriteAtomic`'s DELETE removed, else 0. */
+  case class WriteStats(inserted: Long, failedRows: Long, fallbackBlocks: Long,
+                        deleted: Long = 0L)
 
   def withConnection[A](url: String)(f: Connection => A): A = {
     val c = DriverManager.getConnection(url)
@@ -246,7 +248,8 @@ object JdbcSink {
   /** Atomic full-table REWRITE: stage `df` while the target stays
     * intact and readable, then DELETE + INSERT…SELECT inside ONE
     * transaction — at no point can a failure leave the target empty
-    * (the failure mode of a separate clear followed by an append).
+    * (the failure mode of a separate clear followed by an append). The
+    * stats carry the DELETE's update count.
     */
   def rewriteAtomic(df: DataFrame, url: String, table: String,
                     batchSize: Int = 1000): WriteStats =
@@ -260,14 +263,15 @@ object JdbcSink {
         c.setAutoCommit(false)
         val st = c.createStatement()
         try {
-          if (clearFirst)
-            st.executeUpdate(s"""DELETE FROM "${table.toUpperCase}"""")
+          val deleted =
+            if (clearFirst) st.executeUpdate(s"""DELETE FROM "${table.toUpperCase}"""").toLong
+            else 0L
           st.executeUpdate(
             s"""INSERT INTO "${table.toUpperCase}" ($cols) SELECT $cols FROM "${tmp.toUpperCase}"""")
           c.commit()
+          stats.copy(deleted = deleted)
         } catch { case e: SQLException => c.rollback(); throw e } finally st.close()
       }
-      stats
     }
 
   /** The staging table's whole life (`tmp_<ts>`,

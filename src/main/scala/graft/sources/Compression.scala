@@ -231,7 +231,7 @@ object Compression {
                     zipPassword: Option[String] = None,
                     charset: String = "UTF-8"): Dataset[(String, String)] = {
     import spark.implicits._
-    spark.read.format("binaryFile").load(path)
+    BinaryFiles.read(spark, path)
       .select("path", "content").as[(String, Array[Byte])]
       .map { case (p, b) => (p, new String(decompress(p, b, zipPassword), charset)) }
   }

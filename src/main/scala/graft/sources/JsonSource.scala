@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** JSON source (reference dataprovider/JsonDataProvider.java:35-323,
   * SURVEY §2.1): the reference streams a top-level array of flat objects
@@ -34,14 +34,5 @@ object JsonSource {
     val steps = dataPath.split("[/.]").filter(_.nonEmpty)
     val arr = steps.map(k => s"`$k`").mkString(".")
     root.select(explode(col(arr)).as("__graft_row")).select(col("__graft_row.*"))
-  }
-
-  /** Inline `-data` payload (DataProvider.java:150-156): parse the
-    * literal string (array or JSON-lines) through the same code path.
-    */
-  def readInline(spark: SparkSession, payload: String): DataFrame = {
-    import spark.implicits._
-    val ds: Dataset[String] = spark.createDataset(Seq(payload))
-    spark.read.option("multiLine", "true").json(ds)
   }
 }

@@ -8,8 +8,7 @@ import javax.crypto.Cipher
 import javax.crypto.spec.{IvParameterSpec, SecretKeySpec}
 import javax.xml.stream.{XMLInputFactory, XMLStreamConstants}
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** KeePass 2 (.kdbx, formats 3.1 AND 4) source (reference
   * dataprovider/KdbxDataProvider.java:31-280, SURVEY §2.1): decrypt with
@@ -276,29 +275,12 @@ object KdbxSource {
     out.toSeq
   }
 
-  /** One kdbx file per task (`binaryFile`), union-of-keys schema. */
-  def read(spark: SparkSession, path: String, password: String): DataFrame = {
-    import spark.implicits._
-    // A glob in the filename goes through pathGlobFilter on the parent
-    // directory: loading the glob path directly works too, but Spark's
-    // streaming-sink metadata probe then logs a FileNotFoundException
-    // stack trace for the unexpanded pattern on every read.
-    val p = new java.io.File(path)
-    val reader = spark.read.format("binaryFile")
-    val loaded =
-      if (p.getName.exists(c => c == '*' || c == '?'))
-        reader.option("pathGlobFilter", p.getName).load(p.getParent)
-      else reader.load(path)
-    val files = loaded.select("content").as[Array[Byte]]
-    val parsed = files.rdd.flatMap { b =>
+  /** One kdbx file per task, union-of-keys schema. */
+  def read(spark: SparkSession, path: String, password: String): DataFrame =
+    WholeFileFrame.byKeys(spark, path) { b =>
       val (xml, inner) = decryptXmlWithStream(b, password)
       parseEntries(xml, inner)
     }
-    parsed.cache()
-    val cols = parsed.flatMap(_.keys).distinct().collect().sorted
-    val schema = StructType(cols.map(c => StructField(c, StringType, nullable = true)))
-    spark.createDataFrame(parsed.map(m => Row.fromSeq(cols.map(c => m.getOrElse(c, null)))), schema)
-  }
 }
 
 /** Fixture-side kdbx 3.1 + 4 writers (deterministic seeds for tests). */

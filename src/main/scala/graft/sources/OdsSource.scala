@@ -4,8 +4,7 @@ import java.io.ByteArrayInputStream
 import java.util.zip.ZipInputStream
 import javax.xml.stream.{XMLInputFactory, XMLStreamConstants}
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** OpenDocument Spreadsheet (.ods) source (reference
   * dataprovider/OdsDataProvider.java:25-436, SURVEY §2.1): content.xml
@@ -110,31 +109,10 @@ object OdsSource {
       .dropWhile(r => r.forall(x => x == null || x.isEmpty)).reverse
       .map(_.reverse.dropWhile(x => x == null || x.isEmpty).reverse.toIndexedSeq)
       .filter(_.nonEmpty).toSeq
-    if (trimmed.isEmpty) (IndexedSeq.empty, Seq.empty)
-    else {
-      val width = trimmed.map(_.size).max
-      val padded = trimmed.map(_.padTo(width, null: String))
-      if (header) (padded.head.zipWithIndex.map { case (h, i) =>
-        if (h == null || h.isEmpty) s"column_${i + 1}" else h
-      }, padded.tail)
-      else ((1 to width).map(i => s"column_$i"), padded)
-    }
+    WholeFileFrame.headed(trimmed, header)
   }
 
   def read(spark: SparkSession, path: String, sheetName: Option[String] = None,
-           header: Boolean = true): DataFrame = {
-    import spark.implicits._
-    val files = BinaryFiles.read(spark, path)
-      .select("content").as[Array[Byte]]
-    val parsed = files.rdd.map(b => parseContent(b, sheetName, header))
-    parsed.cache()
-    // deterministic schema across files: widest header list wins
-    val headerLists = parsed.map(_._1).collect()
-    require(headerLists.nonEmpty, s"no documents matched $path")
-    val cols = headerLists.maxBy(h => (h.size, h.mkString("\u0000")))
-    val schema = StructType(cols.map(c => StructField(c, StringType, nullable = true)))
-    val rows = parsed.flatMap(_._2)
-      .map(r => Row.fromSeq(r.padTo(cols.size, null).take(cols.size)))
-    spark.createDataFrame(rows, schema)
-  }
+           header: Boolean = true): DataFrame =
+    WholeFileFrame.byHeader(spark, path)(b => parseContent(b, sheetName, header))
 }

@@ -1,7 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
-import org.apache.spark.sql.types.{BinaryType, StringType, StructField, StructType}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** vCard source (reference dataprovider/VcfDataProvider.java:30-301,
   * SURVEY §2.1): `BEGIN:VCARD … END:VCARD` records flattened to scalar
@@ -109,48 +108,9 @@ object VcfSource {
     }.filter(_.nonEmpty)
   }
 
-  /** Column type per union-of-keys column: binary iff any card holds
-    * bytes for it (base64 property), string otherwise.
+  /** One file per task, decoded with `charset`; union-of-keys schema,
+    * a base64 property's column binary.
     */
-  private def schemaFor(cols: Seq[String], binaryCols: Set[String]): StructType =
-    StructType(cols.map(c => StructField(c,
-      if (binaryCols.contains(c)) BinaryType else StringType, nullable = true)))
-
-  /** A BinaryType column's value for one card: a card that carried the
-    * property as a plain string (e.g. `PHOTO:https://…` next to another
-    * card's base64 photo) coerces to its UTF-8 bytes — Catalyst rejects
-    * a String in a binary column outright.
-    */
-  private def cell(m: Map[String, Any], c: String, binaryCols: Set[String]): Any =
-    m.get(c).map {
-      case s: String if binaryCols.contains(c) => s.getBytes("UTF-8")
-      case v => v
-    }.orNull
-
-  def read(spark: SparkSession, path: String): DataFrame = {
-    import spark.implicits._
-    val files: Dataset[String] = spark.read.option("wholetext", "true").text(path).as[String]
-    val parsed = files.rdd.flatMap(parseCards)
-    parsed.cache()
-    val cols = parsed.flatMap(_.keys).distinct().collect().sorted.toSeq
-    val binaryCols = parsed.flatMap(_.collect {
-      case (k, _: Array[Byte]) => k
-    }).distinct().collect().toSet
-    val schema = schemaFor(cols, binaryCols)
-    spark.createDataFrame(
-      parsed.map(m => Row.fromSeq(cols.map(c => cell(m, c, binaryCols)))), schema)
-  }
-
-  /** Parse an in-memory payload (inline data / decompressed stream). */
-  def readInline(spark: SparkSession, payload: String): DataFrame = {
-    import scala.jdk.CollectionConverters._
-    val rows = parseCards(payload)
-    val cols = rows.flatMap(_.keys).distinct.sorted
-    val binaryCols = rows.flatMap(_.collect {
-      case (k, _: Array[Byte]) => k
-    }).toSet
-    val schema = schemaFor(cols, binaryCols)
-    spark.createDataFrame(
-      rows.map(m => Row.fromSeq(cols.map(c => cell(m, c, binaryCols)))).asJava, schema)
-  }
+  def read(spark: SparkSession, path: String, charset: String = "UTF-8"): DataFrame =
+    WholeFileFrame.byKeys(spark, path)(b => parseCards(new String(b, charset)))
 }

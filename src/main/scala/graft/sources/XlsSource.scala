@@ -2,8 +2,7 @@ package graft.sources
 
 import java.nio.{ByteBuffer, ByteOrder}
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Legacy Excel 97-2003 (.xls, BIFF8) source — the reference reads these
   * via POI HSSF (dataprovider/ExcelDataProvider.java, SURVEY §2.1); this
@@ -335,29 +334,11 @@ object XlsSource {
       cs.foreach { case (_, c, v) => arr(c) = v }
       arr.toIndexedSeq
     }
-    val trimmed = byRow.reverse.dropWhile(_.forall(v => v == null || v.isEmpty)).reverse
-    if (trimmed.isEmpty) return (IndexedSeq.empty, Seq.empty)
-    if (header)
-      (trimmed.head.zipWithIndex.map { case (h, i) =>
-        if (h == null || h.isEmpty) s"column_${i + 1}" else h
-      }, trimmed.tail)
-    else ((1 to maxCol + 1).map(i => s"column_$i"), trimmed)
+    WholeFileFrame.headed(
+      byRow.reverse.dropWhile(_.forall(v => v == null || v.isEmpty)).reverse, header)
   }
 
   def read(spark: SparkSession, path: String, sheetName: Option[String] = None,
-           header: Boolean = true, password: Option[String] = None): DataFrame = {
-    import spark.implicits._
-    val files = BinaryFiles.read(spark, path)
-      .select("content").as[Array[Byte]]
-    val parsed = files.rdd.map(b => parseWorkbook(b, sheetName, header, password))
-    parsed.cache()
-    // deterministic schema across workbooks: widest header list wins
-    val headerLists = parsed.map(_._1).collect()
-    require(headerLists.nonEmpty, s"no workbooks matched $path")
-    val cols = headerLists.maxBy(h => (h.size, h.mkString("\u0000")))
-    val schema = StructType(cols.map(c => StructField(c, StringType, nullable = true)))
-    val rows = parsed.flatMap(_._2)
-      .map(r => Row.fromSeq(r.padTo(cols.size, null).take(cols.size)))
-    spark.createDataFrame(rows, schema)
-  }
+           header: Boolean = true, password: Option[String] = None): DataFrame =
+    WholeFileFrame.byHeader(spark, path)(b => parseWorkbook(b, sheetName, header, password))
 }

@@ -4,8 +4,7 @@ import java.io.ByteArrayInputStream
 import java.util.zip.ZipInputStream
 import javax.xml.stream.{XMLInputFactory, XMLStreamConstants}
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Excel 2007+ (.xlsx) source (reference
   * dataprovider/ExcelDataProvider.java:37-606, SURVEY §2.1): OOXML is a
@@ -236,36 +235,11 @@ object XlsxSource {
     }
     val shared = sharedStrings(parts.get("xl/sharedStrings.xml"))
     val dates = dateStyles(parts.get("xl/styles.xml"))
-    val rows = parseSheet(parts(path), shared, dates)
-    if (rows.isEmpty) (IndexedSeq.empty, Seq.empty)
-    else {
-      val width = rows.map(_.size).max
-      val padded = rows.map(r => r.padTo(width, null: String))
-      if (header) (padded.head.zipWithIndex.map { case (h, i) =>
-        if (h == null || h.isEmpty) s"column_${i + 1}" else h
-      }, padded.tail)
-      else ((1 to width).map(i => s"column_$i"), padded)
-    }
+    WholeFileFrame.headed(parseSheet(parts(path), shared, dates), header)
   }
 
   /** One workbook per task; `sheetName` = the reference's `-dp`. */
   def read(spark: SparkSession, path: String, sheetName: Option[String] = None,
-           header: Boolean = true): DataFrame = {
-    import spark.implicits._
-    val files = BinaryFiles.read(spark, path)
-      .select("content").as[Array[Byte]]
-    val parsed = files.rdd.map(b => parseWorkbook(b, sheetName, header))
-    parsed.cache()
-    // deterministic schema across workbooks: the WIDEST header list wins
-    // (ties: lexicographic) — an RDD reduce order must not pick it
-    val headerLists = parsed.map(_._1).collect()
-    require(headerLists.nonEmpty, s"no workbooks matched $path")
-    val cols = headerLists.maxBy(h => (h.size, h.mkString("\u0000")))
-    val schema = StructType(cols.map(c => StructField(c, StringType, nullable = true)))
-    // pad narrow rows, clamp wide ones — silent misalignment is worse
-    // than dropping trailing unheadered cells
-    val rows = parsed.flatMap(_._2)
-      .map(r => Row.fromSeq(r.padTo(cols.size, null).take(cols.size)))
-    spark.createDataFrame(rows, schema)
-  }
+           header: Boolean = true): DataFrame =
+    WholeFileFrame.byHeader(spark, path)(b => parseWorkbook(b, sheetName, header))
 }

@@ -3,8 +3,7 @@ package graft.sources
 import javax.xml.stream.{XMLInputFactory, XMLStreamConstants}
 import java.io.StringReader
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** XML source (reference dataprovider/XmlDataProvider.java:40-349,
   * SURVEY §2.1): streaming StAX parse of
@@ -12,9 +11,9 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   * slash path walked down to the list tag and a null-string token.
   *
   * Scale model: one XML document is inherently one stream, so
-  * parallelism is *across files* — each file is one task
-  * (`wholetext`), parsed with a pull parser (constant memory), exactly
-  * the reference's streaming behavior but N files at a time.
+  * parallelism is *across files* — each file is one task, decoded with
+  * the `-e` charset and parsed with a pull parser (constant memory),
+  * exactly the reference's streaming behavior but N files at a time.
   */
 object XmlSource {
 
@@ -81,19 +80,10 @@ object XmlSource {
   }
 
   /** Read one-or-many XML files (glob ok): each file is a task; the
-    * column set is the union of observed tags (first-appearance order
-    * within a file, name-sorted across files for determinism).
+    * column set is the union of observed tags, name-sorted.
     */
   def read(spark: SparkSession, path: String, dataPath: Option[String] = None,
-           nullToken: Option[String] = None): DataFrame = {
-    import spark.implicits._
-    val files: Dataset[String] = spark.read.option("wholetext", "true").text(path).as[String]
-    val parsed = files.rdd.flatMap(x => parseDocument(x, dataPath, nullToken))
-    parsed.cache()
-    val cols = parsed.flatMap(_.keys).distinct().collect().sorted
-    val schema = StructType(cols.map(c => StructField(c, StringType, nullable = true)))
-    val rows = parsed.map(m => Row.fromSeq(cols.map(c => m.getOrElse(c, null))))
-    val df = spark.createDataFrame(rows, schema)
-    df
-  }
+           nullToken: Option[String] = None, charset: String = "UTF-8"): DataFrame =
+    WholeFileFrame.byKeys(spark, path)(b =>
+      parseDocument(new String(b, charset), dataPath, nullToken))
 }

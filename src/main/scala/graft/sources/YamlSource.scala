@@ -2,8 +2,7 @@ package graft.sources
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** YAML source (reference dataprovider/YamlDataProvider.java:32-302,
   * SURVEY §2.1): a YAML sequence of flat mappings, same contract as the
@@ -34,25 +33,9 @@ object YamlSource {
     }
   }
 
-  /** One file per task (`wholetext`), union-of-keys schema, all-string
-    * columns (cast downstream via the mapping).
+  /** One file per task, decoded with `charset`; union-of-keys schema,
+    * all-string columns (cast downstream via the mapping).
     */
-  def read(spark: SparkSession, path: String): DataFrame = {
-    import spark.implicits._
-    val files: Dataset[String] = spark.read.option("wholetext", "true").text(path).as[String]
-    val parsed = files.rdd.flatMap(parseDocument)
-    parsed.cache()
-    val cols = parsed.flatMap(_.keys).distinct().collect().sorted
-    val schema = StructType(cols.map(c => StructField(c, StringType, nullable = true)))
-    spark.createDataFrame(parsed.map(m => Row.fromSeq(cols.map(c => m.getOrElse(c, null)))), schema)
-  }
-
-  /** Inline `-data` payload. */
-  def readInline(spark: SparkSession, payload: String): DataFrame = {
-    val rows = parseDocument(payload)
-    val cols = rows.flatMap(_.keys).distinct.sorted
-    val schema = StructType(cols.map(c => StructField(c, StringType, nullable = true)))
-    spark.createDataFrame(
-      rows.map(m => Row.fromSeq(cols.map(c => m.getOrElse(c, null)))).asJava, schema)
-  }
+  def read(spark: SparkSession, path: String, charset: String = "UTF-8"): DataFrame =
+    WholeFileFrame.byKeys(spark, path)(b => parseDocument(new String(b, charset)))
 }

@@ -77,11 +77,31 @@ class CliSpec extends SparkSpec {
     assert(got == Map("id" -> "INTEGER", "name" -> "VARCHAR", "price" -> "DOUBLE"))
   }
 
+  private def tableRows(url: String, table: String): (Seq[String], Seq[String]) = {
+    val df = spark.read.format("jdbc").option("url", url)
+      .option("dbtable", table.toUpperCase).load()
+    (df.columns.toSeq, df.collect().map(_.toSeq.mkString("|")).toSeq.sorted)
+  }
+
   test("inline -data payload imports through the same path") {
-    val url = freshDb()
-    val a = Main.parseArgs(Array(url, "inline_t", "id;v\n5;q", "-data", "-create", "-i", "INSERT"))
-    assert(Main.run(spark, a) == 0)
-    JdbcSink.withConnection(url)(c => assert(JdbcSink.countRows(c, "inline_t") == 1))
+    val dir = SyntheticFixtures.dir("cliinline")
+    val payloads = Seq(
+      "csv" -> "id;v\n5;q\n6;r",
+      "json" -> """[{"id": 5, "v": "q"}, {"id": 6, "v": "r"}]""",
+      "yaml" -> "- id: 5\n  v: q\n- id: 6\n  v: r\n",
+      "vcf" -> ("BEGIN:VCARD\nVERSION:3.0\nN:Doe;Jane;;;\nTEL:123\nEND:VCARD\n" +
+        "BEGIN:VCARD\nVERSION:3.0\nN:Roe;Rick;;;\nEND:VCARD\n"))
+    payloads.foreach { case (ext, payload) =>
+      val url = freshDb()
+      val f = SyntheticFixtures.writeText(new File(dir, s"rows.$ext"), payload)
+      val inline = Main.parseArgs(Array(url, "inline_t", payload, "-data", "-create", "-i", "INSERT"))
+      val file = Main.parseArgs(Array(url, "file_t", f.getPath, "-create", "-i", "INSERT"))
+      assert(Main.run(spark, inline) == 0, ext)
+      assert(Main.run(spark, file) == 0, ext)
+      val (cols, rows) = tableRows(url, "inline_t")
+      assert(rows.size == 2, ext)
+      assert((cols, rows) == tableRows(url, "file_t"), ext)
+    }
   }
 
   test("importblob mode loads one file into a BLOB column via -updatesql") {
@@ -207,6 +227,25 @@ class CliSpec extends SparkSpec {
     val a = Main.parseArgs(Array(url, "-", f.getPath, "-x", "SQL"))
     assert(Main.run(spark, a) == 0)
     JdbcSink.withConnection(url)(c => assert(JdbcSink.countRows(c, "scripted") == 1))
+  }
+
+  test("-e decodes YAML, XML and vCard files too") {
+    val dir = SyntheticFixtures.dir("clicharset")
+    Seq(
+      "latin.yaml" -> ("- id: 1\n  name: Müller\n", "NAME"),
+      "latin.xml" -> ("<list><entry><id>1</id><name>Müller</name></entry></list>", "NAME"),
+      "latin.vcf" -> ("BEGIN:VCARD\nVERSION:3.0\nN:Müller;Hans;;;\nEND:VCARD\n", "LASTNAME")
+    ).foreach { case (name, (content, column)) =>
+      val url = freshDb()
+      val f = new File(dir, name)
+      java.nio.file.Files.write(f.toPath, content.getBytes("ISO-8859-1"))
+      val a = Main.parseArgs(Array(url, "latin_t", f.getPath,
+        "-e", "ISO-8859-1", "-create", "-i", "INSERT"))
+      assert(Main.run(spark, a) == 0, name)
+      val got = spark.read.format("jdbc").option("url", url)
+        .option("dbtable", "LATIN_T").load().collect()(0)
+      assert(got.getAs[String](column) == "Müller", name)
+    }
   }
 
   test("reference argv compatibility: case-insensitive flags, aliases, new flags") {

@@ -114,6 +114,29 @@ class JdbcSinkSpec extends SparkSpec {
     JdbcSink.withConnection(url)(c => assert(JdbcSink.countRows(c, "at") == 3))
   }
 
+  test("completeCommit: a keyless CLEARINSERT clears inside the all-or-nothing write") {
+    val url = freshDb()
+    JdbcSink.withConnection(url) { c =>
+      val st = c.createStatement()
+      st.executeUpdate("CREATE TABLE \"AT\" (\"K\" INTEGER PRIMARY KEY)")
+      st.executeUpdate("INSERT INTO \"AT\" VALUES (7)")
+      st.close()
+    }
+    val cfg = Importer.ImportConfig(mode = ImportMode.ClearInsert, completeCommit = true)
+    // staging takes 5, 5; the promote's INSERT violates the PK after its
+    // DELETE ran, so the DELETE must roll back with it
+    intercept[java.sql.SQLException] {
+      Importer.importToJdbc(Seq(5, 5).toDF("k"), url, "at", cfg)
+    }
+    // AT is a Derby keyword: quote it
+    val left = spark.read.format("jdbc").option("url", url).option("dbtable", "\"AT\"").load()
+      .collect().map(_.getInt(0)).toSeq
+    assert(left == Seq(7))
+    // a clean run reports the DELETE's own count
+    val res = Importer.importToJdbc(Seq(5, 6).toDF("k"), url, "at", cfg)
+    assert(res.deleted == 1 && res.inserted == 2 && res.finalCount == 2)
+  }
+
   test("-create: inferred schema with VARCHAR sizing and PK keys") {
     val url = freshDb()
     val src = Seq(("1", "1.5", "abcdef", "01.02.2003"), ("2", "2.5", "xy", "02.02.2003"))

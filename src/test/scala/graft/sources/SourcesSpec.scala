@@ -143,7 +143,7 @@ class SourcesSpec extends SparkSpec {
     val vcf =
       s"BEGIN:VCARD\nN:A;B;;;\nPHOTO;ENCODING=b:$b64\nEND:VCARD\n" +
         "BEGIN:VCARD\nN:C;D;;;\nPHOTO:https://example.com/x.jpg\nEND:VCARD\n"
-    val df = VcfSource.readInline(spark, vcf)
+    val df = VcfSource.read(spark, tmp("mixed_photo.vcf", vcf).getPath)
     assert(df.schema("photo").dataType == org.apache.spark.sql.types.BinaryType)
     val vals = df.select("photo").collect()
       .map(r => new String(r.getAs[Array[Byte]](0))).sorted
@@ -159,7 +159,7 @@ class SourcesSpec extends SparkSpec {
         "END:VCARD\n"
     val cards = VcfSource.parseCards(vcf)
     assert(cards.head("photo").asInstanceOf[Array[Byte]].toSeq == photoBytes.toSeq)
-    val df = VcfSource.readInline(spark, vcf)
+    val df = VcfSource.read(spark, tmp("b64_photo.vcf", vcf).getPath)
     assert(df.schema("photo").dataType ==
       org.apache.spark.sql.types.BinaryType)
     val got = df.select("photo").head.getAs[Array[Byte]](0)
