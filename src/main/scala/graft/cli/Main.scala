@@ -21,8 +21,8 @@ import graft.sources._
   * -deactivatefk -deactivatetriggers -table <t> -import <f>
   * -secure -truststore <file> -truststorepassword <pw>
   * -analyse -sp <schemafile> (JSON-schema/XSD pre-pass) -e <charset>
-  * (decodes CSV, YAML, XML and vCard files; JSON keeps Spark's own
-  * charset detection, inline -data is already text), plus the
+  * (decodes CSV, JSON, YAML, XML and vCard files and the -sp JSON
+  * pre-pass; inline -data is already text), plus the
   * `importblob` mode with -updatesql/-blobfile (single file → BLOB
   * column, reference DbImport.java:234-235,834) and the
   * `createtruststore` mode (<host[:port]> <truststoreFile>
@@ -251,9 +251,10 @@ object Main {
           a.allowUnderfilled, a.removeSurplusColumns)
         CsvSource.read(spark, p, csvOpts)
       case "JSON" =>
-        a.schemaFile.foreach(SchemaValidation.validateJsonSchema(p, _))
-        a.dataPath.map(dp => JsonSource.readArrayAt(spark, p, dp))
-          .getOrElse(JsonSource.readArray(spark, p))
+        val j = withoutUtf8Bom(p, a.encoding)
+        a.schemaFile.foreach(SchemaValidation.validateJsonSchema(j, _, a.encoding))
+        a.dataPath.map(dp => JsonSource.readArrayAt(spark, j, dp, a.encoding))
+          .getOrElse(JsonSource.readArray(spark, j, a.encoding))
       case "YAML" => YamlSource.read(spark, p, a.encoding)
       case "XML" =>
         a.schemaFile.foreach(SchemaValidation.validateXsd(p, _))
@@ -292,6 +293,23 @@ object Main {
     tmp.getPath
   }
 
+  /** `path`, or a temp copy of it without its leading UTF-8 byte-order
+    * mark: a UTF-8 `Reader` keeps the mark as a U+FEFF character, which
+    * the JSON parsers reject. Only a plain local file is sniffed.
+    */
+  private def withoutUtf8Bom(path: String, charset: String): String = {
+    val f = new java.io.File(path)
+    val bom = Array(0xEF, 0xBB, 0xBF).map(_.toByte)
+    val hasBom = f.isFile &&
+      java.nio.charset.Charset.forName(charset) == java.nio.charset.StandardCharsets.UTF_8 && {
+        val in = new java.io.FileInputStream(f)
+        try in.readNBytes(3).sameElements(bom) finally in.close()
+      }
+    if (!hasBom) path
+    else tempFile("graft_nobom_", "_" + f.getName,
+      java.nio.file.Files.readAllBytes(f.toPath).drop(3))
+  }
+
   /** Whole-file bytes for any path Spark can see. A plain local file is
     * read directly (no Spark job); anything else — `hdfs://`/`s3://`
     * schemes, `file:` URIs, residual glob patterns — goes through the
@@ -324,7 +342,7 @@ object Main {
       |  -deactivatefk -deactivatetriggers -table <t> -import <f> -blobfile <f>
       |  -updatesql <sql> -secure -truststore <file> -truststorepassword <pw>
       |  -insvalues <list> -updvalues <list> -iter <n> -sleep <s> -check <sql>
-      |  -e <charset> (CSV/YAML/XML/VCF files) -v -l""".stripMargin
+      |  -e <charset> (CSV/JSON/YAML/XML/VCF files) -v -l""".stripMargin
 
   def run(spark: SparkSession, a: Args): Int = {
     if (a.help) { println(Usage); return 0 }

@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.io.File
+import java.io.{File, FileInputStream, InputStreamReader}
 
 import scala.jdk.CollectionConverters._
 
@@ -43,15 +43,18 @@ object SchemaValidation {
     * mirrors JsonDataProvider.java:300. Core draft keywords: `type`,
     * `enum`, `const`, `properties`, `required`, `additionalProperties`,
     * `items`, `minItems`/`maxItems`, `minLength`/`maxLength`,
-    * `pattern`, `minimum`/`maximum`.
+    * `pattern`, `minimum`/`maximum`. The data decodes with `charset` (the
+    * CLI's `-e`), as the import that follows does.
     */
-  def validateJsonSchema(dataFile: String, schemaFile: String): Unit = {
+  def validateJsonSchema(dataFile: String, schemaFile: String,
+                         charset: String = "UTF-8"): Unit = {
     checkSchemaFile(schemaFile, "JSON-Schema")
     val om = new ObjectMapper()
     val err =
       try {
         val schema = om.readTree(new File(schemaFile))
-        val data = om.readTree(new File(dataFile))
+        val in = new InputStreamReader(new FileInputStream(dataFile), charset)
+        val data = try om.readTree(in) finally in.close()
         check(data, schema, "$")
       } catch {
         case e: Exception => Some(e.getMessage)

@@ -229,9 +229,10 @@ class CliSpec extends SparkSpec {
     JdbcSink.withConnection(url)(c => assert(JdbcSink.countRows(c, "scripted") == 1))
   }
 
-  test("-e decodes YAML, XML and vCard files too") {
+  test("-e decodes JSON, YAML, XML and vCard files too") {
     val dir = SyntheticFixtures.dir("clicharset")
     Seq(
+      "latin.json" -> ("""[{"id": 1, "name": "Müller"}]""", "NAME"),
       "latin.yaml" -> ("- id: 1\n  name: Müller\n", "NAME"),
       "latin.xml" -> ("<list><entry><id>1</id><name>Müller</name></entry></list>", "NAME"),
       "latin.vcf" -> ("BEGIN:VCARD\nVERSION:3.0\nN:Müller;Hans;;;\nEND:VCARD\n", "LASTNAME")
@@ -245,6 +246,43 @@ class CliSpec extends SparkSpec {
       val got = spark.read.format("jdbc").option("url", url)
         .option("dbtable", "LATIN_T").load().collect()(0)
       assert(got.getAs[String](column) == "Müller", name)
+    }
+  }
+
+  test("-sp JSON pre-pass decodes the data with -e") {
+    val dir = SyntheticFixtures.dir("clispcharset")
+    val url = freshDb()
+    val f = new File(dir, "latin.json")
+    java.nio.file.Files.write(f.toPath,
+      """[{"id": 1, "name": "Müller"}]""".getBytes("ISO-8859-1"))
+    val schema = SyntheticFixtures.writeText(new File(dir, "latin.schema.json"),
+      """{"type": "array", "items": {"type": "object", "required": ["id", "name"],
+        |  "properties": {"name": {"const": "Müller"}}}}""".stripMargin)
+    val a = Main.parseArgs(Array(url, "latin_t", f.getPath,
+      "-e", "ISO-8859-1", "-sp", schema.getPath, "-create", "-i", "INSERT"))
+    assert(Main.run(spark, a) == 0)
+    assert(tableRows(url, "latin_t")._2 == Seq("1|Müller"))
+  }
+
+  test("a UTF-8 BOM JSON file imports the same rows as without the BOM, with and without -sp") {
+    val dir = SyntheticFixtures.dir("clibom")
+    val json = """[{"id": 1, "name": "Müller"}, {"id": 2, "name": "ann"}]""".getBytes("UTF-8")
+    val plain = new File(dir, "plain.json")
+    java.nio.file.Files.write(plain.toPath, json)
+    val bom = new File(dir, "bom.json")
+    java.nio.file.Files.write(bom.toPath, Array(0xEF, 0xBB, 0xBF).map(_.toByte) ++ json)
+    val schema = SyntheticFixtures.writeText(new File(dir, "bom.schema.json"),
+      """{"type": "array", "items": {"type": "object", "required": ["id", "name"]}}""")
+    Seq(Seq.empty[String], Seq("-sp", schema.getPath)).foreach { sp =>
+      def imported(f: File) = {
+        val url = freshDb()
+        assert(Main.run(spark, Main.parseArgs(
+          Array(url, "bom_t", f.getPath, "-create", "-i", "INSERT") ++ sp)) == 0, sp)
+        tableRows(url, "bom_t")
+      }
+      val expected = imported(plain)
+      assert(expected._2 == Seq("1|Müller", "2|ann"), sp)
+      assert(imported(bom) == expected, sp)
     }
   }
 

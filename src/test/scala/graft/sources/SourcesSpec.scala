@@ -2,6 +2,9 @@ package graft.sources
 
 import java.io.File
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerTaskEnd}
+import org.apache.spark.sql.types.StringType
+
 import graft.SparkSpec
 
 /** Source readers against the reference's canonical fixtures
@@ -59,6 +62,45 @@ class SourcesSpec extends SparkSpec {
       """{"meta": {"v": 1}, "payload": {"items": [{"a": 1}, {"a": 2}]}}""")
     val df = JsonSource.readArrayAt(spark, f.getPath, "payload/items")
     assert(df.select("a").as[Long].collect().sorted.toSeq == Seq(1L, 2L))
+  }
+
+  test("JSON: one pass over an array with widened number columns reads the file once") {
+    // a, b and c are widened to string by one row each; d stays numeric
+    val rows = (1 to 1000).map(i =>
+      s"""{"k": $i, "a": ${i * 1.5}, "b": ${i * 7}, "c": $i.25, "d": $i}""") ++
+      Seq("""{"k": 0, "a": "1x"}""", """{"k": -1, "b": "2y"}""", """{"k": -2, "c": "3z"}""")
+    val f = tmp("widened.json", rows.mkString("[", ",\n", "]"))
+    val df = JsonSource.readArray(spark, f.getPath)
+    assert(Seq("a", "b", "c").forall(c => df.schema(c).dataType == StringType))
+    val bytesRead = new java.util.concurrent.atomic.AtomicLong
+    val jobsEnded = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (e.taskMetrics != null) bytesRead.addAndGet(e.taskMetrics.inputMetrics.bytesRead)
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = jobsEnded.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      assert(df.collect().length == 1003)
+      // listener events arrive on the bus asynchronously
+      val deadline = System.nanoTime() + 5000000000L
+      while (jobsEnded.get < 1 && System.nanoTime() < deadline) Thread.sleep(50)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(jobsEnded.get >= 1)
+    assert(bytesRead.get >= f.length && bytesRead.get <= 2 * f.length,
+      s"read ${bytesRead.get} bytes of a ${f.length}-byte file")
+  }
+
+  test("JSON: a number in a widened string column reads as its double or long text") {
+    val f = tmp("numtext.json", """[{"k":1,"v":2.50,"w":1e3},{"k":2,"v":"x","w":"y"}]""")
+    val got = JsonSource.readArray(spark, f.getPath).where("k = 1")
+      .select("v", "w").as[(String, String)].collect().toSeq
+    assert(got == Seq(("2.5", "1000.0")))
+    // the text a pure double column gets through the string cast
+    val d = tmp("numdouble.json", """[{"v":2.50,"w":1e3}]""")
+    val cast = JsonSource.readArray(spark, d.getPath)
+      .selectExpr("cast(v as string)", "cast(w as string)").as[(String, String)].collect().toSeq
+    assert(cast == got)
   }
 
   test("XML: list/entry parse with null token and -dp path") {
