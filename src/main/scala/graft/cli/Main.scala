@@ -247,9 +247,9 @@ object Main {
       case "CSV" =>
         // reference field-count strictness: structure errors abort unless
         // -a / -r relax them (DbImportTest_Derby.testCsvImportErrorStructure)
-        CsvSource.validateStructure(spark, p, csvOpts,
+        val firstLine = CsvSource.validateStructure(spark, p, csvOpts,
           a.allowUnderfilled, a.removeSurplusColumns)
-        CsvSource.read(spark, p, csvOpts)
+        CsvSource.read(spark, p, csvOpts, firstLine)
       case "JSON" =>
         val j = withoutUtf8Bom(p, a.encoding)
         a.schemaFile.foreach(SchemaValidation.validateJsonSchema(j, _, a.encoding))
@@ -257,7 +257,7 @@ object Main {
           .getOrElse(JsonSource.readArray(spark, j, a.encoding))
       case "YAML" => YamlSource.read(spark, p, a.encoding)
       case "XML" =>
-        a.schemaFile.foreach(SchemaValidation.validateXsd(p, _))
+        a.schemaFile.foreach(SchemaValidation.validateXsd(p, _, a.encoding))
         XmlSource.read(spark, p, a.dataPath, a.nullToken, a.encoding)
       case "EXCEL" =>
         // one DataType covers both workbook generations (reference

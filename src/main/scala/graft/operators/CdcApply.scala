@@ -8,11 +8,13 @@ import org.apache.spark.sql.functions._
   * face of the import engine (the batch form of what a streaming CDC
   * sink applies per micro-batch).
   *
-  * One hash aggregation keyed by the row key: `max_by` keeps each
+  * One aggregation keyed by the row key: `max_by` keeps each
   * key's LATEST log entry (the ordinal must be unique per key — a log
-  * sequence number), then deletes drop out. No window, no sort — the
-  * same mergeable-aggregate shape as [[Dedup.joinDuplicates]], so
-  * map-side partials apply and a 100 TB log folds in one shuffle.
+  * sequence number), then deletes drop out. No window — the same
+  * mergeable-aggregate shape as [[Dedup.joinDuplicates]], so map-side
+  * partials apply and a 100 TB log folds in one shuffle. The value is a
+  * struct, so Spark plans it as a sort aggregate (a sort on the key on
+  * each side of the exchange), not a hash aggregate.
   */
 object CdcApply {
 

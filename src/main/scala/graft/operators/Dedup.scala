@@ -18,10 +18,14 @@ import org.apache.spark.sql.functions._
   *
   * Scale notes: every function here is a single hash shuffle on the key
   * columns. `dropDuplicatesKeepFirst` is a window `row_number` (shuffle +
-  * in-partition sort, spillable). `joinDuplicates` is a hash aggregation
-  * with map-side partial `max_by` combine — no sort at all, so it scales
-  * better than a window formulation at 100 TB. No global ordering is ever
-  * required: "first/last" is resolved per key group from the order
+  * in-partition sort, spillable). `joinDuplicates` is an aggregation
+  * with map-side partial `max_by` combine. It is not sort-free: a
+  * `max_by` whose value is a string (or a struct) has no fixed-width
+  * slot in HashAggregate's buffer, so Spark plans a SortAggregate, with
+  * a sort on the keys before the partial and after the exchange
+  * (`SortAggregate ← Sort ← Exchange ← SortAggregate ← Sort`); only
+  * all-numeric value columns get a HashAggregate. No global ordering is
+  * ever required: "first/last" is resolved per key group from the order
   * columns.
   */
 object Dedup {
@@ -44,9 +48,10 @@ object Dedup {
     * For each non-key column the surviving value is that of the LAST row
     * in `order`; with `updateWithNull = false` the last NON-NULL value
     * (so nulls never erase data — reference README.md:87). Implemented as
-    * `max_by(col, ord)` / `max_by(col, ord if col not null)` under a hash
+    * `max_by(col, ord)` / `max_by(col, ord if col not null)` under one
     * aggregate: partial aggregation happens map-side before the shuffle,
     * so duplicate-heavy data shuffles one row per (partition, key) only.
+    * A string value column makes it a sort aggregate (see above).
     *
     * @param order single deterministic ordering column (e.g. the arrival
     *              ordinal). Must be non-null and unique within a key group.

@@ -212,8 +212,9 @@ object Merge {
         dedupKeepFirst(target, keys, targetOrder)
       case DuplicateMode.MakeUniqueJoin =>
         // order WITHIN a key group is all join-duplicates needs: a struct
-        // of the order columns is orderable under max_by, so this stays a
-        // pure hash aggregate — no window, no global (or even per-key) sort
+        // of the order columns is orderable under max_by, so this stays one
+        // aggregate with no window and no global sort (a string value
+        // column still makes it a sort aggregate, see Dedup)
         dedupJoin(target, keys, struct(targetOrder: _*), updateWithNull)
       case _ => target
     }

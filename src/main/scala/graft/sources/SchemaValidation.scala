@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.io.{File, FileInputStream, InputStreamReader}
+import java.io.{File, FileInputStream, InputStreamReader, PushbackReader}
 
 import scala.jdk.CollectionConverters._
 
@@ -18,9 +18,10 @@ import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 object SchemaValidation {
 
   /** XSD validation via the JDK's `javax.xml.validation`; error message
-    * shape mirrors XmlDataProvider.java:302.
+    * shape mirrors XmlDataProvider.java:302. The data decodes with
+    * `charset` (the CLI's `-e`), as the import that follows does.
     */
-  def validateXsd(dataFile: String, xsdFile: String): Unit = {
+  def validateXsd(dataFile: String, xsdFile: String, charset: String = "UTF-8"): Unit = {
     checkSchemaFile(xsdFile, "XSD")
     try {
       val factory = javax.xml.validation.SchemaFactory
@@ -31,7 +32,13 @@ object SchemaValidation {
       factory.setProperty(javax.xml.XMLConstants.ACCESS_EXTERNAL_SCHEMA, "")
       val schema = factory.newSchema(new File(xsdFile))
       val validator = schema.newValidator()
-      validator.validate(new javax.xml.transform.stream.StreamSource(new File(dataFile)))
+      val in = new PushbackReader(new InputStreamReader(new FileInputStream(dataFile), charset))
+      try {
+        // a Reader keeps a byte-order mark as U+FEFF, which the parser rejects
+        val c = in.read()
+        if (c >= 0 && c != '\uFEFF') in.unread(c)
+        validator.validate(new javax.xml.transform.stream.StreamSource(in))
+      } finally in.close()
     } catch {
       case e: Exception =>
         throw new IllegalArgumentException(

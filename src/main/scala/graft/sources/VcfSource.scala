@@ -112,5 +112,7 @@ object VcfSource {
     * a base64 property's column binary.
     */
   def read(spark: SparkSession, path: String, charset: String = "UTF-8"): DataFrame =
-    WholeFileFrame.byKeys(spark, path)(b => parseCards(new String(b, charset)))
+    // a leading U+FEFF (a UTF-8 byte-order mark) would hide the first BEGIN:VCARD
+    WholeFileFrame.byKeys(spark, path)(b =>
+      parseCards(new String(b, charset).stripPrefix("\uFEFF")))
 }

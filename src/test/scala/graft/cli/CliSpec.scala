@@ -286,6 +286,103 @@ class CliSpec extends SparkSpec {
     }
   }
 
+  test("-sp XSD pre-pass decodes the data with -e") {
+    // before the pre-pass took the charset this failed with "XML data does
+    // not comply to XSD …: Invalid byte 1 of 1-byte UTF-8 sequence."
+    val dir = SyntheticFixtures.dir("clixsdcharset")
+    val f = new File(dir, "latin.xml")
+    java.nio.file.Files.write(f.toPath,
+      "<list><entry><id>1</id><name>Müller</name></entry></list>".getBytes("ISO-8859-1"))
+    val xsd = SyntheticFixtures.writeText(new File(dir, "latin.xsd"),
+      """<?xml version="1.0"?>
+        |<xs:schema xmlns:xs="http://www.w3.org/2001/XMLSchema">
+        | <xs:element name="list"><xs:complexType><xs:sequence>
+        |  <xs:element name="entry" maxOccurs="unbounded"><xs:complexType><xs:sequence>
+        |   <xs:element name="id" type="xs:integer"/>
+        |   <xs:element name="name" type="xs:string"/>
+        |  </xs:sequence></xs:complexType></xs:element>
+        | </xs:sequence></xs:complexType></xs:element>
+        |</xs:schema>""".stripMargin)
+    val url = freshDb()
+    assert(Main.run(spark, Main.parseArgs(Array(url, "latin_t", f.getPath,
+      "-e", "ISO-8859-1", "-sp", xsd.getPath, "-create", "-i", "INSERT"))) == 0)
+    assert(tableRows(url, "latin_t")._2 == Seq("1|Müller"))
+    // a UTF-8 byte-order mark still validates
+    val bom = new File(dir, "bom.xml")
+    java.nio.file.Files.write(bom.toPath, Array(0xEF, 0xBB, 0xBF).map(_.toByte) ++
+      "<list><entry><id>2</id><name>Müller</name></entry></list>".getBytes("UTF-8"))
+    graft.sources.SchemaValidation.validateXsd(bom.getPath, xsd.getPath, "UTF-8")
+  }
+
+  test("a UTF-8 BOM CSV file imports the same rows and column names as without the BOM") {
+    val dir = SyntheticFixtures.dir("clicsvbom")
+    val csv = "id;name\n1;Müller\n2;ann\n".getBytes("UTF-8")
+    val plain = new File(dir, "plain.csv")
+    java.nio.file.Files.write(plain.toPath, csv)
+    val bom = new File(dir, "bom.csv")
+    java.nio.file.Files.write(bom.toPath, Array(0xEF, 0xBB, 0xBF).map(_.toByte) ++ csv)
+    def imported(f: File) = {
+      val url = freshDb()
+      assert(Main.run(spark, Main.parseArgs(
+        Array(url, "bom_t", f.getPath, "-create", "-i", "INSERT"))) == 0)
+      tableRows(url, "bom_t")
+    }
+    val expected = imported(plain)
+    assert(expected == (Seq("ID", "NAME"), Seq("1|Müller", "2|ann")))
+    assert(imported(bom) == expected)
+  }
+
+  test("a dot in a CSV header name does not fail the import") {
+    // Spark read the dotted name as a struct field: [UNRESOLVED_COLUMN.WITH_SUGGESTION]
+    val url = freshDb()
+    JdbcSink.withConnection(url) { c =>
+      val st = c.createStatement()
+      st.executeUpdate("CREATE TABLE \"DOTT\" (\"C\" INTEGER)")
+      st.close()
+    }
+    val dir = SyntheticFixtures.dir("clidot")
+    val f = SyntheticFixtures.writeText(new File(dir, "dotted.csv"), "a.b;c\n1;2")
+    assert(Main.run(spark, Main.parseArgs(Array(url, "dott", f.getPath))) == 0)
+    assert(tableRows(url, "dott")._2 == Seq("2"))
+    val withNull = SyntheticFixtures.writeText(new File(dir, "dotted_null.csv"), "a.b;c\n1;NULL")
+    assert(Main.run(spark, Main.parseArgs(Array(url, "dott", withNull.getPath, "-n", "NULL"))) == 0)
+    assert(tableRows(url, "dott")._2 == Seq("2", "null"))
+  }
+
+  test("a CSV readSource runs one Spark job and no SQL execution") {
+    // before the one raw-line pass: 3 jobs and 4 SQL executions (head(1),
+    // zipWithIndex + take(1), and the reader's own header inference)
+    val f = SyntheticFixtures.writeText(new File(SyntheticFixtures.dir("clijobs"), "jobs.csv"),
+      ("id;v" +: (1 to 1000).map(i => s"$i;v$i")).mkString("\n"))
+    val jobGroups = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val sqlExecutions = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobGroups.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
+      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit =
+        e match {
+          case _: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
+            sqlExecutions.incrementAndGet()
+          case _ =>
+        }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      val df = Main.readSource(spark, Main.parseArgs(Array("jdbc:x", "t", f.getPath)), f.getPath)
+      assert(df.columns.toSeq == Seq("id", "v"))
+      // the bus delivers in order: once the marker job arrives, so has every earlier event
+      sc.setJobGroup("graft-marker", "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 10000000000L
+      while (!jobGroups.contains("graft-marker") && System.nanoTime() < deadline)
+        Thread.sleep(20)
+    } finally sc.removeSparkListener(listener)
+    assert(jobGroups.contains("graft-marker"))
+    assert(jobGroups.size - 1 == 1, jobGroups)
+    assert(sqlExecutions.get == 0)
+  }
+
   test("reference argv compatibility: case-insensitive flags, aliases, new flags") {
     // the reference matches flags with equalsIgnoreCase — so must we
     val a = Main.parseArgs(Array("jdbc:x", "tbl", "f.csv",

@@ -51,6 +51,72 @@ class SourcesSpec extends SparkSpec {
     assert(rows(1).isNullAt(2))
   }
 
+  test("CSV: a dot in a header name reads, with and without trim and a null token") {
+    val f = tmp("dotted.csv", "a.b;c\n1;NULL")
+    Seq(CsvSource.CsvOptions(), CsvSource.CsvOptions(trimValues = true),
+      CsvSource.CsvOptions(nullToken = Some("NULL"))).foreach { o =>
+      val df = CsvSource.read(spark, f.getPath, o)
+      assert(df.columns.toSeq == Seq("a.b", "c"), o)
+      val r = df.collect()(0)
+      assert(r.getString(0) == "1" && r.isNullAt(1) == o.nullToken.isDefined, o)
+    }
+  }
+
+  test("CSV: the schema built from the first line equals Spark's inference") {
+    def bytes(s: String) = s.getBytes("UTF-8")
+    val cases = Seq(
+      ("plain", bytes("id;v\n1;x\n2;y\n"), CsvSource.CsvOptions()),
+      ("bom", Array(0xEF, 0xBB, 0xBF).map(_.toByte) ++ bytes("id;v\n1;x\n"),
+        CsvSource.CsvOptions()),
+      ("duplicates", bytes("a;A;a\n1;2;3\n"), CsvSource.CsvOptions()),
+      ("empty names", bytes("a;;b;\n1;2;3;4\n"), CsvSource.CsvOptions()),
+      ("quoted separator", bytes("\"a;b\";c\n1;2\n"), CsvSource.CsvOptions()),
+      ("spaces", bytes(" id ; v \n1;2\n"), CsvSource.CsvOptions()),
+      ("latin-1", "größe;k\nä;1\n".getBytes("ISO-8859-1"),
+        CsvSource.CsvOptions(encoding = "ISO-8859-1")),
+      ("no header", bytes("1;x\n2;y\n"), CsvSource.CsvOptions(header = false)),
+      ("crlf", bytes("id;v\r\n1;x\r\n2;y\r\n"), CsvSource.CsvOptions()),
+      ("null-token header", bytes("NULL;v\n1;NULL\n"),
+        CsvSource.CsvOptions(nullToken = Some("NULL"))))
+    cases.foreach { case (name, content, o) =>
+      // the comma is part of the file name, not a list of paths
+      val f = new File(SyntheticFixtures.dir("spec"), s"parity,${name.replace(' ', '_')}.csv")
+      java.nio.file.Files.write(f.toPath, content)
+      val firstLine = CsvSource.validateStructure(spark, f.getPath, o,
+        allowUnderfilled = false, removeSurplusEmpty = false)
+      assert(firstLine.isDefined, name)
+      val built = CsvSource.read(spark, f.getPath, o, firstLine)
+      val inferred = CsvSource.read(spark, f.getPath, o)
+      assert(built.columns.toSeq == inferred.columns.toSeq, name)
+      assert(built.collect().toSeq == inferred.collect().toSeq, name)
+    }
+  }
+
+  test("CSV structure pass: line numbers and the earliest violation across partitions") {
+    val o = CsvSource.CsvOptions()
+    def check(lines: Seq[String], slices: Int, header: Boolean = true) =
+      CsvSource.validateStructure(spark.sparkContext.parallelize(lines, slices),
+        o.copy(header = header), allowUnderfilled = false, removeSurplusEmpty = false)
+    def error(lines: Seq[String], slices: Int, header: Boolean = true) =
+      intercept[CsvSource.CsvStructureException](check(lines, slices, header)).getMessage
+    // slices [id;v, 1;x] [2;y, 3] [4;z, 5;z;z, 6]: lines 4, 6 and 7 violate
+    val lines = Seq("id;v", "1;x", "2;y", "3", "4;z", "5;z;z", "6")
+    assert(error(lines, 3) == "CSV structure error in line 4: expected 2 fields, got 1")
+    assert(error(lines.take(3) ++ lines.drop(4), 3) ==
+      "CSV structure error in line 5: expected 2 fields, got 3")
+    assert(error(lines.patch(3, Seq("3;y"), 1), 3) ==
+      "CSV structure error in line 6: expected 2 fields, got 3")
+    assert(error(Seq("1;x", "2"), 2, header = false) ==
+      "CSV structure error in line 2: expected 2 fields, got 1 (field count set by the first line)")
+    // blank lines are skipped, empty partitions count no lines
+    assert(check(Seq("id;v", "", "1;x", "", "2;y", ""), 4).contains("id;v"))
+    assert(error(Seq("id;v", "", "", "1;x;y"), 6) ==
+      "CSV structure error in line 4: expected 2 fields, got 3")
+    // the returned line is the first one holding more than spaces
+    assert(check(Seq("", "   ", "id", "1"), 3).contains("id"))
+    assert(check(Seq.empty[String], 2).isEmpty)
+  }
+
   test("JSON: array-of-flat-objects whole file") {
     val f = tmp("arr.json", """[{"a": 1, "b": "x"}, {"a": 2, "b": null}]""")
     val df = JsonSource.readArray(spark, f.getPath)
@@ -164,6 +230,19 @@ class SourcesSpec extends SparkSpec {
     assert(m("address_1_locality") == "München")
     assert(m("address_1_country") == "Deutschland")
     assert(m("address_1_attr") == "HOME")
+  }
+
+  test("vCard: a UTF-8 byte-order mark reads the same cards as without it") {
+    val card = "BEGIN:VCARD\nVERSION:3.0\nN:Ann;Hans;;;\nEND:VCARD\n".getBytes("UTF-8")
+    val plain = new File(SyntheticFixtures.dir("spec"), "plain.vcf")
+    java.nio.file.Files.write(plain.toPath, card)
+    val bom = new File(SyntheticFixtures.dir("spec"), "bom.vcf")
+    java.nio.file.Files.write(bom.toPath, Array(0xEF, 0xBB, 0xBF).map(_.toByte) ++ card)
+    val expected = VcfSource.read(spark, plain.getPath)
+    assert(expected.count() == 1)
+    val got = VcfSource.read(spark, bom.getPath)
+    assert(got.columns.toSeq == expected.columns.toSeq)
+    assert(got.collect().toSeq == expected.collect().toSeq)
   }
 
   test("vCard: QP soft line breaks join; base64 '=' padding does not") {
