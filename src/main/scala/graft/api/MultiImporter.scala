@@ -18,9 +18,14 @@ object MultiImporter {
   case class FileResult(file: String, table: String,
                         result: Either[String, Importer.ImportResult])
 
+  /** `errorsPath(file)` is where that file's erroneous rows go (the
+    * CLI's `-logerrors`). `cfg.errorExportPath` is not used: one path
+    * for every file would keep only the last file's rows.
+    */
   def importGlob(spark: SparkSession, pattern: String, url: String,
                  tableSpec: String, cfg: Importer.ImportConfig,
-                 readFile: (SparkSession, String) => DataFrame): Seq[FileResult] = {
+                 readFile: (SparkSession, String) => DataFrame,
+                 errorsPath: String => Option[String] = _ => None): Seq[FileResult] = {
     val files = TableNames.expandGlob(pattern)
     require(files.nonEmpty, s"no files match $pattern")
     val plan = files.map { f =>
@@ -40,7 +45,8 @@ object MultiImporter {
     while (it.hasNext && !aborted) {
       val (file, table) = it.next()
       val r =
-        try Right(Importer.importToJdbc(readFile(spark, file), url, table, cfg))
+        try Right(Importer.importToJdbc(readFile(spark, file), url, table,
+          cfg.copy(errorExportPath = errorsPath(file))))
         catch { case e: Exception => Left(e.getMessage) }
       out += FileResult(file, table, r)
       if (r.isLeft && cfg.completeCommit) aborted = true

@@ -222,8 +222,10 @@ object Main {
     */
   def readSource(spark: SparkSession, a: Args, path: String): DataFrame = {
     val lower = containerStripped(path)
+    val fmt = sourceFormat(a, path).getOrElse(
+      throw new IllegalArgumentException(s"unsupported format: $path"))
     // schema pre-pass is a JSON/XML concept (DbImportDefinition.java:696)
-    if (a.schemaFile.isDefined && !lower.endsWith(".json") && !lower.endsWith(".xml"))
+    if (a.schemaFile.isDefined && fmt != "JSON" && fmt != "XML")
       throw new IllegalArgumentException(
         s"SchemaFilePath is not supported for data format: $path")
     val csvOpts = CsvSource.CsvOptions(separator = a.sep, quote = a.quote,
@@ -241,8 +243,6 @@ object Main {
         tempFile("graft_dec_", "_" + new java.io.File(lower).getName,
           Compression.decompress(new java.io.File(path).getName, raw, a.zipPassword))
       } else path
-    val fmt = sourceFormat(a, path).getOrElse(
-      throw new IllegalArgumentException(s"unsupported format: $path"))
     fmt match {
       case "CSV" =>
         // reference field-count strictness: structure errors abort unless
@@ -406,20 +406,16 @@ object Main {
       // vendor-specific DDL toggles; graft runs none, so say so
       System.err.println("[graft] -deactivatefk/-deactivatetriggers: " +
         "not supported, foreign keys and triggers stay active; proceeding")
-    // -logerrors without an explicit export path: erroneous rows land
-    // next to the import file (reference logErroneousData behavior), in
-    // the source's own format for JSON and XML
-    val cfgRun =
-      if (a.logErrors && a.cfg.errorExportPath.isEmpty && !a.inline) {
-        val ext = sourceFormat(a, a.importPathOrData).filter(Set("JSON", "XML"))
-          .fold("")("." + _.toLowerCase)
-        a.cfg.copy(errorExportPath = Some(a.importPathOrData + ".errors" + ext))
-      } else a.cfg
-    val a2 = a.copy(cfg = cfgRun)
+    // -logerrors: each import file's erroneous rows land next to it
+    // (reference logErroneousData behavior), in the source's own format
+    // for JSON and XML
+    def errorsPath(file: String): Option[String] =
+      Option.when(a.logErrors && !a.inline)(file + ".errors" +
+        sourceFormat(a, file).filter(Set("JSON", "XML")).fold("")("." + _.toLowerCase))
     val multi = a.importPathOrData.exists(c => c == '*' || c == '?') && !a.inline
     if (multi) {
       val results = MultiImporter.importGlob(spark, a.importPathOrData, a.url, a.table,
-        a2.cfg, (s, f) => readSource(s, a2, f))
+        a.cfg, (s, f) => readSource(s, a, f), errorsPath)
       results.foreach {
         case MultiImporter.FileResult(f, t, Right(r)) =>
           println(s"$f -> $t: imported ${r.inserted}, updated ${r.updated}")
@@ -453,7 +449,7 @@ object Main {
           if (a.inline) a.importPathOrData.getBytes("UTF-8").length.toLong
           else new java.io.File(a.importPathOrData).length()
         def doImport() = Importer.importToJdbc(src, a.url, a.table,
-          a2.cfg.copy(dataAmount = amount))
+          a.cfg.copy(dataAmount = amount, errorExportPath = errorsPath(a.importPathOrData)))
         // -v: task-level progress with ETA (reference verbose mode)
         val r = if (a.verbose)
           graft.api.Progress.withProgress(spark, s"import ${a.table}")(doImport())

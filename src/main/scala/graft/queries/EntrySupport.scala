@@ -54,10 +54,9 @@ private[graft] trait EntrySupport { this: SparkEntry.type =>
     * incremental-pipeline shape a 100 TB curation run needs (day-2
     * dedup must not rebuild day-1 pairs).
     *
-    * Lifecycle: cached artifacts are durable by default (reuse across
-    * sessions is the point); `GRAFT_ARTIFACT_CLEANUP=1` opts INTO
-    * deleting this JVM's cache root at shutdown (the old
-    * always-delete behavior). Completeness is judged by parquet's
+    * Lifecycle: cached artifacts are durable (reuse across sessions is
+    * the point); Bench and Verify point the root at a fresh per-run
+    * directory and delete it themselves. Completeness is judged by parquet's
     * `_SUCCESS` marker; builds write to a temp sibling and move into
     * place atomically, so a crashed build can never be mistaken for a
     * finished artifact. Setting `GRAFT_ARTIFACT_CACHE` (env) or
@@ -97,9 +96,6 @@ private[graft] trait EntrySupport { this: SparkEntry.type =>
       sys.props.get("graft.artifact.cache")
         .orElse(sys.env.get("GRAFT_ARTIFACT_CACHE"))
         .getOrElse(sys.props("java.io.tmpdir") + "/graft-artifact-cache")
-    if (sys.env.get("GRAFT_ARTIFACT_CLEANUP").contains("1"))
-      Runtime.getRuntime.addShutdownHook(new Thread(() =>
-        scala.util.Try(rmTree(cacheRoot))))
     /** md5 over the sf dir's input parquet stats (inputs ONLY — builder
       * versions live in the per-artifact directory name): coarse (ANY
       * table change re-keys every artifact) but exactly as strong as

@@ -1,9 +1,10 @@
 package graft.sources
 
-import java.io.{ByteArrayInputStream, ByteArrayOutputStream, InputStream}
-import java.util.zip.{GZIPInputStream, ZipInputStream}
+import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
+import java.util.zip.{GZIPInputStream, Inflater, ZipInputStream}
 import javax.crypto.Cipher
 
+import org.apache.commons.compress.archivers.tar.TarArchiveInputStream
 import org.apache.spark.sql.{Dataset, SparkSession}
 
 /** Transparent compression layer (reference
@@ -15,31 +16,6 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   * constant memory per stream.
   */
 object Compression {
-
-  private def readAll(in: InputStream): Array[Byte] = {
-    val out = new ByteArrayOutputStream()
-    val buf = new Array[Byte](64 * 1024)
-    var n = in.read(buf)
-    while (n >= 0) { out.write(buf, 0, n); n = in.read(buf) }
-    out.toByteArray
-  }
-
-  /** Minimal ustar reader: first regular file entry's bytes. */
-  private[sources] def tarFirstEntry(bytes: Array[Byte]): Array[Byte] = {
-    var off = 0
-    while (off + 512 <= bytes.length) {
-      val name = new String(bytes, off, 100, "US-ASCII").takeWhile(_ != '\u0000')
-      if (name.isEmpty) return Array.empty
-      val sizeOctal = new String(bytes, off + 124, 12, "US-ASCII")
-        .takeWhile(c => c >= '0' && c <= '7')
-      val size = if (sizeOctal.isEmpty) 0L else java.lang.Long.parseLong(sizeOctal, 8)
-      val typeFlag = bytes(off + 156).toChar
-      if (typeFlag == '0' || typeFlag == '\u0000')
-        return bytes.slice(off + 512, off + 512 + size.toInt)
-      off += 512 + ((size + 511) / 512).toInt * 512
-    }
-    Array.empty
-  }
 
   /** Traditional PKWARE (ZipCrypto) stream cipher — public algorithm
     * (PKWARE APPNOTE.TXT §6.1). Only used for password-protected
@@ -86,16 +62,20 @@ object Compression {
   def decompress(fileName: String, bytes: Array[Byte],
                  zipPassword: Option[String] = None): Array[Byte] = {
     val lower = fileName.toLowerCase
-    if (lower.endsWith(".tar.gz") || lower.endsWith(".tgz"))
-      tarFirstEntry(readAll(new GZIPInputStream(new ByteArrayInputStream(bytes))))
-    else if (lower.endsWith(".gz"))
-      readAll(new GZIPInputStream(new ByteArrayInputStream(bytes)))
+    if (lower.endsWith(".tar.gz") || lower.endsWith(".tgz")) {
+      // the first regular file; directories and links are skipped
+      val t = new TarArchiveInputStream(new GZIPInputStream(new ByteArrayInputStream(bytes)))
+      var e = t.getNextEntry
+      while (e != null && (!e.isFile || e.isLink || e.isSymbolicLink)) e = t.getNextEntry
+      if (e == null) Array.empty else t.readAllBytes()
+    } else if (lower.endsWith(".gz"))
+      new GZIPInputStream(new ByteArrayInputStream(bytes)).readAllBytes()
     else if (lower.endsWith(".zip")) zipPassword match {
       case None =>
         val z = new ZipInputStream(new ByteArrayInputStream(bytes))
         var e = z.getNextEntry
         while (e != null && e.isDirectory) e = z.getNextEntry
-        if (e == null) Array.empty else readAll(z)
+        if (e == null) Array.empty else z.readAllBytes()
       case Some(pw) => decryptZipCryptoEntry(bytes, pw)
     }
     else bytes
@@ -135,6 +115,22 @@ object Compression {
     val km = f.generateSecret(spec).getEncoded
     (km.slice(0, keyBytes), km.slice(keyBytes, keyBytes * 2),
       km.slice(keyBytes * 2, keyBytes * 2 + 2))
+  }
+
+  /** Inflate a raw (headerless) deflate stream. `Inflater(nowrap)` may
+    * ask for one more byte past the data; that is the end, not an error.
+    */
+  private def inflateRaw(payload: Array[Byte]): Array[Byte] = {
+    val inf = new Inflater(true)
+    inf.setInput(payload)
+    val out = new ByteArrayOutputStream()
+    val buf = new Array[Byte](64 * 1024)
+    while (!inf.finished()) {
+      val n = inf.inflate(buf)
+      if (n == 0 && inf.needsInput()) return out.toByteArray
+      out.write(buf, 0, n)
+    }
+    out.toByteArray
   }
 
   /** Parse the raw zip structure and ZipCrypto-decrypt the first stored/
@@ -182,19 +178,7 @@ object Compression {
         val cipherLen = compSize - saltLen - 2 - 10 // minus auth code
         val payload = aesCtr(aesKey,
           bytes.slice(dataOff + saltLen + 2, dataOff + saltLen + 2 + cipherLen))
-        return if (realMethod == 0) payload
-        else {
-          val inf = new java.util.zip.Inflater(true)
-          inf.setInput(payload)
-          val out = new ByteArrayOutputStream()
-          val buf = new Array[Byte](64 * 1024)
-          while (!inf.finished()) {
-            val n = inf.inflate(buf)
-            if (n == 0 && inf.needsInput()) return out.toByteArray
-            out.write(buf, 0, n)
-          }
-          out.toByteArray
-        }
+        return if (realMethod == 0) payload else inflateRaw(payload)
       } else if (encrypted && method <= 8) {
         val zc = new ZipCrypto(password.getBytes("US-ASCII"))
         val dec = zc.decrypt(bytes.slice(dataOff, dataOff + compSize))
@@ -205,19 +189,7 @@ object Compression {
                     else ((u32(off + 14) >> 24) & 0xff).toInt
         require((dec(11) & 0xff) == check, "wrong ZipCrypto password")
         val payload = dec.drop(12) // 12-byte encryption header
-        return if (method == 0) payload
-        else { // raw deflate
-          val inf = new java.util.zip.Inflater(true)
-          inf.setInput(payload)
-          val out = new ByteArrayOutputStream()
-          val buf = new Array[Byte](64 * 1024)
-          while (!inf.finished()) {
-            val n = inf.inflate(buf)
-            if (n == 0 && inf.needsInput()) return out.toByteArray
-            out.write(buf, 0, n)
-          }
-          out.toByteArray
-        }
+        return if (method == 0) payload else inflateRaw(payload)
       }
       off = dataOff + compSize
     }

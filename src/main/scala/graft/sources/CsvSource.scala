@@ -60,17 +60,29 @@ object CsvSource {
     */
   def read(spark: SparkSession, path: String, o: CsvOptions = CsvOptions(),
            firstLine: Option[String] = None): DataFrame = {
-    val opts = readerOptions(o)
-    val reader = spark.read.options(opts)
-    post(firstLine.flatMap(schemaOf(spark, opts, _)).fold(reader)(reader.schema).csv(path), o)
+    val reader = spark.read.options(readerOptions(o))
+    post(firstLine.flatMap(schemaOf(spark, o, _)).fold(reader)(reader.schema).csv(path), o)
   }
+
+  /** Spark's parsed form of [[readerOptions]]: its univocity settings
+    * split a line exactly as the reader does. The time zone only reaches
+    * typed values, which these all-string reads never parse.
+    */
+  private def parsedOptions(o: CsvOptions): CSVOptions =
+    new CSVOptions(readerOptions(o), false, "UTC")
+
+  /** The fields of one line as the reader splits it; a line that gives
+    * no row (the empty line) counts as one empty field.
+    */
+  private def fields(parser: CsvParser, line: String): Array[String] =
+    Option(parser.parseLine(line)).getOrElse(Array(""))
 
   /** All-string schema Spark would infer with `firstLine` as the first
     * non-blank line; None where Spark's parse of the line gives no row.
     */
-  private def schemaOf(spark: SparkSession, opts: Map[String, String],
+  private def schemaOf(spark: SparkSession, o: CsvOptions,
                        firstLine: String): Option[StructType] = {
-    val parsed = new CSVOptions(opts, false, spark.conf.get("spark.sql.session.timeZone"))
+    val parsed = parsedOptions(o)
     Option(new CsvParser(parsed.asParserSettings).parseLine(firstLine)).map { row =>
       val caseSensitive = spark.conf.get("spark.sql.caseSensitive").toBoolean
       StructType(CSVUtils.makeSafeHeader(row, caseSensitive, parsed).toIndexedSeq
@@ -83,38 +95,6 @@ object CsvSource {
     */
   def readLines(lines: Dataset[String], o: CsvOptions = CsvOptions()): DataFrame =
     post(lines.sparkSession.read.options(readerOptions(o)).csv(lines), o)
-
-  /** Quote-aware single-line field split with the dialect's separator,
-    * quote and quote-escape (escape == quote means doubled-quote
-    * escaping). Single-line fields only — mirrors the parse path's
-    * `multiLine=false`.
-    */
-  private[graft] def splitLine(line: String, sep: Char, quote: Char,
-                               esc: Char): Array[String] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    val cur = new StringBuilder
-    var i = 0
-    var inQ = false
-    while (i < line.length) {
-      val c = line.charAt(i)
-      if (inQ) {
-        if (c == esc && esc != quote && i + 1 < line.length &&
-            line.charAt(i + 1) == quote) { cur.append(quote); i += 1 }
-        else if (c == quote) {
-          if (esc == quote && i + 1 < line.length && line.charAt(i + 1) == quote) {
-            cur.append(quote); i += 1
-          } else inQ = false
-        } else cur.append(c)
-      } else {
-        if (c == quote && cur.isEmpty) inQ = true
-        else if (c == sep) { out += cur.toString; cur.clear() }
-        else cur.append(c)
-      }
-      i += 1
-    }
-    out += cur.toString
-    out.toArray
-  }
 
   /** Structure error raised by [[validateStructure]]. */
   final class CsvStructureException(msg: String) extends IllegalStateException(msg)
@@ -129,9 +109,11 @@ object CsvSource {
     *
     * One Spark job over the raw lines, read the way Spark's CSV source
     * reads a non-UTF-8 file (a Hadoop RDD over `TextInputFormat`, each
-    * line decoded with the `encoding` option); the first violation in
-    * file order wins. Blank lines are ignored, matching the parser. With
-    * `header=false` the first line still defines the expected field
+    * line decoded with the `encoding` option) and split by the reader's
+    * own univocity parser, so a multi-character separator, the `\t`
+    * escape and an empty quote count fields as [[read]] does; the first
+    * violation in file order wins. Blank lines are ignored, matching the
+    * parser. With `header=false` the first line still defines the field
     * count. Returns the first non-blank line (a line with a character
     * other than a space), the header that [[read]] builds its schema
     * from; None for an empty file.
@@ -167,10 +149,9 @@ object CsvSource {
   private[sources] def validateStructure(lines: RDD[String], o: CsvOptions,
                                          allowUnderfilled: Boolean,
                                          removeSurplusEmpty: Boolean): Option[String] = {
-    val sep = o.separator.headOption.getOrElse(';')
-    val quote = o.quote.headOption.getOrElse('"')
-    val esc = o.escape.headOption.getOrElse(quote)
+    val parsed = parsedOptions(o)
     val parts = lines.mapPartitions { it =>
+      val parser = new CsvParser(parsed.asParserSettings)
       var count = 0L
       var first, firstNonBlank = Option.empty[String]
       val signatures = mutable.HashMap.empty[(Int, Int), Long]
@@ -178,8 +159,10 @@ object CsvSource {
         if (count == 0L) first = Some(line)
         if (firstNonBlank.isEmpty && line.exists(_ != ' ')) firstNonBlank = Some(line)
         if (line.nonEmpty) {
-          val f = splitLine(line, sep, quote, esc)
-          signatures.getOrElseUpdate((f.length, f.lastIndexWhere(_.nonEmpty)), count)
+          // univocity gives null for an empty field when so configured
+          val f = fields(parser, line)
+          signatures.getOrElseUpdate(
+            (f.length, f.lastIndexWhere(v => v != null && v.nonEmpty)), count)
         }
         count += 1
       }
@@ -187,7 +170,7 @@ object CsvSource {
     }.collect()
     // line 0 defines n, header or not; its own signature never violates
     parts.iterator.flatMap(_.first).nextOption().foreach { line0 =>
-      val n = splitLine(line0, sep, quote, esc).length
+      val n = fields(new CsvParser(parsed.asParserSettings), line0).length
       def violates(got: Int, lastNonEmpty: Int): Boolean =
         if (got < n) !allowUnderfilled
         else got > n && !(removeSurplusEmpty && lastNonEmpty < n)

@@ -1,13 +1,16 @@
 package graft.sources
 
-/** Crypto primitives for the KDBX 4 container, implemented from the
-  * public RFCs (no external dependencies):
+import javax.crypto.Cipher
+import javax.crypto.spec.{ChaCha20ParameterSpec, SecretKeySpec}
+
+/** Crypto primitives for the KDBX 4 container. The JDK has no BLAKE2b
+  * or Argon2, so these are implemented from the public RFCs:
   *
   *  - BLAKE2b (RFC 7693) — the hash inside Argon2.
   *  - Argon2d / Argon2i / Argon2id (RFC 9106) — the kdbx4 KDF.
-  *  - ChaCha20 (RFC 8439) — kdbx4 payload cipher and inner stream.
   *
-  * HMAC-SHA256 / SHA-256 / SHA-512 come from the JDK.
+  * ChaCha20 (RFC 8439, the kdbx4 payload cipher and inner stream),
+  * HMAC-SHA256, SHA-256 and SHA-512 come from the JDK.
   */
 object Kdbx4Crypto {
 
@@ -325,51 +328,14 @@ object Kdbx4Crypto {
   }
 
   // ------------------------------------------------------------ ChaCha20
-  /** ChaCha20 stream cipher (RFC 8439): 32-byte key, 12-byte nonce. */
-  final class ChaCha20(key: Array[Byte], nonce: Array[Byte], counter: Int = 0)
-      extends KdbxSource.InnerCipher {
-    require(key.length == 32 && nonce.length == 12)
-    private def u32le(b: Array[Byte], o: Int): Int =
-      (b(o) & 0xff) | ((b(o + 1) & 0xff) << 8) | ((b(o + 2) & 0xff) << 16) | ((b(o + 3) & 0xff) << 24)
-    private val state = new Array[Int](16)
-    state(0) = 0x61707865; state(1) = 0x3320646e
-    state(2) = 0x79622d32; state(3) = 0x6b206574
-    (0 until 8).foreach(i => state(4 + i) = u32le(key, i * 4))
-    state(12) = counter
-    (0 until 3).foreach(i => state(13 + i) = u32le(nonce, i * 4))
-    private val block = new Array[Byte](64)
-    private var blockPos = 64
-    private def rotl(v: Int, c: Int): Int = (v << c) | (v >>> (32 - c))
-    private def nextBlock(): Unit = {
-      val x = state.clone()
-      var i = 0
-      while (i < 10) {
-        def qr(a: Int, b: Int, c: Int, d: Int): Unit = {
-          x(a) += x(b); x(d) = rotl(x(d) ^ x(a), 16)
-          x(c) += x(d); x(b) = rotl(x(b) ^ x(c), 12)
-          x(a) += x(b); x(d) = rotl(x(d) ^ x(a), 8)
-          x(c) += x(d); x(b) = rotl(x(b) ^ x(c), 7)
-        }
-        qr(0, 4, 8, 12); qr(1, 5, 9, 13); qr(2, 6, 10, 14); qr(3, 7, 11, 15)
-        qr(0, 5, 10, 15); qr(1, 6, 11, 12); qr(2, 7, 8, 13); qr(3, 4, 9, 14)
-        i += 1
-      }
-      var j = 0
-      while (j < 16) {
-        val v = x(j) + state(j)
-        block(j * 4) = (v & 0xff).toByte
-        block(j * 4 + 1) = ((v >>> 8) & 0xff).toByte
-        block(j * 4 + 2) = ((v >>> 16) & 0xff).toByte
-        block(j * 4 + 3) = ((v >>> 24) & 0xff).toByte
-        j += 1
-      }
-      state(12) += 1
-      blockPos = 0
-    }
-    def crypt(data: Array[Byte]): Array[Byte] = data.map { b =>
-      if (blockPos >= 64) nextBlock()
-      val k = block(blockPos); blockPos += 1
-      (b ^ k).toByte
-    }
+  /** The JDK's ChaCha20 (RFC 8439): 32-byte key, 12-byte nonce, block
+    * counter starting at `counter`. A stream cipher, so the same
+    * instance decrypts and, for the fixture writers, encrypts.
+    */
+  def chaCha20(key: Array[Byte], nonce: Array[Byte], counter: Int = 0): Cipher = {
+    val c = Cipher.getInstance("ChaCha20")
+    c.init(Cipher.DECRYPT_MODE, new SecretKeySpec(key, "ChaCha20"),
+      new ChaCha20ParameterSpec(nonce, counter))
+    c
   }
 }

@@ -193,18 +193,12 @@ private[sources] object Kdbx4Reader {
         aes.init(Cipher.DECRYPT_MODE, new SecretKeySpec(cipherKey, "AES"),
           new IvParameterSpec(h.iv))
         aes.doFinal(encrypted)
-      case ChaChaCipher =>
-        new Kdbx4Crypto.ChaCha20(cipherKey, h.iv).crypt(encrypted)
+      case ChaChaCipher => Kdbx4Crypto.chaCha20(cipherKey, h.iv).doFinal(encrypted)
       case other => throw new IllegalArgumentException(s"unsupported kdbx4 cipher: $other")
     }
-    val decompressed = if (h.gzip) {
-      val g = new GZIPInputStream(new ByteArrayInputStream(plain))
-      val out = new ByteArrayOutputStream()
-      val b = new Array[Byte](64 * 1024)
-      var n = g.read(b)
-      while (n >= 0) { out.write(b, 0, n); n = g.read(b) }
-      out.toByteArray
-    } else plain
+    val decompressed =
+      if (h.gzip) new GZIPInputStream(new ByteArrayInputStream(plain)).readAllBytes()
+      else plain
     // inner header: [type u8][len u32][data]*, type 0 ends; XML follows
     val ibuf = ByteBuffer.wrap(decompressed).order(ByteOrder.LITTLE_ENDIAN)
     var innerId = 0
@@ -228,7 +222,7 @@ private[sources] object Kdbx4Reader {
       case 3 if innerKey != null =>
         // ChaCha20 inner stream: SHA512(key) → key = [0,32), nonce = [32,44)
         val kh = sha512(innerKey)
-        Some(new Kdbx4Crypto.ChaCha20(kh.take(32), kh.slice(32, 44)))
+        Some(KdbxSource.innerCipher(Kdbx4Crypto.chaCha20(kh.take(32), kh.slice(32, 44))))
       case 2 if innerKey != null =>
         Some(new KdbxSource.Salsa20(sha256(innerKey), KdbxSource.InnerStreamNonce))
       case _ => None

@@ -23,8 +23,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *  - KDBX 4: Argon2d/Argon2id KDF (or AES-KDF) from a
   *    VariantDictionary, header SHA-256 + HMAC-SHA-256 verification,
   *    HMAC block stream, AES-256-CBC or ChaCha20 payload, binary inner
-  *    header, ChaCha20 (or Salsa20) inner stream. Argon2/ChaCha20/
-  *    BLAKE2b are from-RFC implementations in [[Kdbx4Crypto]].
+  *    header, ChaCha20 (or Salsa20) inner stream. ChaCha20 is the
+  *    JDK's; Argon2/BLAKE2b are from-RFC implementations in
+  *    [[Kdbx4Crypto]].
   *
   * `Protected="True"` values decrypt with ONE continuous keystream over
   * the values in document order.
@@ -38,6 +39,13 @@ object KdbxSource {
     * ChaCha20 in 4).
     */
   trait InnerCipher { def crypt(data: Array[Byte]): Array[Byte] }
+
+  /** A JDK stream cipher as an [[InnerCipher]]: one keystream runs on
+    * through every value. `update` returns null for empty input, and an
+    * empty protected value decodes to "".
+    */
+  private[sources] def innerCipher(c: Cipher): InnerCipher =
+    data => Option(c.update(data)).getOrElse(Array.emptyByteArray)
 
   /** Salsa20 keystream (D. Bernstein's public algorithm) — KeePass
     * protects inner `Protected="True"` values with Salsa20 keyed by
@@ -196,14 +204,9 @@ object KdbxSource {
       java.util.Arrays.equals(plain.take(h.streamStart.length), h.streamStart),
       "wrong kdbx password (StreamStartBytes mismatch)")
     val blocks = readHashedBlocks(plain.drop(h.streamStart.length))
-    val xml = if (h.gzip) {
-      val g = new GZIPInputStream(new ByteArrayInputStream(blocks))
-      val out = new ByteArrayOutputStream()
-      val b = new Array[Byte](64 * 1024)
-      var n = g.read(b)
-      while (n >= 0) { out.write(b, 0, n); n = g.read(b) }
-      out.toByteArray
-    } else blocks
+    val xml =
+      if (h.gzip) new GZIPInputStream(new ByteArrayInputStream(blocks)).readAllBytes()
+      else blocks
     val salsa =
       if (h.innerStreamId == 2) h.protectedStreamKey.map(k =>
         new Salsa20(sha256(k), InnerStreamNonce))
@@ -339,8 +342,8 @@ object KdbxWriter {
 
     // inner stream cipher (ChaCha20, id 3)
     val kh = sha512(innerKey)
-    val innerCipher = new Kdbx4Crypto.ChaCha20(kh.take(32), kh.slice(32, 44))
-    val xml = entriesXml(entries, protectKeys, Some(innerCipher))
+    val inner = KdbxSource.innerCipher(Kdbx4Crypto.chaCha20(kh.take(32), kh.slice(32, 44)))
+    val xml = entriesXml(entries, protectKeys, Some(inner))
 
     // inner header: streamID 3 + key + end, then XML
     val innerHdr = new ByteArrayOutputStream()
@@ -400,7 +403,7 @@ object KdbxWriter {
       parallelism, memoryKib, iterations)
     val hmacKey64 = sha512(masterSeed, transformed, Array(1.toByte))
     val cipherKey = sha256(masterSeed, transformed)
-    val encrypted = new Kdbx4Crypto.ChaCha20(cipherKey, iv).crypt(gzipped)
+    val encrypted = Kdbx4Crypto.chaCha20(cipherKey, iv).doFinal(gzipped)
 
     val out = new ByteArrayOutputStream()
     out.write(header)

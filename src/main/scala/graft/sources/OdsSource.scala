@@ -21,14 +21,8 @@ object OdsSource {
   private def contentXml(bytes: Array[Byte]): Array[Byte] = {
     val z = new ZipInputStream(new ByteArrayInputStream(bytes))
     var e = z.getNextEntry
-    val buf = new Array[Byte](64 * 1024)
     while (e != null) {
-      if (e.getName == "content.xml") {
-        val bos = new java.io.ByteArrayOutputStream()
-        var n = z.read(buf)
-        while (n >= 0) { bos.write(buf, 0, n); n = z.read(buf) }
-        return bos.toByteArray
-      }
+      if (e.getName == "content.xml") return z.readAllBytes()
       e = z.getNextEntry
     }
     throw new IllegalArgumentException("no content.xml — not an ODS file")

@@ -95,17 +95,6 @@ object WarcSource {
     Some(sb.toString)
   }
 
-  private def readFully(in: InputStream, n: Int): Array[Byte] = {
-    val buf = new Array[Byte](n)
-    var off = 0
-    var r = 0
-    while (off < n && r >= 0) {
-      r = in.read(buf, off, n - off)
-      if (r > 0) off += r
-    }
-    if (off == n) buf else java.util.Arrays.copyOf(buf, off) // truncated tail
-  }
-
   private def nextRecord(in: InputStream): Option[WarcRecord] = {
     // skip inter-record padding / garbage up to the next WARC/ magic
     var line = readLine(in)
@@ -126,7 +115,7 @@ object WarcSource {
     if (h.isEmpty) return None // EOF inside headers
     val len = headers.get("content-length").flatMap(v => v.toIntOption)
     if (len.isEmpty) return None // unframeable: fail-soft
-    val payload = readFully(in, len.get)
+    val payload = in.readNBytes(len.get) // shorter at a truncated tail
     Some(buildRecord(headers.toMap, payload))
   }
 

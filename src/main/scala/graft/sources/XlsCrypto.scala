@@ -1,11 +1,13 @@
 package graft.sources
 
 import java.security.MessageDigest
+import javax.crypto.Cipher
+import javax.crypto.spec.SecretKeySpec
 
 /** BIFF8 workbook encryption (MS-XLS 2.3.6, public spec; the reference
   * reads these files through POI — ExcelDataProvider.java works on any
-  * workbook POI opens). From-scratch implementations of all three
-  * FILEPASS variants:
+  * workbook POI opens). All three FILEPASS variants; RC4 itself is the
+  * JDK's `ARCFOUR`:
   *
   * STANDARD RC4 (`wEncryptionType=1`, version 1.1):
   *  - key schedule: `base = MD5(MD5(pw_utf16le)[0..5] ++ salt, ×16)[0..5]`,
@@ -59,27 +61,11 @@ object XlsCrypto {
     Array[Byte]((v & 0xff).toByte, ((v >> 8) & 0xff).toByte,
       ((v >> 16) & 0xff).toByte, ((v >> 24) & 0xff).toByte)
 
-  /** Minimal RC4. */
-  final class Rc4(key: Array[Byte]) {
-    private val s = Array.tabulate(256)(_.toByte)
-    private var i = 0
-    private var j = 0
-    locally {
-      var x = 0; var y = 0
-      while (x < 256) {
-        y = (y + s(x) + key(x % key.length)) & 0xff
-        val t = s(x); s(x) = s(y); s(y) = t
-        x += 1
-      }
-    }
-    def next(): Int = {
-      i = (i + 1) & 0xff
-      j = (j + s(i)) & 0xff
-      val t = s(i); s(i) = s(j); s(j) = t
-      s((s(i) + s(j)) & 0xff) & 0xff
-    }
-    def crypt(data: Array[Byte]): Array[Byte] =
-      data.map(b => (b ^ next()).toByte)
+  /** `data` XOR the JDK's RC4 (`ARCFOUR`) keystream under `key`. */
+  private def rc4(key: Array[Byte], data: Array[Byte]): Array[Byte] = {
+    val c = Cipher.getInstance("ARCFOUR")
+    c.init(Cipher.DECRYPT_MODE, new SecretKeySpec(key, "ARCFOUR"))
+    c.doFinal(data)
   }
 
   /** 5-byte key material from password + salt (MS-XLS 2.3.6.2). */
@@ -105,10 +91,8 @@ object XlsCrypto {
     */
   def verifyPassword(base5: Array[Byte], encVerifier: Array[Byte],
                      encVerifierHash: Array[Byte]): Boolean = {
-    val rc4 = new Rc4(blockKey(base5, 0))
-    val verifier = rc4.crypt(encVerifier)
-    val hash = rc4.crypt(encVerifierHash)
-    md5(verifier).sameElements(hash)
+    val plain = rc4(blockKey(base5, 0), encVerifier ++ encVerifierHash)
+    md5(plain.take(encVerifier.length)).sameElements(plain.drop(encVerifier.length))
   }
 
   /** Parsed FILEPASS — one case per encryption variant. */
@@ -195,10 +179,8 @@ object XlsCrypto {
   def verifyPasswordCryptoApi(base: Array[Byte], keyBits: Int,
                               encVerifier: Array[Byte],
                               encVerifierHash: Array[Byte]): Boolean = {
-    val rc4 = new Rc4(cryptoApiBlockKey(base, 0, keyBits))
-    val verifier = rc4.crypt(encVerifier)
-    val hash = rc4.crypt(encVerifierHash)
-    sha1(verifier).sameElements(hash)
+    val plain = rc4(cryptoApiBlockKey(base, 0, keyBits), encVerifier ++ encVerifierHash)
+    sha1(plain.take(encVerifier.length)).sameElements(plain.drop(encVerifier.length))
   }
 
   /** XOR the keystream over every encryptable byte range of `wb`
@@ -212,24 +194,22 @@ object XlsCrypto {
   private def applyKeystream(wb: Array[Byte],
                              keyForBlock: Int => Array[Byte]): Array[Byte] = {
     val out = wb.clone()
-    var rc4: Rc4 = null
+    var keystream: Array[Byte] = null
     var block = -1
     def k(offset: Int): Int = {
       val b = offset / 1024
-      if (b != block) { block = b; rc4 = new Rc4(keyForBlock(b)) }
-      rc4.next()
+      if (b != block) { block = b; keystream = rc4(keyForBlock(b), new Array[Byte](1024)) }
+      keystream(offset % 1024)
     }
     var o = 0
     while (o + 4 <= wb.length) {
       val id = u16(wb, o); val len = u16(wb, o + 2)
-      k(o); k(o + 1); k(o + 2); k(o + 3) // header: discard keystream
-      var p = o + 4
+      var p = o + 4 // the header's keystream bytes are discarded
       val end = o + 4 + len
       val plainPrefix = if (id == 0x0085) 4 else 0 // BoundSheet8 lbPlyPos
       while (p < end && p < wb.length) {
-        val ks = k(p)
         if (!PlaintextSids.contains(id) && p - (o + 4) >= plainPrefix)
-          out(p) = (wb(p) ^ ks).toByte
+          out(p) = (wb(p) ^ k(p)).toByte
         p += 1
       }
       o = end
@@ -320,10 +300,8 @@ object XlsCrypto {
     val verifier = md5(("verifier:" + password).getBytes("UTF-8"))
     val verifierHash = md5(verifier)
     val base5 = keyBase(password, salt)
-    val rc4 = new Rc4(blockKey(base5, 0))
-    val encVerifier = rc4.crypt(verifier)
-    val encVerifierHash = rc4.crypt(verifierHash)
-    val body = Array[Byte](1, 0, 1, 0, 1, 0) ++ salt ++ encVerifier ++ encVerifierHash
+    val enc = rc4(blockKey(base5, 0), verifier ++ verifierHash)
+    val body = Array[Byte](1, 0, 1, 0, 1, 0) ++ salt ++ enc
     (body, salt)
   }
 
@@ -336,9 +314,7 @@ object XlsCrypto {
     val verifier = md5(("capi-verifier:" + password).getBytes("UTF-8"))
     val verifierHash = sha1(verifier)
     val base = cryptoApiKeyBase(password, salt)
-    val rc4 = new Rc4(cryptoApiBlockKey(base, 0, keyBits))
-    val encVerifier = rc4.crypt(verifier)
-    val encVerifierHash = rc4.crypt(verifierHash)
+    val enc = rc4(cryptoApiBlockKey(base, 0, keyBits), verifier ++ verifierHash)
     val csp = "Microsoft Enhanced Cryptographic Provider v1.0\u0000"
       .getBytes("UTF-16LE")
     // header: Flags(fCryptoAPI) SizeExtra AlgID AlgIDHash KeySize
@@ -352,8 +328,8 @@ object XlsCrypto {
       le32Bytes(header.length) ++
       header ++
       le32Bytes(16) ++ salt ++
-      encVerifier ++
-      le32Bytes(20) ++ encVerifierHash
+      enc.take(16) ++
+      le32Bytes(20) ++ enc.drop(16)
     (body, salt)
   }
 

@@ -27,14 +27,8 @@ object XlsxSource {
     val z = new ZipInputStream(new ByteArrayInputStream(bytes))
     val out = scala.collection.mutable.Map.empty[String, Array[Byte]]
     var e = z.getNextEntry
-    val buf = new Array[Byte](64 * 1024)
     while (e != null) {
-      if (!e.isDirectory) {
-        val bos = new java.io.ByteArrayOutputStream()
-        var n = z.read(buf)
-        while (n >= 0) { bos.write(buf, 0, n); n = z.read(buf) }
-        out(e.getName) = bos.toByteArray
-      }
+      if (!e.isDirectory) out(e.getName) = z.readAllBytes()
       e = z.getNextEntry
     }
     out.toMap

@@ -19,29 +19,6 @@ import graft.operators.Merge.{DuplicateMode, ImportMode, Key}
   */
 object StreamingImport {
 
-  /** Streaming state-store provider switch — the 100 TB posture knob.
-    * The default HDFSBackedStateStoreProvider keeps every key's state
-    * on the executor HEAP (snapshotting to the checkpoint dir): fine
-    * for bounded test corpora, an OOM wall once keyed-dedup or
-    * stream-stream-join state outgrows executor memory.
-    * `GRAFT_STREAM_STATE=rocksdb` (env) or `graft.stream.state=rocksdb`
-    * (sys-prop, spec hook) flips the SESSION to Spark's bundled RocksDB
-    * provider — state lives off-heap in a per-partition RocksDB that
-    * spills to local disk, with changelog checkpointing — before a
-    * drain starts (the conf is read at query start). Returns the
-    * provider class now in effect so callers and specs can assert it.
-    * Default stays HDFS-backed: small jobs keep the zero-setup path,
-    * and the oracle drains prove result-identity under BOTH providers.
-    */
-  def configureStateStore(spark: SparkSession): String = {
-    val want = sys.props.get("graft.stream.state")
-      .orElse(sys.env.get("GRAFT_STREAM_STATE"))
-    if (want.exists(_.equalsIgnoreCase("rocksdb")))
-      spark.conf.set(StateStoreKey, RocksDbProvider)
-    spark.conf.get(StateStoreKey,
-      "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider")
-  }
-
   private val StateStoreKey = "spark.sql.streaming.stateStore.providerClass"
   private val ShufflePartitionsKey = "spark.sql.shuffle.partitions"
   private val RocksDbProvider =
@@ -119,12 +96,13 @@ object StreamingImport {
     * the unstarted writer (output mode set, no sink); the drain starts
     * it with a checkpoint in that directory, runs it to exhaustion
     * (`processAllAvailable`) and stops it. Around the replay the session
-    * runs with [[StatePartitions]] shuffle partitions and the state-store
-    * provider of [[configureStateStore]] — RocksDB when `rocksDb` (the
-    * `transformWithState` API requires it) — and both confs, the sink's
-    * view and the directory are gone once the drain returns. The
-    * returned frame holds the sink's rows by reference, so it stays
-    * readable afterwards.
+    * runs with [[StatePartitions]] shuffle partitions and its own
+    * state-store provider (`spark.sql.streaming.stateStore.providerClass`:
+    * the default keeps state on the executor heap, RocksDB spills it to
+    * local disk), or RocksDB when `rocksDb` (the `transformWithState` API
+    * requires it). Both confs are restored, and the sink's view and the
+    * directory are gone, once the drain returns. The returned frame
+    * holds the sink's rows by reference, so it stays readable afterwards.
     */
   def drain(s: SparkSession, tag: String, rocksDb: Boolean = false)(
       build: Path => DataStreamWriter[Row]): DataFrame =
@@ -154,7 +132,6 @@ object StreamingImport {
     try {
       s.conf.set(ShufflePartitionsKey, StatePartitions.toString)
       if (rocksDb) s.conf.set(StateStoreKey, RocksDbProvider)
-      else configureStateStore(s)
       body(tmp)
     } finally {
       FileUtils.deleteQuietly(tmp.toFile)

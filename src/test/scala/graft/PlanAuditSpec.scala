@@ -8,9 +8,9 @@ import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, Cartes
   * PHYSICAL plan is built at sf0.001 and audited for the one shape
   * that silently kills a 100 TB run — a nested-loop/cartesian join
   * whose BOTH sides are unbounded (raw scans): O(|L|·|R|)
-  * comparisons. The previous guard was a per-round manual ExplainQ
-  * read of the top-5 queries; this pins all of them, every `sbt
-  * test`.
+  * comparisons — and for a runaway size estimate ([[MaxSizeDigits]]).
+  * The previous guard was a per-round manual ExplainQ read of the
+  * top-5 queries; this pins all of them, every `sbt test`.
   *
   * Benign nested-loop shapes are allowed STRUCTURALLY, not by
   * name-allowlist: a BroadcastNestedLoopJoin / CartesianProduct node
@@ -100,19 +100,32 @@ class PlanAuditSpec extends SparkSpec {
     // shape, O(|probes|·n) by design, never corpus × corpus
     "q315_knn_adaptive_recall")
 
+  /** Bound on the digits of each audited plan's optimized
+    * `sizeInBytes`. Catalyst estimates a join as the product of its
+    * children, so a frame lazily joined with itself and re-checkpointed
+    * compounds the estimate until the planner stalls in `BigInteger`
+    * arithmetic (the q262 hang). The bound is the largest estimate at
+    * sf0.001 when it was set: 80 digits, q109_mad_outliers.
+    */
+  private val MaxSizeDigits = 80
+
   test("no query plans a nested-loop/cartesian join of two unbounded sides") {
     // plain (non-adaptive) plans so the join operators are directly
     // visible in the tree; restored afterwards
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     val offenders = scala.collection.mutable.ArrayBuffer[String]()
+    val oversized = scala.collection.mutable.ArrayBuffer[String]()
     try {
       SparkEntry.queries.toSeq.sortBy(_._1)
         .filterNot(kv => streamingDrains(kv._1))
         .filterNot(kv => boundedByContract(kv._1))
         .foreach { case (name, fn) =>
           try {
-            val plan = fn(spark, "/root/testdata/sf0.001")
-              .queryExecution.executedPlan
+            val qe = fn(spark, sf()).queryExecution
+            val plan = qe.executedPlan
+            val digits = qe.optimizedPlan.stats.sizeInBytes.toString.length
+            if (digits > MaxSizeDigits)
+              oversized += s"$name: sizeInBytes estimate has $digits digits"
             plan.foreach {
               case j: BroadcastNestedLoopJoinExec
                   if !bounded(j.left) && !bounded(j.right) =>
@@ -130,5 +143,7 @@ class PlanAuditSpec extends SparkSpec {
     } finally spark.conf.unset("spark.sql.adaptive.enabled")
     assert(offenders.isEmpty,
       s"quadratic join shapes found:\n${offenders.mkString("\n")}")
+    assert(oversized.isEmpty,
+      s"size estimates past $MaxSizeDigits digits:\n${oversized.mkString("\n")}")
   }
 }

@@ -458,6 +458,50 @@ class CliSpec extends SparkSpec {
     assert(errs.map(r => (r.getAs[String]("id"), r.getAs[String]("v"))).toSeq == Seq(("x9", "bad")))
   }
 
+  test("-logerrors on a wildcard import writes each file's rows next to that file") {
+    val url = freshDb()
+    JdbcSink.withConnection(url) { c =>
+      val st = c.createStatement()
+      st.executeUpdate("CREATE TABLE \"LEG\" (\"ID\" INTEGER, \"V\" VARCHAR(10))")
+      st.close()
+    }
+    val dir = SyntheticFixtures.dir(s"clilogerrglob_${System.nanoTime()}")
+    val a = SyntheticFixtures.writeText(new File(dir, "le_a.csv"), "id;v\n1;ok\nx1;bad-a\n")
+    val b = SyntheticFixtures.writeText(new File(dir, "le_b.csv"), "id;v\n2;ok\nx2;bad-b\n")
+    assert(Main.run(spark, Main.parseArgs(Array(url, "leg",
+      new File(dir, "le_*.csv").getPath, "-logerrors"))) == 0)
+    JdbcSink.withConnection(url)(c => assert(JdbcSink.countRows(c, "leg") == 2))
+    def errs(f: File) = spark.read.option("header", "true").option("sep", ";")
+      .csv(f.getPath + ".errors").collect()
+      .map(r => (r.getAs[String]("id"), r.getAs[String]("v"))).toSeq
+    assert(errs(a) == Seq(("x1", "bad-a")))
+    assert(errs(b) == Seq(("x2", "bad-b")))
+    assert(!new File(dir, "le_*.csv.errors").exists)
+  }
+
+  test("-sp follows the resolved format, not the file extension") {
+    val dir = SyntheticFixtures.dir("clispformat")
+    val schema = SyntheticFixtures.writeText(new File(dir, "s.json"),
+      """{"type": "array", "items": {"type": "object", "required": ["id"],
+        |  "properties": {"id": {"type": "integer", "minimum": 0}}}}""".stripMargin)
+    // -x JSON on a .txt file: validated, then imported
+    val url = freshDb()
+    val txt = SyntheticFixtures.writeText(new File(dir, "data.txt"), """[{"id": 1}, {"id": 2}]""")
+    assert(Main.run(spark, Main.parseArgs(Array(url, "spfmt", txt.getPath,
+      "-x", "JSON", "-sp", schema.getPath, "-create", "-i", "INSERT"))) == 0)
+    JdbcSink.withConnection(url)(c => assert(JdbcSink.countRows(c, "spfmt") == 2))
+    val badTxt = SyntheticFixtures.writeText(new File(dir, "bad.txt"), """[{"id": -1}]""")
+    val bad = intercept[IllegalArgumentException](Main.readSource(spark,
+      Main.parseArgs(Array(url, "spfmt", badTxt.getPath, "-x", "JSON", "-sp", schema.getPath)),
+      badTxt.getPath))
+    assert(bad.getMessage.contains("does not comply to JSON schema"))
+    // -x CSV on a .json file: -sp is refused, not ignored
+    val csv = SyntheticFixtures.writeText(new File(dir, "data.json"), "id;v\n1;a\n")
+    val e = intercept[IllegalArgumentException](Main.run(spark, Main.parseArgs(Array(
+      freshDb(), "spcsv", csv.getPath, "-x", "CSV", "-sp", schema.getPath, "-create", "-i", "INSERT"))))
+    assert(e.getMessage.contains("SchemaFilePath is not supported"))
+  }
+
   test("-mf reads the mapping from a file; -dateformat governs unpatterned DATE parses") {
     val url = freshDb()
     JdbcSink.withConnection(url) { c =>
@@ -545,6 +589,27 @@ class CliSpec extends SparkSpec {
     val quoted = SyntheticFixtures.writeText(new File(dir, "quoted.csv"),
       "id;v\n9;\"a;b\"\n")
     assert(Main.run(spark, Main.parseArgs(Array(url, "strict_t", quoted.getPath))) == 0)
+  }
+
+  test("-s '||' and -s '\\t': a value holding | or \\ imports every row") {
+    // the structure pass splits lines with the reader's own parser, so a
+    // multi-character separator and the `\t` escape (the two characters,
+    // as a shell passes them) count fields as the import does
+    val dir = SyntheticFixtures.dir("clisep")
+    Seq(("||", "pipes.csv", "id||v\n1||a|b\n2||c\n", Seq("1|a|b", "2|c")),
+        ("\\t", "tabs.csv", "id\tv\n1\ta\\b\n2\tc\n", Seq("1|a\\b", "2|c")))
+      .foreach { case (sep, name, content, want) =>
+        val url = freshDb()
+        val f = SyntheticFixtures.writeText(new File(dir, name), content)
+        assert(Main.run(spark, Main.parseArgs(Array(url, "seps", f.getPath,
+          "-s", sep, "-create", "-i", "INSERT"))) == 0, sep)
+        assert(tableRows(url, "seps")._2 == want, sep)
+      }
+    // a real surplus field still aborts
+    val joined = SyntheticFixtures.writeText(new File(dir, "joined.csv"), "id||v\n1||a||b\n")
+    intercept[graft.sources.CsvSource.CsvStructureException] {
+      Main.run(spark, Main.parseArgs(Array(freshDb(), "seps", joined.getPath, "-s", "||", "-create")))
+    }
   }
 
   test("data-type errors drop the row and the run still exits 0") {

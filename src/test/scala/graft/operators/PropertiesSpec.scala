@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop}
 
 import graft.SparkSpec
+import graft.sources.CsvSource
 
 /** Property tests (SURVEY §5: "Add ScalaCheck property tests for the
   * type-inference lattice and dedup semantics"): Spark operators vs a
@@ -625,10 +626,12 @@ class PropertiesSpec extends SparkSpec {
     }, 8)
   }
 
-  test("CSV splitLine round-trips randomly quoted fields in any dialect") {
+  test("CSV structure pass and reader agree on quoted rows in any dialect") {
     // fields may contain the separator, the quote, spaces — the writer
-    // quotes every field and doubles/escapes embedded quotes; splitLine
-    // must recover the original fields exactly
+    // quotes every field and doubles/escapes embedded quotes. The reader
+    // must recover each row's fields, and on a two-line file the
+    // structure pass must accept the second line exactly when the
+    // reader gives it the first line's field count
     val fieldGen = Gen.listOfN(6,
       Gen.oneOf(Gen.const(';'), Gen.const(','), Gen.const('"'), Gen.const('\''),
         Gen.const(' '), Gen.alphaNumChar)).map(_.mkString)
@@ -636,17 +639,43 @@ class PropertiesSpec extends SparkSpec {
       n <- Gen.chooseNum(1, 6)
       fs <- Gen.listOfN(n, fieldGen)
     } yield fs
+    val pairGen = for {
+      first <- rowGen
+      second <- Gen.oneOf(Gen.listOfN(first.size, fieldGen), rowGen)
+    } yield (first, second)
     val dialects = Seq((';', '"', '"'), (',', '"', '\\'), (';', '\'', '\''))
-    check(Prop.forAllNoShrink(rowGen, Gen.oneOf(dialects)) { (fields, d) =>
+    val dir = java.nio.file.Files.createTempDirectory("csv-structure-prop").toFile
+    var files = 0
+    try check(Prop.forAllNoShrink(pairGen, Gen.oneOf(dialects)) { case ((first, second), d) =>
       val (sep, quote, esc) = d
-      val line = fields.map { f =>
+      def line(fields: List[String]) = fields.map { f =>
         val body =
           if (esc == quote) f.replace(quote.toString, s"$quote$quote")
           else f.replace(quote.toString, s"$esc$quote")
         s"$quote$body$quote"
       }.mkString(sep.toString)
-      graft.sources.CsvSource.splitLine(line, sep, quote, esc).toList == fields
+      val o = CsvSource.CsvOptions(separator = sep.toString,
+        quote = quote.toString, escape = esc.toString, header = false)
+      def file(lines: List[String]*) = {
+        files += 1
+        val f = new java.io.File(dir, s"rows$files.csv")
+        java.nio.file.Files.write(f.toPath,
+          lines.map(line(_) + "\n").mkString.getBytes("UTF-8"))
+        f.getPath
+      }
+      // the reader's fields of a one-line file (an empty field reads null)
+      def read(fields: List[String]) = CsvSource.read(spark, file(fields), o)
+        .collect().head.toSeq.map(v => Option(v).fold("")(_.toString)).toList
+      val accepted =
+        try {
+          CsvSource.validateStructure(spark, file(first, second), o,
+            allowUnderfilled = false, removeSurplusEmpty = false)
+          true
+        } catch { case _: CsvSource.CsvStructureException => false }
+      val (got1, got2) = (read(first), read(second))
+      got1 == first && got2 == second && accepted == (got1.size == got2.size)
     }, 30)
+    finally org.apache.commons.io.FileUtils.deleteQuietly(dir)
   }
 
   test("distributed BPE equals a sequential in-memory reference") {
